@@ -89,9 +89,9 @@ object Bench {
     val bestWrite = median(writeRuns)
     // write-path DECOMPOSITION: the committed (manifest-table) write vs the
     // raw parquet write above. Phases from ManifestTable.lastCommitPhases:
-    // stage = distributed data write (the only phase that grows with the
-    // batch), stats = column-pruned lineage agg job, move+publish = O(1)
-    // driver metadata ops. Fresh root per run so every commit is a
+    // stage = distributed data write with the lineage observed in it (the
+    // only phase that grows with the batch), stats = the wait for the
+    // observed lineage row, move+publish = O(1) driver metadata ops. Fresh root per run so every commit is a
     // first-commit (history-independent by design; this keeps it honest).
     import graft.sources.ManifestTable
     var c = 0

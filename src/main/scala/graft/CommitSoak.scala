@@ -8,8 +8,8 @@ import java.nio.file.{Files, Paths}
   * O(this-commit) protocol claim and the EMFILE design point
   * (`util.scala`) are argued in scaladoc; this main MEASURES them at
   * commit-count scale. 10,000 real micro-batch commits (each the full
-  * protocol: distributed write → stats job → move → publish) into one
-  * table root, per-commit wall time recorded; flat latency across the
+  * protocol: distributed write with observed lineage → move → publish)
+  * into one table root, per-commit wall time recorded; flat latency across the
   * history = the claim, a positive slope = an O(history) leak (the
   * classic ones: manifest listing per commit, stream-id rescans, commit-
   * dir stat storms). Afterwards the read-side cost at 10^4 commit

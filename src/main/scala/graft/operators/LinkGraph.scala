@@ -143,6 +143,9 @@ object LinkGraph {
       dstCol: String = "dst",
       scale: Long = 10000000L): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
+    // the largest rescaled entry is >= scale (max raw >= tot / nNodes), so
+    // only scale < 1 floors every entry to 0: reject it instead
+    require(scale >= 1, s"scale must be >= 1, got $scale")
     val e = edges.select(F.col(srcCol).cast("long").as("src"), F.col(dstCol).cast("long").as("dst"))
       .cache()
     require(!e.isEmpty, "hitsInt needs at least one edge (mass sums must stay positive)")

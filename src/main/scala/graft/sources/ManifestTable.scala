@@ -1,9 +1,13 @@
 package graft.sources
 
 import graft.Extracted
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.collection.mutable
+import scala.concurrent.Await
+import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
 /** Iceberg-semantics-over-Parquet table (SURVEY.md §7.0): no Iceberg runtime
@@ -27,14 +31,15 @@ import scala.jdk.CollectionConverters._
   *     `extract only pages newer than the last snapshot`.
   *
   * Commit protocol (all O(this commit), never O(table)):
-  *   stage → stat → move → publish.
-  *   The batch is written to a private `_staging-<seq>` directory; lineage
-  *   stats are aggregated from the STAGED files only (no read of prior
-  *   commits); the staging directory is renamed to `data/commit_seq=<seq>`
-  *   (one directory rename, no data copy); finally the manifest is published
-  *   by atomic rename. A leftover unpublished `commit_seq=<seq>` directory
-  *   from a crashed writer is deleted before the rename — it was never
-  *   visible, so this is safe.
+  *   stage → move → publish.
+  *   The batch is written to a private `_staging-<seq>` directory, and the
+  *   same write job observes the lineage stats and content fingerprint
+  *   (no read of the staged files, none of prior commits); the staging
+  *   directory is renamed to `data/commit_seq=<seq>` (one directory rename,
+  *   no data copy); finally the manifest is published by atomic rename. A
+  *   leftover unpublished `commit_seq=<seq>` directory from a crashed
+  *   writer is deleted before the rename — it was never visible, so this
+  *   is safe.
   *
   * The seam is thin by design: a real Iceberg catalog drops in by replacing
   * this object's write/read with `.writeTo(table)` / `read.table`.
@@ -44,10 +49,10 @@ object ManifestTable {
   final case class PartitionStat(p_day: String, rows: Long, bytes: Long, failures: Long)
 
   /** Wall-clock decomposition of the LAST commit on this JVM: `stage` is
-    * the distributed parquet write (scales with executors), `stats` the
-    * lineage + content-fingerprint aggregation job over the staged files
-    * (reads the full just-staged batch — page-cache warm, measured ~15% of
-    * stage time on the bench box), `move`
+    * the distributed parquet write (scales with executors; it also folds
+    * the lineage and content fingerprint), `stats` the wait for that
+    * write's observed lineage row to reach the driver (no Spark job,
+    * sub-millisecond), `move`
     * the O(1) directory rename, `publish` the O(1) manifest write+rename.
     * Bench-facing observability — separates raw data-write cost from the
     * driver-serialized commit protocol so real-cluster projections are
@@ -74,12 +79,14 @@ object ManifestTable {
 
   /** Append a batch of extraction output as one committed snapshot.
     *
-    * Exactly ONE action runs the upstream pipeline (the staged write); the
-    * lineage stats + content fingerprint then aggregate only the staged
-    * files (one extra read of the just-written, page-cache-warm batch), so
-    * kernel work is never recomputed, commit cost is independent of table
-    * history, and counts stay exact even under task retries (unlike
-    * accumulator-derived counts).
+    * Exactly ONE action runs the upstream pipeline: the staged write, which
+    * also observes the lineage stats and content fingerprint, so kernel
+    * work is never recomputed, the staged files are never read back, and
+    * commit cost is independent of table history. Counts stay exact under
+    * task retries: observed metrics live in the write's result stage,
+    * where Spark applies one update per output partition and drops failed
+    * or commit-denied attempts, and only the committed attempt's rows land.
+    * [[verifyIntegrity]] re-derives them from the committed files.
     */
   def commitAppend(spark: SparkSession, root: String, batch: Dataset[Extracted]): Long =
     commitInternal(spark, root, batch, streamBatchId = None)
@@ -243,7 +250,6 @@ object ManifestTable {
       streamBatchId: Option[Long],
       compaction: Boolean = false
   ): Long = withCommitLock(root) {
-    import spark.implicits._
     val (seq, prevLive) = commitState(root)
     // live set AFTER this commit: append adds itself; compaction replaces
     // everything with itself. Resolved BEFORE the staged write so a
@@ -252,42 +258,45 @@ object ManifestTable {
     val staging = Paths.get(root, s"_staging-$seq")
     graft.Fs.deleteRecursively(staging) // leftover from a crashed writer: never visible
     val t0 = System.nanoTime()
+    // lineage rides the staged write (exact under retries, see
+    // [[commitAppend]]): folded per write task, merged on the driver
+    val lineage = Observation()
     batch
       .withColumn("p_day", date_format(col("warc_ts"), "yyyy-MM-dd"))
+      .observe(lineage,
+        DayLineage.column(col("p_day"), col("n_bytes_in"),
+          when(col("status") =!= "ok", 1L).otherwise(0L)).as("days"),
+        max(unix_timestamp(col("warc_ts"))).as("hw"),
+        expr(s"bit_xor($RowFpSql)").as("fp"))
       .write
       .mode(SaveMode.Overwrite)
       .partitionBy("p_day")
       .parquet(staging.toString)
     val t1 = System.nanoTime()
 
-    // per-partition lineage for THIS commit from the staged files only.
-    // An EMPTY batch (resume with nothing left, empty stream micro-batch)
-    // stages only _SUCCESS — schema inference would throw, so short-circuit
-    // to a 0-row no-op snapshot.
-    val agg =
-      if (!graft.Fs.hasParquetFiles(staging)) Array.empty[org.apache.spark.sql.Row]
-      else
-        spark.read
-          .option("basePath", staging.toString)
-          .parquet(staging.toString)
-          .groupBy($"p_day".cast("string").as("p_day"))
-          .agg(
-            count(lit(1)).as("rows"),
-            sum($"n_bytes_in").as("bytes"),
-            sum(when($"status" =!= "ok", 1L).otherwise(0L)).as("failures"),
-            max(unix_timestamp($"warc_ts")).as("hw"),
-            expr(s"bit_xor($RowFpSql)").as("fp")
-          )
-          .collect()
-    val stats = agg
+    // the observed row reaches the driver through the listener bus after the
+    // write returns; bounded wait, and a missing row publishes nothing
+    val observed =
+      try Await.result(lineage.future, LineageTimeout)
+      catch {
+        case e: java.util.concurrent.TimeoutException =>
+          throw new IllegalStateException(
+            s"commit $seq on $root: the staged write's lineage did not arrive " +
+              s"within $LineageTimeout; nothing published", e)
+      }
+    val days = observed.getAs[scala.collection.Seq[Row]]("days")
       .map(r => PartitionStat(r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .sortBy(_.p_day)
-      .toSeq
-    val hw = if (agg.isEmpty) 0L else agg.map(_.getLong(4)).max
-    // commit-level content fingerprint: xor of per-partition xors (the
-    // same order-independent reduce), recomputable later from the data
-    // alone — the bit-rot audit hook ([[verifyIntegrity]])
-    val contentFp = agg.foldLeft(0L)((acc, r) => acc ^ r.getLong(5))
+    // a null warc_ts has no p_day: such a batch has never been committable
+    require(days.forall(_.p_day != null),
+      s"commit $seq on $root: rows with null warc_ts have no p_day; nothing published")
+    val stats = days.sortBy(_.p_day).toSeq
+    // an empty batch observes no days and null hw/fp: a 0-row snapshot
+    def orZero(field: String): Long =
+      Option(observed.getAs[java.lang.Long](field)).fold(0L)(_.longValue)
+    val hw = orZero("hw")
+    // commit-level content fingerprint: the same order-independent xor
+    // [[verifyIntegrity]] recomputes from the data alone (bit-rot audit)
+    val contentFp = orZero("fp")
     val t2 = System.nanoTime()
 
     // move staged data into place: one directory rename, no copy
@@ -623,19 +632,52 @@ $parts
       .drop("p_day", "commit_seq")
   }
 
-  /** Canonical per-row fingerprint (SQL text so write-side agg and
-    * read-side audit can never drift): every content-bearing column, nulls
-    * sentineled with chr(1). Accepted collision: a null column and a
+  /** Canonical per-row fingerprint (SQL text so the write-side observe
+    * and the read-side audit can never drift): every content-bearing
+    * column, nulls sentineled with chr(1). Accepted collision: a null column and a
     * literal "" value hash identically — the one swap this scheme
     * cannot see. bit_xor over rows makes the commit fingerprint
     * order-independent (recompute ordering can't matter); XOR's blindness
     * to DUPLICATED rows (they self-cancel) is covered by the row-count
     * comparison the audit does alongside the fingerprint.
     */
-  private val RowFpSql: String =
+  private[graft] val RowFpSql: String =
     "xxhash64(url, unix_timestamp(warc_ts), coalesce(text, chr(1)), " +
       "format, coalesce(charset, chr(1)), status, coalesce(error, chr(1)), " +
       "n_blocks, n_bytes_in)"
+
+  /** Bound on the wait for a commit's observed lineage: the row is posted
+    * through the listener bus right after the write, so a miss means it
+    * was never produced, and the commit fails instead of hanging.
+    */
+  private val LineageTimeout: FiniteDuration = 2.minutes
+
+  private type Days = mutable.HashMap[String, Array[Long]]
+
+  /** Per-`p_day` (rows, bytes, failures) of one commit, folded inside the
+    * staged write: one map per write task, merged on the driver. A null
+    * p_day stays a key of its own so the commit can reject it.
+    */
+  private object DayLineage extends Aggregator[(String, Long, Long), Days, Seq[PartitionStat]] {
+    private def add(b: Days, day: String, rows: Long, bytes: Long, failures: Long): Days = {
+      val a = b.getOrElseUpdate(day, new Array[Long](3))
+      a(0) += rows; a(1) += bytes; a(2) += failures
+      b
+    }
+    def zero: Days = mutable.HashMap.empty
+    def reduce(b: Days, in: (String, Long, Long)): Days = add(b, in._1, 1L, in._2, in._3)
+    def merge(x: Days, y: Days): Days =
+      y.foldLeft(x) { case (acc, (day, v)) => add(acc, day, v(0), v(1), v(2)) }
+    def finish(b: Days): Seq[PartitionStat] =
+      b.iterator.map { case (day, a) => PartitionStat(day, a(0), a(1), a(2)) }.toSeq
+    // vals: a def would rebuild the encoders by reflection on every call
+    private val buffer: Encoder[Days] = Encoders.javaSerialization
+    private val output: Encoder[Seq[PartitionStat]] =
+      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[PartitionStat]]()
+    def bufferEncoder: Encoder[Days] = buffer
+    def outputEncoder: Encoder[Seq[PartitionStat]] = output
+    val column = udaf(this, Encoders.tuple(Encoders.STRING, Encoders.scalaLong, Encoders.scalaLong))
+  }
 
   final case class IntegrityReport(
       seq: Long,

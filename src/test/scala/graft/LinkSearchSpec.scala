@@ -383,6 +383,18 @@ class LinkSearchSpec extends AnyFunSuite {
     assert(realGot === want)
   }
 
+  test("hitsInt rejects scale < 1 instead of returning all-zero scores") {
+    import spark.implicits._
+    val edges = Seq((0L, 1L), (1L, 2L)).toDF("src", "dst")
+    Seq(0L, -3L).foreach { scale =>
+      val err = intercept[IllegalArgumentException](LinkGraph.hitsInt(edges, iters = 1, scale = scale))
+      assert(err.getMessage.contains("scale must be >= 1"))
+    }
+    // scale 1 is the floor: the largest entry of each vector is still >= 1
+    val got = LinkGraph.hitsInt(edges, iters = 2, scale = 1L).as[(Long, Long, Long)].collect()
+    assert(got.map(_._2).max >= 1L && got.map(_._3).max >= 1L)
+  }
+
   test("hitsInt matches a sequential integer replay; pure authority gets hub 0") {
     import spark.implicits._
     // star + chain: 1,2,3 -> 4 (4 is a pure authority), 4 -> nothing,

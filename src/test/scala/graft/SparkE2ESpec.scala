@@ -260,6 +260,99 @@ class SparkE2ESpec extends AnyFunSuite {
     assert(!pruned.columns.contains("p_day"), "hidden partition column must be stripped")
   }
 
+  test("every commit kind records exactly the lineage its committed files hold") {
+    import spark.implicits._
+    val root = tmpRoot("lineage-oracle")
+    val pages = Corpus.generate(spark, 400L, 4).cache()
+    try {
+      val half = pages.filter(xxhash64($"url") % 2 === 0).as[Page]
+      val all = CommitOracle.check(spark, root, ExtractJob.extractAll(half, root, 4))
+      assert(all.stats.size > 1, s"one p_day only: ${all.stats}")
+      assert(all.stats.map(_.failures).sum > 0, "the corpus must hold failed/unsupported rows")
+
+      CommitOracle.check(spark, root, ExtractJob.resume(pages, root, 4))
+      val empty = CommitOracle.check(spark, root, ExtractJob.resume(pages, root, 4))
+      assert(empty == CommitOracle.Lineage(Nil, 0L, 0L))
+
+      val gone = pages.select($"url").limit(7)
+      val tomb = CommitOracle.check(spark, root, ManifestTable.deleteUrls(
+        spark, root, gone, java.sql.Timestamp.valueOf("2025-02-01 12:00:00")))
+      assert(tomb.stats.map(s => (s.p_day, s.rows, s.failures)) == Seq(("2025-02-01", 7L, 7L)))
+
+      val c = CommitOracle.check(spark, root, ManifestTable.compact(spark, root))
+      assert(c.stats.map(_.rows).sum == 407L)
+      val cl = CommitOracle.check(spark, root, ManifestTable.compactLatest(spark, root))
+      assert(cl.stats.map(_.rows).sum == 393L)
+    } finally {
+      pages.unpersist()
+      Fs.deleteRecursively(java.nio.file.Paths.get(root))
+    }
+  }
+
+  test("a batch with a null warc_ts (no p_day) fails its commit and publishes nothing") {
+    import spark.implicits._
+    val root = tmpRoot("null-ts")
+    try {
+      val ok = Extracted("u/a", java.sql.Timestamp.valueOf("2024-01-01 00:00:00"),
+        "txt", "a", "utf-8", "ok", null, 1, 1L)
+      ManifestTable.commitAppend(spark, root, Seq(ok).toDS())
+      val err = intercept[IllegalArgumentException](
+        ManifestTable.commitAppend(spark, root, Seq(ok.copy(url = "u/b", warc_ts = null)).toDS()))
+      assert(err.getMessage.contains("null warc_ts"))
+      assert(ManifestTable.snapshots(root) == Seq(0L))
+      assert(ManifestTable.read(spark, root).count() == 1L)
+    } finally Fs.deleteRecursively(java.nio.file.Paths.get(root))
+  }
+
+  /** Jobs, stages and shuffle bytes (read + written) that `body` ran. */
+  private def census(body: => Unit): (Int, Int, Long) = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val drain = "census-drain"
+    val jobs, stages, drained = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val shuffle = new java.util.concurrent.atomic.AtomicLong()
+    def counted(props: java.util.Properties) =
+      props == null || props.getProperty("spark.jobGroup.id") != drain
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (counted(e.properties)) jobs.add(e.jobId)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = { drained.add(e.jobId); () }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (counted(e.properties)) stages.add(e.stageInfo.stageId)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null) {
+          shuffle.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten +
+            e.taskMetrics.shuffleReadMetrics.totalBytesRead)
+          ()
+        }
+    }
+    sc.addSparkListener(l)
+    try {
+      body
+      // listener events arrive in order: once a marker job's end is seen,
+      // every event of `body` has been seen too
+      sc.setJobGroup(drain, drain)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val marker = sc.statusTracker.getJobIdsForGroup(drain).max
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!drained.contains(marker) && System.nanoTime() < deadline) Thread.sleep(5)
+      assert(drained.contains(marker), "listener events did not drain within 30 s")
+      (jobs.size, stages.size, shuffle.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("job census: a map-only extractAll commit is one job, one stage, no shuffle") {
+    val root = tmpRoot("census")
+    try {
+      val pages = Corpus.generate(spark, 80L, 4)
+      assert(census(ExtractJob.extractAll(pages, root, 4)) == ((1, 1, 0L)),
+        "lineage must ride the staged write, not a read-back of the staged files")
+      assert(ManifestTable.latestStats(root).map(_.rows).sum == 80L)
+      val (jobs, _, _) = census(ExtractJob.extractAll(pages.limit(0), root, 4))
+      assert(jobs <= 1, s"an empty commit ran $jobs jobs")
+    } finally Fs.deleteRecursively(java.nio.file.Paths.get(root))
+  }
+
   test("manifest ordering is numeric past the %06d padding width") {
     val root = tmpRoot("seqsort")
     val dir = java.nio.file.Paths.get(root, "_manifests")
