@@ -39,7 +39,16 @@ import scala.jdk.CollectionConverters._
   *   no data copy); finally the manifest is published by atomic rename. A
   *   leftover unpublished `commit_seq=<seq>` directory from a crashed
   *   writer is deleted before the rename — it was never visible, so this
-  *   is safe.
+  *   is safe. A commit whose staged write, lineage wait or null-`p_day`
+  *   check throws deletes its own staging directory before rethrowing.
+  *
+  * The staged write goes through [[graft.ForkFreeLocalFileSystem]]
+  * ([[graft.Fs.ForkFreeWriteOptions]]): without native libhadoop, Hadoop's
+  * local filesystem starts a `chmod` process for every file, `.crc`
+  * sidecar and directory it creates — 178 per commit on the benchmark's
+  * `extractAll` input, which made the staged write slower than the
+  * extraction kernel. The same nine permission bits are now set with one
+  * syscall each; the files, sidecars and modes on disk are unchanged.
   *
   * The seam is thin by design: a real Iceberg catalog drops in by replacing
   * this object's write/read with `.writeTo(table)` / `read.table`.
@@ -50,8 +59,9 @@ object ManifestTable {
 
   /** Wall-clock decomposition of the LAST commit on this JVM: `stage` is
     * the distributed parquet write (scales with executors; it also folds
-    * the lineage and content fingerprint), `stats` the wait for that
-    * write's observed lineage row to reach the driver (no Spark job,
+    * the lineage and content fingerprint, and sets file and directory
+    * modes in-process, never through a `chmod` child), `stats` the wait
+    * for that write's observed lineage row to reach the driver (no Spark job,
     * sub-millisecond), `move`
     * the O(1) directory rename, `publish` the O(1) manifest write+rename.
     * Bench-facing observability — separates raw data-write cost from the
@@ -258,45 +268,54 @@ object ManifestTable {
     val staging = Paths.get(root, s"_staging-$seq")
     graft.Fs.deleteRecursively(staging) // leftover from a crashed writer: never visible
     val t0 = System.nanoTime()
-    // lineage rides the staged write (exact under retries, see
-    // [[commitAppend]]): folded per write task, merged on the driver
-    val lineage = Observation()
-    batch
-      .withColumn("p_day", date_format(col("warc_ts"), "yyyy-MM-dd"))
-      .observe(lineage,
-        DayLineage.column(col("p_day"), col("n_bytes_in"),
-          when(col("status") =!= "ok", 1L).otherwise(0L)).as("days"),
-        max(unix_timestamp(col("warc_ts"))).as("hw"),
-        expr(s"bit_xor($RowFpSql)").as("fp"))
-      .write
-      .mode(SaveMode.Overwrite)
-      .partitionBy("p_day")
-      .parquet(staging.toString)
-    val t1 = System.nanoTime()
+    val (t1, stats, hw, contentFp) =
+      try {
+        // lineage rides the staged write (exact under retries, see
+        // [[commitAppend]]): folded per write task, merged on the driver
+        val lineage = Observation()
+        batch
+          .withColumn("p_day", date_format(col("warc_ts"), "yyyy-MM-dd"))
+          .observe(lineage,
+            DayLineage.column(col("p_day"), col("n_bytes_in"),
+              when(col("status") =!= "ok", 1L).otherwise(0L)).as("days"),
+            max(unix_timestamp(col("warc_ts"))).as("hw"),
+            expr(s"bit_xor($RowFpSql)").as("fp"))
+          .write
+          .options(graft.Fs.ForkFreeWriteOptions) // no chmod process per file, see scaladoc
+          .mode(SaveMode.Overwrite)
+          .partitionBy("p_day")
+          .parquet(staging.toString)
+        val t1 = System.nanoTime()
 
-    // the observed row reaches the driver through the listener bus after the
-    // write returns; bounded wait, and a missing row publishes nothing
-    val observed =
-      try Await.result(lineage.future, LineageTimeout)
-      catch {
-        case e: java.util.concurrent.TimeoutException =>
-          throw new IllegalStateException(
-            s"commit $seq on $root: the staged write's lineage did not arrive " +
-              s"within $LineageTimeout; nothing published", e)
+        // the observed row reaches the driver through the listener bus after
+        // the write returns; bounded wait, and a missing row publishes nothing
+        val observed =
+          try Await.result(lineage.future, LineageTimeout)
+          catch {
+            case e: java.util.concurrent.TimeoutException =>
+              throw new IllegalStateException(
+                s"commit $seq on $root: the staged write's lineage did not arrive " +
+                  s"within $LineageTimeout; nothing published", e)
+          }
+        val days = observed.getAs[scala.collection.Seq[Row]]("days")
+          .map(r => PartitionStat(r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+        // a null warc_ts has no p_day: such a batch has never been committable
+        require(days.forall(_.p_day != null),
+          s"commit $seq on $root: rows with null warc_ts have no p_day; nothing published")
+        // an empty batch observes no days and null hw/fp: a 0-row snapshot
+        def orZero(field: String): Long =
+          Option(observed.getAs[java.lang.Long](field)).fold(0L)(_.longValue)
+        // "fp" is the commit-level content fingerprint: the same
+        // order-independent xor [[verifyIntegrity]] recomputes from the data
+        // alone (bit-rot audit)
+        (t1, days.sortBy(_.p_day).toSeq, orZero("hw"), orZero("fp"))
+      } catch {
+        case e: Throwable =>
+          // nothing is moved or published yet, so the staged files are garbage
+          try graft.Fs.deleteRecursively(staging)
+          catch { case s: Throwable => e.addSuppressed(s) }
+          throw e
       }
-    val days = observed.getAs[scala.collection.Seq[Row]]("days")
-      .map(r => PartitionStat(r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    // a null warc_ts has no p_day: such a batch has never been committable
-    require(days.forall(_.p_day != null),
-      s"commit $seq on $root: rows with null warc_ts have no p_day; nothing published")
-    val stats = days.sortBy(_.p_day).toSeq
-    // an empty batch observes no days and null hw/fp: a 0-row snapshot
-    def orZero(field: String): Long =
-      Option(observed.getAs[java.lang.Long](field)).fold(0L)(_.longValue)
-    val hw = orZero("hw")
-    // commit-level content fingerprint: the same order-independent xor
-    // [[verifyIntegrity]] recomputes from the data alone (bit-rot audit)
-    val contentFp = orZero("fp")
     val t2 = System.nanoTime()
 
     // move staged data into place: one directory rename, no copy

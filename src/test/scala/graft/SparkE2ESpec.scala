@@ -6,6 +6,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 /** End-to-end pipeline tests under a real SparkSession (FIXTURES.md §5):
   * golden byte-identity via the J3 join, determinism under repartition,
@@ -299,6 +301,10 @@ class SparkE2ESpec extends AnyFunSuite {
       val err = intercept[IllegalArgumentException](
         ManifestTable.commitAppend(spark, root, Seq(ok.copy(url = "u/b", warc_ts = null)).toDS()))
       assert(err.getMessage.contains("null warc_ts"))
+      val left = Using.resource(Files.list(java.nio.file.Paths.get(root))) { s =>
+        s.iterator().asScala.map(_.getFileName.toString).filter(_.startsWith("_staging-")).toList
+      }
+      assert(left.isEmpty, s"a failed commit left its staging behind: $left")
       assert(ManifestTable.snapshots(root) == Seq(0L))
       assert(ManifestTable.read(spark, root).count() == 1L)
     } finally Fs.deleteRecursively(java.nio.file.Paths.get(root))
