@@ -34,8 +34,7 @@ object BenchExtra {
         math.max(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, 32).toString)
       .config("spark.sql.files.maxPartitionBytes", "48m")
       .config("spark.sql.files.openCostInBytes", "4m")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("GRAFT_EXTRA_AQE", "true"))
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -578,12 +578,10 @@ object SparkEntry {
         // member file PER partition regardless of data, so oversized
         // counts turn a small keyed stream into pure file-commit latency
         // (measured here: 32 -> slots/4 state partitions halves the
-        // run). Derived from the cluster's slot count and
-        // env-overridable for larger keyed state; the batch conf is
+        // run). Derived from the cluster's slot count; the batch conf is
         // restored before any downstream plan executes.
         val batchShuffle = s.conf.get("spark.sql.shuffle.partitions")
-        val streamParts = sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE",
-          math.max(4, s.sparkContext.defaultParallelism / 4).toString)
+        val streamParts = math.max(4, s.sparkContext.defaultParallelism / 4).toString
         val q = try {
           s.conf.set("spark.sql.shuffle.partitions", streamParts)
           FunnelStateful.funnelStateful(

@@ -1,8 +1,8 @@
 package graft.fixtures
 
+import graft.functions.Codecs
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets
-import java.util.zip.Deflater
 
 /** Deterministic PDF writer for fixtures (SURVEY.md §5.2): classic layout
   * (xref table, catalog/pages/page objects) AND the PDF 1.5+ object-stream
@@ -112,7 +112,7 @@ object PdfGen {
       val full =
         if (imageObjOf.contains(i)) text + "q 96 0 0 72 72 48 cm /Im1 Do Q\n" else text
       val cs = full.getBytes(StandardCharsets.ISO_8859_1)
-      val data = if (flate) deflate(cs) else cs
+      val data = if (flate) Codecs.deflate(cs) else cs
       beginObj(contentObjStart + i)
       val filter = if (flate) " /Filter /FlateDecode" else ""
       write(s"<< /Length ${data.length}$filter >>\nstream\n")
@@ -176,7 +176,7 @@ object PdfGen {
     val header = members.zip(offsets).map { case ((num, _), off) => s"$num $off" }.mkString(" ") + "\n"
     val payload = (header + members.map(_._2).mkString("\n") + "\n")
       .getBytes(StandardCharsets.ISO_8859_1)
-    val stmData = if (flate) deflate(payload) else payload
+    val stmData = if (flate) Codecs.deflate(payload) else payload
     val filt = if (flate) " /Filter /FlateDecode" else ""
     write(s"100 0 obj\n<< /Type /ObjStm /N ${members.length} /First ${header.length} " +
       s"/Length ${stmData.length}$filt >>\nstream\n")
@@ -188,7 +188,7 @@ object PdfGen {
       val full =
         if (imageObjOf.contains(i)) text + "q 96 0 0 72 72 48 cm /Im1 Do Q\n" else text
       val cs = full.getBytes(StandardCharsets.ISO_8859_1)
-      val data = if (flate) deflate(cs) else cs
+      val data = if (flate) Codecs.deflate(cs) else cs
       write(s"${contentObjStart + i} 0 obj\n<< /Length ${data.length}$filt >>\nstream\n")
       out.write(data)
       write("\nendstream\nendobj\n")
@@ -205,20 +205,6 @@ object PdfGen {
     write("101 0 obj\n<< /Type /XRef /Size 102 /Root 1 0 R /W [1 2 1] /Length 4 >>\nstream\n")
     out.write(Array[Byte](0, 0, 0, 0))
     write("\nendstream\nendobj\nstartxref\n0\n%%EOF\n")
-    out.toByteArray
-  }
-
-  private def deflate(data: Array[Byte]): Array[Byte] = {
-    val d = new Deflater(Deflater.BEST_SPEED)
-    d.setInput(data)
-    d.finish()
-    val out = new ByteArrayOutputStream(data.length)
-    val buf = new Array[Byte](8192)
-    while (!d.finished()) {
-      val n = d.deflate(buf)
-      out.write(buf, 0, n)
-    }
-    d.end()
     out.toByteArray
   }
 

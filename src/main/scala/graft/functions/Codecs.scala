@@ -1,47 +1,77 @@
 package graft.functions
 
-import java.io.ByteArrayInputStream
-import java.util.zip.GZIPInputStream
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, EOFException, IOException, InputStream}
+import java.util.zip.{Deflater, GZIPInputStream, Inflater, InflaterInputStream}
 
-/** Gzip envelope handling for crawl payloads. Real web corpora carry
-  * compressed bodies everywhere — HTTP `Content-Encoding: gzip` responses
-  * and per-record-gzipped WARC archives — so the extraction tier must see
-  * through the envelope without trusting it: the decompressor is BOUNDED
-  * (a 10 KB zip bomb must not allocate 10 GB on an executor) and total
-  * (corrupt streams return None, never throw into the task).
+/** Compressed payloads: gzip envelopes (HTTP `Content-Encoding`, WARC
+  * archives), PDF `/FlateDecode` streams, OOXML/ODF ZIP entries, PNG
+  * `IDAT`. Every decompression reads through ONE bounded loop, [[inflate]]:
+  * a 10 KB bomb must not allocate 10 GB on an executor.
   */
 object Codecs {
+
+  /** Inflated bytes per document: the gzip envelope's cap, and what one
+    * PDF's streams or one ZIP container's entries sum against.
+    */
+  final val MaxInflatedBytes: Int = 64 << 20
+  final val OverCapError = s"decompressed size over ${MaxInflatedBytes >> 20} MiB cap"
+
+  /** A kernel's document inflated past [[MaxInflatedBytes]]. */
+  final class OverCapException extends RuntimeException(OverCapError, null, false, false)
+
+  /** What [[inflate]] read: the whole stream, or (`complete` false) the
+    * bytes inflated before its input ran out.
+    */
+  final case class Inflated(bytes: Array[Byte], complete: Boolean)
+
+  /** Reads `in` to its end straight into a buffer of `initial` bytes that
+    * doubles up to `cap` (None past it), and closes `in` in a finally.
+    * Corrupt data throws its IOException; each caller keeps its own rule
+    * for a truncated stream.
+    */
+  def inflate(in: InputStream, cap: Long, initial: Int): Option[Inflated] = {
+    var buf = new Array[Byte](math.min(initial.toLong, cap).toInt)
+    var size = 0
+    try {
+      var n = 0
+      while (n >= 0) {
+        if (size == buf.length) {
+          if (size >= cap) return if (in.read() < 0) Some(Inflated(buf, complete = true)) else None
+          buf = java.util.Arrays.copyOf(buf, math.min(cap, math.max(2L * size, 4096)).toInt)
+        }
+        n = in.read(buf, size, buf.length - size)
+        if (n > 0) size += n
+      }
+      Some(Inflated(if (size == buf.length) buf else java.util.Arrays.copyOf(buf, size), complete = true))
+    } catch { case _: EOFException => Some(Inflated(java.util.Arrays.copyOf(buf, size), complete = false)) }
+    finally in.close()
+  }
+
+  /** zlib (RFC 1950) over `b(off until off + len)`; closing ends its inflater. */
+  def zlib(b: Array[Byte], off: Int, len: Int): InputStream =
+    new InflaterInputStream(new ByteArrayInputStream(b, off, len), new Inflater(), math.max(1, math.min(len, 1 << 16))) {
+      override def close(): Unit = try super.close() finally inf.end()
+    }
 
   /** RFC 1952 magic. */
   def isGzip(b: Array[Byte]): Boolean =
     b != null && b.length >= 2 && (b(0) & 0xFF) == 0x1F && (b(1) & 0xFF) == 0x8B
 
-  /** Decompress one-or-more concatenated gzip members (GZIPInputStream
-    * handles multi-member streams per RFC 1952). None on corrupt input or
-    * when the inflated size exceeds `maxOut` — the caller decides whether
-    * an oversized payload is an error or needs a streaming path.
+  /** Decompress one-or-more concatenated gzip members (RFC 1952). None on
+    * corrupt or truncated input or past `maxOut` decompressed bytes.
     */
-  def gunzip(bytes: Array[Byte], maxOut: Int = 64 << 20): Option[Array[Byte]] = {
-    if (!isGzip(bytes)) return None
-    try {
-      val in = new GZIPInputStream(new ByteArrayInputStream(bytes))
-      try {
-        val out = new java.io.ByteArrayOutputStream(math.min(bytes.length * 4, 1 << 16))
-        val buf = new Array[Byte](8192)
-        var total = 0L
-        var n = in.read(buf)
-        while (n >= 0) {
-          total += n
-          if (total > maxOut) return None // bomb guard
-          out.write(buf, 0, n)
-          n = in.read(buf)
-        }
-        Some(out.toByteArray)
-      } finally in.close()
-    } catch {
-      case _: java.io.IOException => None // corrupt header/CRC/truncated
-    }
-  }
+  def gunzip(bytes: Array[Byte], maxOut: Int = MaxInflatedBytes): Option[Array[Byte]] =
+    gunzipOrWhy(bytes, maxOut).toOption
+
+  /** [[gunzip]] with the reason: [[OverCapError]], or "gzip decode error". */
+  def gunzipOrWhy(bytes: Array[Byte], maxOut: Int = MaxInflatedBytes): Either[String, Array[Byte]] =
+    if (!isGzip(bytes)) Left("gzip decode error")
+    else try inflate(new GZIPInputStream(new ByteArrayInputStream(bytes)), maxOut,
+        math.min(bytes.length.toLong * 4, 1 << 16).toInt) match {
+      case Some(Inflated(out, true)) => Right(out)
+      case None                      => Left(OverCapError)
+      case _                         => Left("gzip decode error")
+    } catch { case _: IOException => Left("gzip decode error") } // corrupt header, data or CRC
 
   /** Boundaries of the concatenated RFC 1952 members in a gzip stream:
     * (byte offset, compressed length) per member, in order. This is what
@@ -51,7 +81,8 @@ object Codecs {
     * (truncated header/stream, bad magic, non-deflate method). Member
     * payloads are inflated into a scratch buffer to find the stream end
     * (constant memory; output discarded), so cost is one decompression
-    * pass — the same work an indexer does anyway.
+    * pass — the same work an indexer does anyway. This scan keeps nothing,
+    * so it is the one decompression that does not go through [[inflate]].
     */
   def gzipMemberBounds(bytes: Array[Byte]): Option[Seq[(Long, Long)]] = {
     if (!isGzip(bytes)) return None
@@ -79,7 +110,7 @@ object Codecs {
       }
       if ((flg & 2) != 0) pos += 2 // FHCRC
       if (pos >= bytes.length) return None
-      val inf = new java.util.zip.Inflater(true)
+      val inf = new Inflater(true)
       try {
         inf.setInput(bytes, pos, bytes.length - pos)
         val scratch = new Array[Byte](8192)
@@ -97,9 +128,21 @@ object Codecs {
     Some(out.result())
   }
 
+  /** zlib (RFC 1950) at BEST_SPEED: PNG `IDAT` and generated PDF streams. */
+  def deflate(data: Array[Byte]): Array[Byte] = {
+    val d = new Deflater(Deflater.BEST_SPEED)
+    try {
+      d.setInput(data); d.finish()
+      val out = new ByteArrayOutputStream(data.length / 2 + 64)
+      val buf = new Array[Byte](8192)
+      while (!d.finished()) out.write(buf, 0, d.deflate(buf))
+      out.toByteArray
+    } finally d.end()
+  }
+
   /** Compress (single member). Test/generator helper and WARC writer leg. */
   def gzip(bytes: Array[Byte]): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream(math.max(64, bytes.length / 2))
+    val bos = new ByteArrayOutputStream(math.max(64, bytes.length / 2))
     val out = new java.util.zip.GZIPOutputStream(bos)
     out.write(bytes)
     out.close()

@@ -27,19 +27,20 @@ object FormatSniff {
     */
   final val MaxGzipDepth = 4
 
-  /** Unwrap up to [[MaxGzipDepth]] gzip envelopes. Right(inner) on success
-    * (identity when not gzip), Left(reason) on corrupt/bomb/too-deep —
-    * shared by sniff (ingest) and ExtractKernel (extraction) so the two
-    * can never disagree about what the payload "is".
+  /** Unwrap up to [[MaxGzipDepth]] gzip envelopes, each bounded by
+    * [[Codecs.MaxInflatedBytes]]. Right(inner) on success (identity when
+    * not gzip), Left(reason) on corrupt/bomb/too-deep — shared by sniff
+    * (ingest) and ExtractKernel (extraction) so the two can never disagree
+    * about what the payload "is".
     */
   def unwrapGzip(bytes: Array[Byte]): Either[String, Array[Byte]] = {
     var b = bytes
     var depth = 0
     while (Codecs.isGzip(b)) {
       if (depth >= MaxGzipDepth) return Left("gzip nesting too deep")
-      Codecs.gunzip(b) match {
-        case Some(inner) => b = inner; depth += 1
-        case None        => return Left("gzip decode error")
+      Codecs.gunzipOrWhy(b) match {
+        case Right(inner) => b = inner; depth += 1
+        case left         => return left
       }
     }
     Right(b)

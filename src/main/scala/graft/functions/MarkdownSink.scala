@@ -92,13 +92,4 @@ object MarkdownSink {
     */
   def render(e: Extracted): String =
     renderStructured(e, Seq.empty, if (e.n_blocks > 0) Seq(e.format -> e.n_blocks) else Seq.empty)
-
-  /** Column form for query use: render via the kernel in one pass. */
-  def renderColumn(
-      ds: org.apache.spark.sql.Dataset[Extracted]
-  ): org.apache.spark.sql.DataFrame = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    ds.map(e => (e.url, render(e))).toDF("url", "markdown")
-  }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import java.util.zip.{CRC32, Deflater, Inflater}
+import java.util.zip.CRC32
 
 /** Complete pure-JDK PNG codec for 8-bit RGB images: zlib via
   * `java.util.zip`, all five scanline filters (None/Sub/Up/Average/Paeth,
@@ -62,7 +62,7 @@ object PngCodec {
     putBe32(ihdr, 4, img.height)
     ihdr(8) = 8; ihdr(9) = 2; ihdr(10) = 0; ihdr(11) = 0; ihdr(12) = 0
     writeChunk(out, "IHDR", ihdr)
-    writeChunk(out, "IDAT", deflate(raw))
+    writeChunk(out, "IDAT", Codecs.deflate(raw))
     writeChunk(out, "IEND", Array.emptyByteArray)
     out.toByteArray
   }
@@ -111,10 +111,14 @@ object PngCodec {
     }
     if (!seenIhdr) return None
     // bound the inflate so a forged IHDR cannot allocate unbounded memory
-    if (w.toLong * h.toLong * Bpp > 64L * 1024 * 1024) return None
+    if (w.toLong * h.toLong * Bpp > Codecs.MaxInflatedBytes) return None
     val stride = w * Bpp
-    val raw = inflate(idat.toByteArray, (stride + 1) * h).getOrElse(return None)
-    if (raw.length != (stride + 1) * h) return None
+    val size = (stride + 1) * h
+    // truncated, corrupt, or not the size the declared dims give: no image
+    val raw = try Codecs.inflate(Codecs.zlib(idat.toByteArray, 0, idat.size), size, math.min(size, 1 << 20)) match {
+      case Some(Codecs.Inflated(b, true)) if b.length == size => b
+      case _                                                  => return None
+    } catch { case _: java.io.IOException => return None }
     val rgb = new Array[Byte](stride * h)
     var y = 0
     while (y < h) {
@@ -351,34 +355,6 @@ object PngCodec {
   }
 
   // ---- zlib + chunk helpers ------------------------------------------------
-
-  private def deflate(data: Array[Byte]): Array[Byte] = {
-    val d = new Deflater(Deflater.BEST_SPEED)
-    try {
-      d.setInput(data); d.finish()
-      val out = new java.io.ByteArrayOutputStream(data.length / 2 + 64)
-      val buf = new Array[Byte](8192)
-      while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-      out.toByteArray
-    } finally d.end()
-  }
-
-  private def inflate(data: Array[Byte], maxLen: Int): Option[Array[Byte]] = {
-    val inf = new Inflater()
-    try {
-      inf.setInput(data)
-      val out = new java.io.ByteArrayOutputStream(math.min(maxLen, 1 << 20))
-      val buf = new Array[Byte](8192)
-      while (!inf.finished()) {
-        val n = inf.inflate(buf)
-        if (n == 0 && (inf.needsInput() || inf.needsDictionary())) return None // truncated
-        out.write(buf, 0, n)
-        if (out.size() > maxLen) return None // oversized vs declared dims
-      }
-      Some(out.toByteArray)
-    } catch { case _: java.util.zip.DataFormatException => None }
-    finally inf.end()
-  }
 
   private def writeChunk(out: java.io.ByteArrayOutputStream, ctype: String, data: Array[Byte]): Unit = {
     val len = data.length

@@ -65,10 +65,6 @@ object TextAssembly {
     c == ' ' || c == '\t' || c == '\n' || c == '\r' || c == '\f' ||
       c == '\u000B' || c == '\u00A0' || Character.isWhitespace(c)
 
-  /** Join non-empty parts with the given separator (block/page assembly). */
-  def joinNonEmpty(parts: Seq[String], sep: String): String =
-    parts.filter(_.nonEmpty).mkString(sep)
-
   /** Page header grammar — reference enhanced_extract.py:283. */
   def pageHeader(n: Int): String = s"[Page $n]"
 

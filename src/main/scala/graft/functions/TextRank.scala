@@ -111,7 +111,4 @@ object TextRank {
       .sorted // document order, Sumy's contract
     top.map(ss).toSeq
   }
-
-  /** One-string summary (sentences joined by a single space). */
-  def summaryText(text: String, k: Int): String = summarize(text, k).mkString(" ")
 }

@@ -1,9 +1,11 @@
 package graft.functions.office
 
+import graft.functions.Codecs
+import graft.functions.Codecs.Inflated
 import graft.functions.html.HtmlTokenizer
-import java.io.ByteArrayInputStream
+import java.io.{ByteArrayInputStream, EOFException, FilterInputStream}
 import java.nio.charset.StandardCharsets
-import java.util.zip.ZipInputStream
+import java.util.zip.{ZipEntry, ZipInputStream}
 import scala.collection.mutable.{ArrayBuffer, LinkedHashMap}
 
 /** ZIP container access for the OOXML/ODF kernels. Office documents are ZIP
@@ -11,38 +13,39 @@ import scala.collection.mutable.{ArrayBuffer, LinkedHashMap}
   * read via java.util.zip — no external libraries.
   */
 object Zips {
-  /** All entries (name → bytes), insertion-ordered. Bounded by doc size. */
-  def entries(bytes: Array[Byte]): LinkedHashMap[String, Array[Byte]] = {
+  /** The entries `want` accepts (name → bytes), in container order; the
+    * rest are skipped, never kept. Entries read sum against
+    * [[Codecs.MaxInflatedBytes]] (past it: [[Codecs.OverCapException]]).
+    */
+  def entries(bytes: Array[Byte], want: String => Boolean): LinkedHashMap[String, Array[Byte]] = {
     val out = LinkedHashMap.empty[String, Array[Byte]]
-    val zin = new ZipInputStream(new ByteArrayInputStream(bytes))
-    var e = zin.getNextEntry
-    val buf = new Array[Byte](8192)
-    while (e != null) {
-      if (!e.isDirectory) {
-        val bos = new java.io.ByteArrayOutputStream()
-        var n = zin.read(buf)
-        while (n > 0) { bos.write(buf, 0, n); n = zin.read(buf) }
-        out(e.getName) = bos.toByteArray
-      }
-      zin.closeEntry()
-      e = zin.getNextEntry
+    var left = Codecs.MaxInflatedBytes.toLong
+    walk(bytes) { (e, zin) =>
+      if (!e.isDirectory && want(e.getName)) // closing this view ends the entry, not the container
+        Codecs.inflate(new FilterInputStream(zin) { override def close(): Unit = zin.closeEntry() }, left, 1024) match {
+          case Some(Inflated(b, true)) => out(e.getName) = b; left -= b.length
+          case None                    => throw new Codecs.OverCapException
+          case _                       => throw new EOFException(s"truncated entry ${e.getName}")
+        }
+      true
     }
-    zin.close()
     out
   }
 
-  /** Entry NAMES only (cheap container sniff). */
-  def entryNames(bytes: Array[Byte], max: Int = 64): List[String] = {
+  /** Entry NAMES only, the first 64 (cheap container sniff). */
+  def entryNames(bytes: Array[Byte]): List[String] = {
     val out = ArrayBuffer.empty[String]
-    val zin = new ZipInputStream(new ByteArrayInputStream(bytes))
-    var e = zin.getNextEntry
-    while (e != null && out.length < max) {
-      out += e.getName
-      zin.closeEntry()
-      e = zin.getNextEntry
-    }
-    zin.close()
+    walk(bytes) { (e, _) => out += e.getName; out.length < 64 }
     out.toList
+  }
+
+  /** Visits entries while `visit` says so; skipping one inflates it into a scratch buffer. */
+  private def walk(bytes: Array[Byte])(visit: (ZipEntry, ZipInputStream) => Boolean): Unit = {
+    val zin = new ZipInputStream(new ByteArrayInputStream(bytes))
+    try {
+      var e = zin.getNextEntry
+      while (e != null && visit(e, zin)) { zin.closeEntry(); e = zin.getNextEntry }
+    } finally zin.close()
   }
 
   def xml(bytes: Array[Byte]): String = new String(bytes, StandardCharsets.UTF_8)
@@ -65,7 +68,7 @@ object DocxKernel {
   import HtmlTokenizer.{EndTag, StartTag, Text}
 
   def extract(bytes: Array[Byte]): (String, Int) = {
-    val doc = Zips.entries(bytes).getOrElse("word/document.xml", throw new IllegalArgumentException("no word/document.xml"))
+    val doc = Zips.entries(bytes, Set("word/document.xml")).getOrElse("word/document.xml", throw new IllegalArgumentException("no word/document.xml"))
     val paras = new ArrayBuffer[String]
     val para = new StringBuilder
     var inT = false
@@ -93,7 +96,7 @@ object PptxKernel {
   private val slideRe = """ppt/slides/slide(\d+)\.xml""".r
 
   def extract(bytes: Array[Byte]): (String, Int) = {
-    val all = Zips.entries(bytes)
+    val all = Zips.entries(bytes, slideRe.matches)
     val slides = all.keys.collect { case n @ slideRe(i) => (i.toInt, n) }.toSeq.sortBy(_._1)
     if (slides.isEmpty) throw new IllegalArgumentException("no slides")
     val out = new ArrayBuffer[String]
@@ -127,8 +130,11 @@ object PptxKernel {
 object XlsxKernel {
   import HtmlTokenizer.{EndTag, StartTag, Text}
 
+  private val sheetRe = """xl/worksheets/sheet[1-9]\d*\.xml""".r
+
   def extract(bytes: Array[Byte]): (String, Int) = {
-    val all = Zips.entries(bytes)
+    val all = Zips.entries(bytes,
+      n => n == "xl/sharedStrings.xml" || n == "xl/workbook.xml" || sheetRe.matches(n))
     // shared strings (0-indexed <si><t>)
     val shared = new ArrayBuffer[String]
     all.get("xl/sharedStrings.xml").foreach { ss =>
@@ -198,7 +204,7 @@ object OdtKernel {
   import HtmlTokenizer.Text
 
   def extract(bytes: Array[Byte]): (String, Int) = {
-    val content = Zips.entries(bytes).getOrElse("content.xml", throw new IllegalArgumentException("no content.xml"))
+    val content = Zips.entries(bytes, Set("content.xml")).getOrElse("content.xml", throw new IllegalArgumentException("no content.xml"))
     val lines = new ArrayBuffer[String]
     XmlWalk(Zips.xml(content)) {
       case Text(t) => val s = t.trim; if (s.nonEmpty) lines += s

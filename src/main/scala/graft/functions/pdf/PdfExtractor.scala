@@ -1,8 +1,7 @@
 package graft.functions.pdf
 
-import graft.functions.TextAssembly
+import graft.functions.{Codecs, TextAssembly}
 import java.nio.charset.StandardCharsets
-import java.util.zip.Inflater
 import scala.collection.mutable.ArrayBuffer
 import scala.util.matching.Regex
 
@@ -76,7 +75,10 @@ object PdfExtractor {
 
   def extract(bytes: Array[Byte]): Either[String, Result] =
     try extractUnsafe(bytes)
-    catch { case e: Exception => Left(s"pdf parse error: ${e.getClass.getSimpleName}") }
+    catch {
+      case _: Codecs.OverCapException => Left(Codecs.OverCapError)
+      case e: Exception               => Left(s"pdf parse error: ${e.getClass.getSimpleName}")
+    }
 
   // ---- affine matrices (row-vector convention: p' = p · M) ---------------
 
@@ -155,8 +157,10 @@ object PdfExtractor {
   // ---- document object table ---------------------------------------------
 
   private final class Doc(val s: String, val bytes: Array[Byte]) {
-    /** objNum → (dict/body text, decoded stream bytes if any) */
-    val objs = scala.collection.mutable.HashMap.empty[Int, (String, Option[Array[Byte]])]
+    /** objNum → (dict/body text, (start, length) of its stream data if any) */
+    val objs = scala.collection.mutable.HashMap.empty[Int, (String, Option[(Int, Int)])]
+    private val decoded = scala.collection.mutable.HashMap.empty[Int, Option[Array[Byte]]]
+    private var budget = Codecs.MaxInflatedBytes.toLong // every stream inflated counts
     private val bodySpans = scala.collection.mutable.HashMap.empty[Int, (Int, Int, Int)] // bodyStart, streamKw(-1), endObj
 
     // pass 1: spans, skipping matches that fall inside a previous object's
@@ -184,7 +188,7 @@ object PdfExtractor {
         if (t.nonEmpty && t.forall(_.isDigit)) Some(t.toInt) else None
       }
 
-    // pass 2: materialize dicts + decoded streams
+    // pass 2: materialize dicts + stream spans
     for ((num, (bodyStart, streamKw, endObj)) <- bodySpans) {
       if (streamKw < 0) objs(num) = (s.substring(bodyStart, endObj), None)
       else {
@@ -213,12 +217,7 @@ object PdfExtractor {
             end - dataStart
           }
         }
-        if (len >= 0 && dataStart + len <= bytes.length) {
-          val raw = java.util.Arrays.copyOfRange(bytes, dataStart, dataStart + len)
-          val data = if (dict.contains("/FlateDecode")) try inflate(raw) catch { case _: Exception => raw }
-          else raw
-          objs(num) = (dict, Some(data))
-        } else objs(num) = (dict, None)
+        objs(num) = (dict, if (len >= 0 && dataStart + len <= bytes.length) Some((dataStart, len)) else None)
       }
     }
 
@@ -231,8 +230,8 @@ object PdfExtractor {
     // append replacements at top level).
     {
       val members = scala.collection.mutable.ArrayBuffer.empty[(Int, String)]
-      for ((_, (dictText, streamOpt)) <- objs if dictText.contains("/ObjStm")) {
-        streamOpt.foreach { data =>
+      for ((num, (dictText, _)) <- objs if dictText.contains("/ObjStm")) {
+        stream(num).foreach { data =>
           val body = new String(data, StandardCharsets.ISO_8859_1)
           val n = valueAfter(dictText, "N").flatMap(_.trim.toIntOption).getOrElse(0)
           val first = valueAfter(dictText, "First").flatMap(_.trim.toIntOption).getOrElse(0)
@@ -257,7 +256,22 @@ object PdfExtractor {
     }
 
     def dict(num: Int): Option[String] = objs.get(num).map(_._1)
-    def stream(num: Int): Option[Array[Byte]] = objs.get(num).flatMap(_._2)
+
+    /** Stream data, /FlateDecode inflated on first read: only content,
+      * Form XObject, /ToUnicode and /ObjStm streams are read, so images and
+      * fonts cost nothing. Cut short: what inflated; corrupt: the raw bytes.
+      */
+    def stream(num: Int): Option[Array[Byte]] = decoded.getOrElseUpdate(num,
+      objs.get(num).flatMap { case (dict, span) =>
+        span.map { case (start, len) =>
+          def raw = java.util.Arrays.copyOfRange(bytes, start, start + len)
+          if (!dict.contains("/FlateDecode")) raw
+          else try Codecs.inflate(Codecs.zlib(bytes, start, len), budget, math.min(len.toLong * 4, budget).toInt) match {
+            case Some(read) => budget -= read.bytes.length; read.bytes
+            case None       => throw new Codecs.OverCapException
+          } catch { case _: java.io.IOException => raw }
+        }
+      })
   }
 
   // ---- small dict-value helpers ------------------------------------------
@@ -664,20 +678,6 @@ object PdfExtractor {
     var i = 0
     while (i < pageText.length) { if (pageText.charAt(i) == '|') pipes += 1; i += 1 }
     pipes > 5
-  }
-
-  private def inflate(raw: Array[Byte]): Array[Byte] = {
-    val inf = new Inflater()
-    inf.setInput(raw)
-    val out = new java.io.ByteArrayOutputStream(raw.length * 4)
-    val buf = new Array[Byte](8192)
-    while (!inf.finished() && !inf.needsInput()) {
-      val n = inf.inflate(buf)
-      if (n > 0) out.write(buf, 0, n)
-      else if (n == 0 && inf.needsDictionary()) throw new IllegalStateException("flate dictionary")
-    }
-    inf.end()
-    out.toByteArray
   }
 
   // ---- content stream interpreter ----------------------------------------

@@ -42,8 +42,6 @@ object CorpusBuild {
       summary: DataFrame, // (lang, n_kept, n_clean, n_sampled, sum_sampled_ids)
       stages: Seq[StageRun])
 
-  private val StageNames = Seq("gate", "dedup", "decontam", "sample")
-
   private def stageRoot(root: String, name: String) = s"$root/stage-$name"
 
   /** Encode a (doc_id, text, lang) frame as Extracted rows for commit. */

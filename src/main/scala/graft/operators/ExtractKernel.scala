@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Extracted, Page, PageIn}
-import graft.functions.{Charsets, CsvKernel, FormatSniff, RtfKernel, TextAssembly}
+import graft.functions.{Charsets, Codecs, CsvKernel, FormatSniff, RtfKernel, TextAssembly}
 import graft.functions.office.{DocxKernel, OdtKernel, PptxKernel, XlsxKernel}
 import graft.functions.html.HtmlStream
 import graft.functions.pdf.PdfExtractor
@@ -18,7 +18,11 @@ import org.apache.spark.util.LongAccumulator
   */
 object ExtractKernel {
 
-  /** Per-row extraction — pure, total (never throws). */
+  /** Per-row extraction — pure, total (never throws). Inflated bytes per
+    * page are bounded by one envelope cap plus one kernel cap, each
+    * [[Codecs.MaxInflatedBytes]]; past either the row carries
+    * [[Codecs.OverCapError]]. PDF content-stream work is not yet bounded.
+    */
   def extractOne(p: Page): Extracted = extractOneIn(PageIn(p.url, p.warc_ts, p.html, p.lang))
 
   @inline private def orPlaceholder(t: String): String =
@@ -41,8 +45,7 @@ object ExtractKernel {
       case FormatSniff.Pdf =>
         PdfExtractor.extract(bytes) match {
           case Right(res) =>
-            val text = if (res.text.isEmpty) TextAssembly.NoText else res.text
-            Extracted(p.url, p.warc_ts, "pdf", text, "binary", "ok", null, res.nLines, nBytes)
+            Extracted(p.url, p.warc_ts, "pdf", orPlaceholder(res.text), "binary", "ok", null, res.nLines, nBytes)
           case Left(err) =>
             Extracted(p.url, p.warc_ts, "pdf", TextAssembly.NoText, "binary", "failed", err, 0, nBytes)
         }
@@ -50,8 +53,7 @@ object ExtractKernel {
         val dec = Charsets.decode(bytes, isHtml = true)
         try {
           val res = HtmlStream.extract(dec.text)
-          val text = if (res.text.isEmpty) TextAssembly.NoText else res.text
-          Extracted(p.url, p.warc_ts, "html", text, dec.charset, "ok", null, res.nBlocks, nBytes)
+          Extracted(p.url, p.warc_ts, "html", orPlaceholder(res.text), dec.charset, "ok", null, res.nBlocks, nBytes)
         } catch {
           case e: Exception =>
             Extracted(p.url, p.warc_ts, "html", TextAssembly.NoText, dec.charset, "failed",
@@ -59,8 +61,7 @@ object ExtractKernel {
         }
       case FormatSniff.Txt =>
         val dec = Charsets.decode(bytes)
-        val text = if (dec.text.isEmpty) TextAssembly.NoText else dec.text
-        Extracted(p.url, p.warc_ts, "txt", text, dec.charset, "ok", null, 1, nBytes)
+        Extracted(p.url, p.warc_ts, "txt", orPlaceholder(dec.text), dec.charset, "ok", null, 1, nBytes)
       case FormatSniff.Csv =>
         val dec = Charsets.decode(bytes)
         val (text, rows) = CsvKernel.extract(dec.text)
@@ -79,6 +80,8 @@ object ExtractKernel {
           }
           Extracted(p.url, p.warc_ts, f, orPlaceholder(text), "zip", "ok", null, blocks, nBytes)
         } catch {
+          case _: Codecs.OverCapException =>
+            Extracted(p.url, p.warc_ts, f, TextAssembly.NoText, "zip", "failed", Codecs.OverCapError, 0, nBytes)
           case e: Exception =>
             Extracted(p.url, p.warc_ts, f, TextAssembly.NoText, "zip", "failed",
               s"$f parse error: ${e.getMessage}", 0, nBytes)

@@ -23,7 +23,6 @@ import org.apache.spark.sql.DataFrame
 object ScanPar {
   def apply(df: DataFrame): DataFrame = {
     if (df.isStreaming) return df
-    if (sys.env.get("GRAFT_SCANPAR").contains("off")) return df // A/B probe knob
     val slots = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < slots) df.repartition(slots) else df
   }

@@ -71,7 +71,7 @@ object WarcIndex {
       var streamBase = 0L // cumulative decompressed offset, for non-seekable rows
       members.foreach { case (off, len) =>
         val slice = java.util.Arrays.copyOfRange(bytes, off.toInt, (off + len).toInt)
-        val body = Codecs.gunzip(slice, maxOut = 1 << 30).getOrElse(
+        val body = Codecs.gunzip(slice, maxOut = WarcReader.MaxArchiveBytes).getOrElse(
           throw new java.io.IOException(
             s"unreadable WARC archive: member at offset $off fails to inflate or exceeds 1 GiB"))
         val recs = WarcReader.rawRecordsWithOffsets(body)

@@ -111,15 +111,17 @@ object WarcReader {
     out.result()
   }
 
+  /** Decompressed bytes per gzipped archive or member (a JVM array bound). */
+  final val MaxArchiveBytes: Int = 1 << 30
+
   /** Inflate a gzipped archive envelope, or pass plain bytes through.
-    * Left = why the archive is unreadable (corrupt stream, or decompressed
-    * size past the 1 GiB cap — a JVM byte-array bound; archives beyond it
-    * must be published per-record-gzipped, where members inflate
-    * independently).
+    * Left = why the archive is unreadable (corrupt stream, or past
+    * [[MaxArchiveBytes]] — bigger archives must be per-record-gzipped,
+    * where members inflate independently).
     */
   private[graft] def inflate(archive: Array[Byte]): Either[String, Array[Byte]] =
     if (Codecs.isGzip(archive))
-      Codecs.gunzip(archive, maxOut = 1 << 30)
+      Codecs.gunzip(archive, maxOut = MaxArchiveBytes)
         .toRight("archive gunzip failed: corrupt stream or > 1 GiB decompressed")
     else Right(archive)
 

@@ -30,6 +30,36 @@ class CodecsSpec extends AnyFunSuite {
     assert(Codecs.gunzip(bomb).map(_.length) == Some(1 << 20))
   }
 
+  test("inflate: complete, truncated and over-cap outcomes; the stream is closed on every path") {
+    val data = Array.tabulate[Byte](100000)(i => (i * 7 % 251).toByte)
+    val z = InflateFixtures.zlib(data)
+    final class Tracked(in: java.io.InputStream) extends java.io.FilterInputStream(in) {
+      var closed = false
+      override def close(): Unit = { closed = true; super.close() }
+    }
+    def run(b: Array[Byte], cap: Long): (Tracked, Either[Throwable, Option[(Seq[Byte], Boolean)]]) = {
+      val t = new Tracked(Codecs.zlib(b, 0, b.length))
+      (t, try Right(Codecs.inflate(t, cap, 64).map(r => (r.bytes.toSeq, r.complete)))
+          catch { case e: java.io.IOException => Left(e) })
+    }
+    val (t1, whole) = run(z, data.length)
+    assert(whole == Right(Some((data.toSeq, true))) && t1.closed)
+    val (t2, cut) = run(java.util.Arrays.copyOf(z, z.length - 4), data.length) // no Adler-32
+    assert(cut == Right(Some((data.toSeq, false))) && t2.closed)
+    val (t3, over) = run(z, data.length - 1L)
+    assert(over == Right(None) && t3.closed)
+    val bad = z.clone(); bad(2) = 0xFF.toByte // invalid deflate block type
+    val (t4, corrupt) = run(bad, data.length)
+    assert(corrupt.isLeft && t4.closed)
+  }
+
+  test("gunzipOrWhy: the over-cap reason is distinct from a decode error") {
+    val bomb = Codecs.gzip(new Array[Byte](1 << 20))
+    assert(Codecs.gunzipOrWhy(bomb, maxOut = 1 << 10) == Left(Codecs.OverCapError))
+    assert(Codecs.gunzipOrWhy(java.util.Arrays.copyOf(bomb, bomb.length - 3)) == Left("gzip decode error"))
+    assert(Codecs.gunzipOrWhy(bomb).map(_.length) == Right(1 << 20))
+  }
+
   test("multi-member concatenated gzip decodes fully (RFC 1952 WARC shape)") {
     val a = "first member ".getBytes(StandardCharsets.UTF_8)
     val b = "second member".getBytes(StandardCharsets.UTF_8)

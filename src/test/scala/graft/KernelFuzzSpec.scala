@@ -55,6 +55,34 @@ class KernelFuzzSpec extends AnyFunSuite {
     }
   }
 
+  test("decompression bombs past the inflate cap return a closed row with the fixed error") {
+    import InflateFixtures._
+    import graft.functions.Codecs
+    val over = Codecs.MaxInflatedBytes + (1L << 20)
+    val half = Codecs.MaxInflatedBytes / 2 + (1L << 20) // two of these pass the cap together
+    val cases = Seq(
+      ("pdf Flate content stream", "pdf", "failed", pdf(Seq(Flate -> zlibZeros(over)))),
+      ("pdf, two content streams", "pdf", "failed",
+        pdf(Seq(Flate -> zlibZeros(half), Flate -> zlibZeros(half)))),
+      ("docx document.xml", "docx", "failed", zip(Seq("word/document.xml" -> Right(over)))),
+      ("xlsx sheet1.xml", "xlsx", "failed", zip(Seq(
+        "xl/workbook.xml" -> Left("<workbook><sheets><sheet name=\"S\"/></sheets></workbook>"),
+        "xl/worksheets/sheet1.xml" -> Right(over)))),
+      ("pptx slide1.xml", "pptx", "failed", zip(Seq("ppt/slides/slide1.xml" -> Right(over)))),
+      ("pptx, two slides", "pptx", "failed",
+        zip(Seq("ppt/slides/slide1.xml" -> Right(half), "ppt/slides/slide2.xml" -> Right(half)))),
+      ("odt content.xml", "odt", "failed",
+        zip(Seq("mimetype" -> Left("application/vnd.oasis.opendocument.text"), "content.xml" -> Right(over)))),
+      ("gzip envelope", "unsupported", "unsupported", gzipZeros(over)),
+      ("nested gzip", "unsupported", "unsupported", Codecs.gzip(gzipZeros(over))))
+    for ((name, format, status, payload) <- cases) {
+      assert(payload.length < (1 << 20), s"$name: the bomb itself should be small")
+      val e = ExtractKernel.extractOne(Page("u/bomb", ts, payload, null, "en"))
+      assert((e.format, e.status, e.error) == ((format, status, Codecs.OverCapError)), name)
+      assert(e.text == graft.functions.TextAssembly.NoText && e.n_bytes_in == payload.length, name)
+    }
+  }
+
   test("every pure-JDK codec decode is total on garbage: None, never a throw") {
     val rng = new scala.util.Random(11)
     val codecMagics = Seq(
