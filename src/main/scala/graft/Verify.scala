@@ -24,12 +24,25 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    dump(spark, sfDir, outDir, only)
+    spark.stop()
+  }
+
+  /** Writes each selected query's rows to `outDir/<name>` and the matching
+    * oracles to `outDir/oracle_sql.json`. Each `outDir/<name>` is deleted
+    * before its query runs, so a query that fails (reported on stderr)
+    * cannot leave an earlier run's rows for a later compare to pass on.
+    */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+           only: Option[Set[String]]): Unit = {
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
+      val out = Paths.get(outDir, name)
+      Fs.deleteRecursively(out)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+        .parquet(out.toString)
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       } finally
@@ -55,6 +68,5 @@ object Verify {
       .filter { case (k, _) => only.forall(_.contains(k)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

@@ -23,7 +23,7 @@ import java.util.regex.Pattern
 object PiiScrub {
 
   /** Portable (Java ∩ RE2) patterns — keep in sync with the SQL mirror
-    * in SparkEntry.oracleSql("p_scrub_pii").
+    * in the p_scrub_pii oracle (queries.PipelineQueries).
     */
   val EmailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
   val PhoneRe = "\\b[0-9]{3}-[0-9]{3}-[0-9]{4}\\b"

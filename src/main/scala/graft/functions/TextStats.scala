@@ -18,7 +18,7 @@ object TextStats {
 
   /** The lowercase whitespace tokenizer as a Spark UDF — the ONE
     * engine-side definition every operator shares (the oracle-side twin
-    * is SparkEntry's `tokCtesOver`): a tokenizer tweak applied anywhere
+    * is `queries.Shared.tokCtesOver`): a tokenizer tweak applied anywhere
     * else would silently diverge a driver query from the shared oracle
     * tokenization.
     */

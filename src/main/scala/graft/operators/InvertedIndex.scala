@@ -260,9 +260,6 @@ object InvertedIndex {
         F.col("col._2").as("other"), F.col("col._1").as("score"))
   }
 
-  /** Top-k docs for a bag-of-terms query under log-free BM25.
-    * Returns (doc, score, rank), rank 1-based by (score desc, doc asc).
-    */
   /** Fuzzy term search: expand each query term to every vocabulary term
     * within `maxDist` Levenshtein edits, returning the matched postings
     * (qterm, term, doc, tf) for the caller to aggregate. Scale shape:
@@ -284,6 +281,9 @@ object InvertedIndex {
       .select(F.col("qterm"), F.col("term"), F.col("doc"), F.col("tf"))
   }
 
+  /** Top-k docs for a bag-of-terms query under log-free BM25.
+    * Returns (doc, score, rank), rank 1-based by (score desc, doc asc).
+    */
   def bm25TopK(
       docs: DataFrame,
       idCol: String,

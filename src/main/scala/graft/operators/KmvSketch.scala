@@ -43,7 +43,7 @@ object KmvSketch {
 
   /** 48-bit value hash as a long column: md5-prefix arithmetic,
     * mirrored in SQL by 12-digit strpos arithmetic (see
-    * SparkEntry.md5PrefixSql).
+    * queries.Shared.md5PrefixSql).
     */
   def hash48(value: Column): Column =
     F.conv(F.substring(F.md5(value.cast("string")), 1, 12), 16, 10).cast("long")

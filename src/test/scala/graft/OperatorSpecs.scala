@@ -1313,17 +1313,23 @@ class OperatorSpecs extends AnyFunSuite {
     assert(gotHashed == got)
   }
 
-  test("wandTopK: bit-identical to exact bm25TopK, and the pruning is real") {
+  /** Skewed BM25 corpus: 'common' is stopword-like (every doc), rare terms
+    * hit few docs — exactly the shape where upper-bound pruning bites.
+    */
+  private lazy val bm25Docs = {
     import spark.implicits._
-    import graft.operators.InvertedIndex
-    // skewed corpus: 'common' is stopword-like (every doc), rare terms hit
-    // few docs — exactly the shape where upper-bound pruning bites.
-    val docs = (0L until 400L).map { i =>
+    (0L until 400L).map { i =>
       val rare =
         if (i % 97 == 0) " needle needle" else if (i % 53 == 0) " gem" else ""
       val pad = Seq.fill((i % 7).toInt + 1)("filler").mkString(" ")
       (i, s"common $pad common$rare")
     }.toDF("doc_id", "text")
+  }
+
+  test("wandTopK: bit-identical to exact bm25TopK, and the pruning is real") {
+    import spark.implicits._
+    import graft.operators.InvertedIndex
+    val docs = bm25Docs
     for (terms <- Seq(
         Seq("common", "needle", "gem"),
         Seq("needle"),
@@ -1345,6 +1351,36 @@ class OperatorSpecs extends AnyFunSuite {
     assert(nCand == 400, "every doc matches 'common'")
     assert(nSurv < nCand / 4,
       s"pruning must cut the scoring join: $nSurv of $nCand survived")
+  }
+
+  test("bm25TopKOver on one union-of-legs postings table: row-identical to bm25TopK per leg") {
+    import spark.implicits._
+    import graft.operators.InvertedIndex
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    import org.scalacheck.Prop.propBoolean
+    // the shared-postings discipline of s_hybrid_rrf / p_hard_negatives:
+    // one postings table filtered to the UNION of every leg's terms, one
+    // doc-length table and corpus row; each leg re-filters and scores
+    val docs = bm25Docs
+    val dls = InvertedIndex.docLens(docs, "doc_id", "text")
+    val corpus = dls.agg(count(lit(1)).as("n"), sum($"dl").as("sumdl"))
+    val vocab = Seq("common", "filler", "needle", "gem", "absentterm")
+    val legGen = Gen.choose(1, 3).flatMap(n => Gen.pick(n, vocab)).map(_.toSeq)
+    val prop = Prop.forAll(Gen.choose(1, 3).flatMap(Gen.listOfN(_, legGen)),
+        Gen.oneOf(3, 10, 1000)) { (legs, k) =>
+      val union = legs.flatten.distinct
+      val post = InvertedIndex.postings(docs, "doc_id", "text")
+        .filter($"term".isin(union: _*))
+      Prop.all(legs.map { terms =>
+        val shared = InvertedIndex.bm25TopKOver(post, dls, corpus, terms, topK = k)
+          .select($"doc", $"score", $"rank").collect().toSeq
+        val own = InvertedIndex.bm25TopK(docs, "doc_id", "text", terms, topK = k)
+          .select($"doc", $"score", $"rank").collect().toSeq
+        (shared == own) :| s"legs=$legs terms=$terms k=$k"
+      }: _*)
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(8), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
   }
 
   test("ZOrder: interleave bijective on bucket pairs; assignment = global sort; buckets balanced") {
