@@ -8,38 +8,29 @@ import org.apache.spark.sql.functions._
 /** The three north-rule query shapes over the pages table:
   * extract-all, resume (exact, manifest-driven), and incremental re-extract
   * (snapshot high-watermark). Join surface per SURVEY.md §2.3: the
-  * committed-manifest LEFT ANTI join (J2) — broadcast when small — is the
-  * only shuffle besides the salting exchange.
+  * committed-manifest LEFT ANTI join (J2) — broadcast when small — is
+  * resume's only shuffle; extraction itself is map-only.
   */
 object ExtractJob {
 
-  /** Full extraction of a pages dataset into a committed snapshot. */
-  def extractAll(
-      pages: Dataset[Page],
-      outRoot: String,
-      partitions: Int,
-      metrics: Option[ExtractKernel.Metrics] = None
-  ): Long = {
-    val out = ExtractKernel.extract(pages, metrics)
-    ManifestTable.commitAppend(pages.sparkSession, outRoot, out)
-  }
+  /** Full extraction of a pages dataset into a committed snapshot. The
+    * third argument is not read: the plan's parallelism is the scan's
+    * byte-bounded splits. It stays because existing callers pass it.
+    */
+  def extractAll(pages: Dataset[Page], outRoot: String, partitions: Int): Long =
+    ManifestTable.commitAppend(pages.sparkSession, outRoot, ExtractKernel.extract(pages))
 
   /** Exact resume: process only pages whose url is NOT in any committed
     * snapshot (reference analog: skip-if-output-exists, main.py:42-44,62-66).
     * The done-set is broadcast when it is small enough; otherwise Spark
     * falls back to a shuffled anti hash join — both correct at 10^12 rows.
     */
-  def resume(
-      pages: Dataset[Page],
-      outRoot: String,
-      partitions: Int,
-      metrics: Option[ExtractKernel.Metrics] = None
-  ): Long = {
+  def resume(pages: Dataset[Page], outRoot: String): Long = {
     val spark = pages.sparkSession
     import spark.implicits._
     val done = ManifestTable.committedUrls(spark, outRoot)
     val remaining = pages.join(done, Seq("url"), "left_anti").as[Page]
-    val out = ExtractKernel.extract(remaining, metrics)
+    val out = ExtractKernel.extract(remaining)
     ManifestTable.commitAppend(spark, outRoot, out)
   }
 
@@ -72,8 +63,7 @@ object ExtractJob {
       pagesTable: String,
       doneTable: String,
       outRoot: String,
-      nBuckets: Int = 64,
-      metrics: Option[ExtractKernel.Metrics] = None
+      nBuckets: Int = 64
   ): Long = {
     // reconcile UNCONDITIONALLY: on the first-ever resume the done table
     // may not exist yet while the root already has commits (a crash after
@@ -86,7 +76,7 @@ object ExtractJob {
       markIngested(outRoot, doneTable, q)
     }
     val remaining = remainingBucketed(spark, pagesTable, doneTable)
-    val out = ExtractKernel.extract(remaining, metrics)
+    val out = ExtractKernel.extract(remaining)
     val seq = ManifestTable.commitAppend(spark, outRoot, out)
     Bucketing.appendBucketed(
       ManifestTable.commitUrls(spark, outRoot, seq), doneTable, "url", nBuckets)
@@ -145,17 +135,12 @@ object ExtractJob {
   /** Incremental re-extract: only pages with warc_ts strictly newer than the
     * last snapshot's high watermark (Iceberg incremental-scan emulation).
     */
-  def incremental(
-      pages: Dataset[Page],
-      outRoot: String,
-      partitions: Int,
-      metrics: Option[ExtractKernel.Metrics] = None
-  ): Long = {
+  def incremental(pages: Dataset[Page], outRoot: String): Long = {
     val spark = pages.sparkSession
     import spark.implicits._
     val hw = ManifestTable.highWatermark(outRoot).getOrElse(0L)
     val fresh = pages.filter(unix_timestamp(col("warc_ts")) > hw).as[Page]
-    val out = ExtractKernel.extract(fresh, metrics)
+    val out = ExtractKernel.extract(fresh)
     ManifestTable.commitAppend(spark, outRoot, out)
   }
 
@@ -174,14 +159,9 @@ object ExtractJob {
     * both sides hash-shuffle on url, still column-pruned to digests.
     * Returns the committed snapshot seq.
     */
-  def upsertChanged(
-      pages: Dataset[Page],
-      outRoot: String,
-      partitions: Int,
-      metrics: Option[ExtractKernel.Metrics] = None
-  ): Long = {
+  def upsertChanged(pages: Dataset[Page], outRoot: String): Long = {
     val spark = pages.sparkSession
-    val fresh = ExtractKernel.extract(pages, metrics)
+    val fresh = ExtractKernel.extract(pages)
     ManifestTable.commitAppend(spark, outRoot, diffChanged(fresh, outRoot))
   }
 
@@ -243,12 +223,7 @@ object ExtractJob {
     * that succeeds supersedes the failed row in the latest view. Returns
     * the committed snapshot seq.
     */
-  def retryFailed(
-      pages: Dataset[Page],
-      outRoot: String,
-      partitions: Int,
-      metrics: Option[ExtractKernel.Metrics] = None
-  ): Long = {
+  def retryFailed(pages: Dataset[Page], outRoot: String): Long = {
     val spark = pages.sparkSession
     import spark.implicits._
     // readLatest is the table's most expensive read (live scan + url
@@ -261,7 +236,7 @@ object ExtractJob {
     try {
       val failed = current.filter(col("status") =!= lit("ok")).select("url")
       val todo = pages.join(failed, Seq("url")).as[Page]
-      val fresh = ExtractKernel.extract(todo, metrics)
+      val fresh = ExtractKernel.extract(todo)
       val changed = diffChangedAgainst(fresh,
         current.select(col("url"), col("__cur_digest")))
       ManifestTable.commitAppend(spark, outRoot, changed)

@@ -5,9 +5,8 @@ import graft.functions.{Charsets, Codecs, CsvKernel, FormatSniff, RtfKernel, Tex
 import graft.functions.office.{DocxKernel, OdtKernel, PptxKernel, XlsxKernel}
 import graft.functions.html.HtmlStream
 import graft.functions.pdf.PdfExtractor
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.util.LongAccumulator
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.functions.col
 
 /** The format-dispatched extraction operator (north rule): content sniff →
   * charset detect → per-format kernel, one `mapPartitions` stage so Catalyst
@@ -93,88 +92,23 @@ object ExtractKernel {
     }
   }
 
-  /** Accumulator bundle — the north rule's per-partition live metrics
-    * (reference analog: success/failure counters,
-    * simple_extract.py:318-335).
-    */
-  final case class Metrics(pages: LongAccumulator, bytes: LongAccumulator, failures: LongAccumulator)
-
-  object Metrics {
-    def register(spark: SparkSession): Metrics = Metrics(
-      spark.sparkContext.longAccumulator("graft.pages"),
-      spark.sparkContext.longAccumulator("graft.bytes"),
-      spark.sparkContext.longAccumulator("graft.failures")
-    )
-  }
-
-  private def kernelStage(pages: Dataset[Page], metrics: Option[Metrics]): Dataset[Extracted] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    // project away the golden text column BEFORE deserialization: the scan
-    // then never decodes it (visible as ReadSchema in .explain)
-    val in = pages.select(col("url"), col("warc_ts"), col("html"), col("lang")).as[PageIn]
-    in.mapPartitions { it =>
-      it.map { p =>
-        val out = extractOneIn(p)
-        metrics.foreach { m =>
-          m.pages.add(1L)
-          m.bytes.add(out.n_bytes_in)
-          if (out.status != "ok") m.failures.add(1L)
-        }
-        out
-      }
-    }
-  }
-
-  /** Map-only distributed extraction — the default physical plan.
+  /** Map-only distributed extraction — the one physical plan.
     *
     * No pre-kernel shuffle: parquet scan splits are already byte-bounded by
     * `spark.sql.files.maxPartitionBytes`, so task input sizes are balanced
     * regardless of row-size skew or hot hosts — at 1000 executors each task
     * reads ≤128 MB no matter how pages are laid out. Kernel cost is linear
-    * in bytes, so byte-bounded splits = time-bounded tasks. Shuffling 100%
-    * of the corpus to "salt" it would cost more than the imbalance it
-    * prevents (measured in BENCH.md).
+    * in bytes, so byte-bounded splits = time-bounded tasks. Per-run counts
+    * (pages, bytes, failures) come from the commit's manifest lineage
+    * ([[graft.sources.ManifestTable.latestStats]]), which stays exact when
+    * tasks retry.
     */
-  def extract(pages: Dataset[Page], metrics: Option[Metrics] = None): Dataset[Extracted] =
-    kernelStage(pages, metrics)
-
-  /** Skew-defused extraction for inputs where scan splits canNOT bound task
-    * work (e.g. a source with one row-group per huge file, or kernels with
-    * superlinear cost): giant rows (html length > giantThreshold) are
-    * salted by url hash across `giantParallelism` dedicated partitions;
-    * normal rows stay map-only. NOTE: the branch filters cannot be pushed
-    * to parquet, so this plan scans the input twice — only worth it when
-    * giant-row task skew costs more than a second scan (it does not for
-    * linear kernels over byte-bounded splits, hence extract() is the
-    * default; BENCH.md quantifies both).
-    */
-  def extractBalanced(
-      pages: Dataset[Page],
-      metrics: Option[Metrics] = None,
-      giantThreshold: Int = 256 * 1024,
-      giantParallelism: Int = 32
-  ): Dataset[Extracted] = {
+  def extract(pages: Dataset[Page]): Dataset[Extracted] = {
     val spark = pages.sparkSession
     import spark.implicits._
-    val normal = pages.filter(length(col("html")) <= giantThreshold).as[Page]
-    val giant = pages
-      .filter(length(col("html")) > giantThreshold)
-      .repartition(giantParallelism, pmod(xxhash64(col("url")), lit(giantParallelism)))
-      .as[Page]
-    kernelStage(normal, metrics).unionByName(kernelStage(giant, metrics))
-  }
-
-  /** Full salted repartition before the kernel (url-hash spread across
-    * numPartitions). Kept for corpora whose input splits are pathologically
-    * skewed; BENCH.md quantifies its shuffle overhead vs the map-only plan.
-    */
-  def extractSalted(
-      pages: Dataset[Page],
-      numPartitions: Int,
-      metrics: Option[Metrics] = None
-  ): Dataset[Extracted] = {
-    val salted = pages.repartition(numPartitions, pmod(xxhash64(col("url")), lit(numPartitions)))
-    kernelStage(salted, metrics)
+    // project away the golden text column BEFORE deserialization: the scan
+    // then never decodes it (visible as ReadSchema in .explain)
+    pages.select(col("url"), col("warc_ts"), col("html"), col("lang")).as[PageIn]
+      .mapPartitions(_.map(extractOneIn))
   }
 }

@@ -55,6 +55,7 @@ object Sharding {
     assignShards(df, keyCol, nShards)
       .repartition(nShards, md5(coalesce(col(keyCol), lit(""))))
       .sortWithinPartitions(col("shard_id"), md5(coalesce(col(keyCol), lit(""))), col(tieCol))
-      .write.mode("overwrite").partitionBy("shard_id").parquet(path)
+      .write.options(graft.Fs.ForkFreeWriteOptions).mode("overwrite")
+      .partitionBy("shard_id").parquet(path)
   }
 }

@@ -237,7 +237,7 @@ object ExtractionQueries {
         // incremental: strictly-newer pages only; early's day boundary is
         // below any later day's timestamps, so the two commits partition
         // the corpus exactly
-        graft.operators.ExtractJob.incremental(pages, root, 32)
+        graft.operators.ExtractJob.incremental(pages, root)
         val total = graft.sources.ManifestTable.read(s, root).count()
         val pruned = graft.sources.ManifestTable.prunedRead(s, root, days.head, mid)
         val nPruned = pruned.count()
@@ -282,7 +282,7 @@ object ExtractionQueries {
               encode(concat(lit("recrawl update of "), $"url"), "UTF-8"))
               .otherwise($"html"))
           .as[graft.Page]
-        val seq = graft.operators.ExtractJob.upsertChanged(recrawl, root, 32)
+        val seq = graft.operators.ExtractJob.upsertChanged(recrawl, root)
         val nCommitted = graft.sources.ManifestTable.commitUrls(s, root, seq).count()
         val latest = graft.sources.ManifestTable.readLatest(s, root)
         val nLatest = latest.count()
@@ -341,7 +341,7 @@ object ExtractionQueries {
         val recrawl = pages.join(delUrls, "url")
           .withColumn("warc_ts", ($"warc_ts".cast("long") + 86400L).cast("timestamp"))
           .as[graft.Page]
-        val seq = graft.operators.ExtractJob.upsertChanged(recrawl, root, 32)
+        val seq = graft.operators.ExtractJob.upsertChanged(recrawl, root)
         val nResCommitDiff =
           graft.sources.ManifestTable.commitUrls(s, root, seq).count() - nDel
         val latest2 = graft.sources.ManifestTable.readLatest(s, root)
@@ -386,7 +386,7 @@ object ExtractionQueries {
           .withColumn("html",
             encode(concat(lit("repaired content for "), $"url"), "UTF-8"))
           .as[graft.Page]
-        val seq = graft.operators.ExtractJob.retryFailed(repaired, root, 32)
+        val seq = graft.operators.ExtractJob.retryFailed(repaired, root)
         val nCommitted = graft.sources.ManifestTable.commitUrls(s, root, seq).count()
         val latest = graft.sources.ManifestTable.readLatest(s, root)
         val nStillFailed = latest.filter($"status" =!= "ok").count()
@@ -882,8 +882,9 @@ object ExtractionQueries {
         val firstHalf = pages.filter(xxhash64($"url") % 2 === 0).as[Page]
         val nFirst = firstHalf.count()
         graft.sources.ManifestTable.commitAppend(s, root, ExtractKernel.extract(firstHalf))
-        val m = ExtractKernel.Metrics.register(s)
-        graft.operators.ExtractJob.resumeBucketed(s, pagesTable, doneTable, root, 8, Some(m))
+        graft.operators.ExtractJob.resumeBucketed(s, pagesTable, doneTable, root, 8)
+        // the resume commit's own lineage: exact under task retries
+        val nResumed = graft.sources.ManifestTable.latestStats(root).map(_.rows).sum
         // complement plan AFTER the resume (both tables now exist): must be
         // an exchange-free bucketed SMJ even with broadcast disabled
         val rem = graft.operators.ExtractJob.remainingBucketed(s, pagesTable, doneTable)
@@ -897,7 +898,7 @@ object ExtractionQueries {
         val unmarked = graft.sources.ManifestTable.liveSeqs(root)
           .count(q => !java.nio.file.Files.exists(
             java.nio.file.Paths.get(root, "done-markers", doneTable, q.toString)))
-        Seq((m.pages.value - (nPages - nFirst), nDup, nMissing,
+        Seq((nResumed - (nPages - nFirst), nDup, nMissing,
           unmarked.toLong, nExchange, 1L - smjAnti))
           .toDF("n_reprocessed", "n_dup_urls", "n_missing_urls",
             "n_unmarked_commits", "n_exchanges", "n_not_smj_anti")

@@ -14,7 +14,10 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *
   * Bucketing needs a catalog table (parquet path reads carry no bucket
   * metadata), hence saveAsTable; the session's warehouse dir is the
-  * storage seam.
+  * storage seam. These writes keep Hadoop's default local filesystem, which
+  * without native libhadoop starts a `chmod` process per file:
+  * `saveAsTable` would persist [[graft.Fs.ForkFreeWriteOptions]] into the
+  * table's properties.
   */
 object Bucketing {
 

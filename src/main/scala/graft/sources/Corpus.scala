@@ -105,7 +105,7 @@ object Corpus {
       )
       generate(spark, n, partitions = 64)
         .withColumn("format", sniffUdf(org.apache.spark.sql.functions.col("html")))
-        .write.mode("overwrite").parquet(path)
+        .write.options(graft.Fs.ForkFreeWriteOptions).mode("overwrite").parquet(path)
     }
     spark.read.parquet(path).as[Page]
   }

@@ -58,7 +58,7 @@ object LakeFormats {
     val schema = df.schema
     val perFormat = Formats.map { fmt =>
       val path = s"$baseDir/$fmt"
-      val writer = df.write.mode("overwrite").format(fmt)
+      val writer = df.write.options(graft.Fs.ForkFreeWriteOptions).mode("overwrite").format(fmt)
       val configured = fmt match {
         // RFC 4180 quoting: escape = quote char (doubled quotes), header
         // for the read-back schema-by-name mapping. The writer's

@@ -116,36 +116,39 @@ object ManifestTable {
     if (committedStreamBatchIds(root).contains(batchId)) None
     else Some(commitInternal(spark, root, batch, streamBatchId = Some(batchId)))
 
-  /** Rewrite the whole live table as ONE snapshot whose manifest lists only
+  /** Rewrite the live table as ONE snapshot whose manifest lists only
     * itself as live — the Iceberg-compaction analog. Commit directories
     * otherwise accumulate forever (10^4 incremental commits = 10^4
     * directories on every read listing); after compaction read() touches
     * one directory and [[vacuum]] may reclaim the dead ones. History
     * (manifests, high watermark, stream batch ids) is preserved.
+    *
+    * The snapshot holds the latest-commit winner per url, [[deleteUrls]]
+    * tombstones included, so [[readLatest]] reads the same rows before and
+    * after: one commit holds no superseded row whose `warc_ts` could
+    * out-rank its successor. [[read]] no longer returns superseded rows.
     */
-  def compact(spark: SparkSession, root: String): Long = withCommitLock(root) {
-    import spark.implicits._
-    // derive + commit under ONE lock hold: read() pins the live set
-    // eagerly, so without the outer lock an append landing between the pin
-    // and the compaction commit would be silently dropped from the
-    // replacement snapshot (compaction rewrites live=[self])
-    val snapshot = read(spark, root).as[Extracted]
-    commitInternal(spark, root, snapshot, streamBatchId = None, compaction = true)
-  }
+  def compact(spark: SparkSession, root: String): Long =
+    compactTo(spark, root)(latestWinners(spark, root))
 
-  /** Copy-on-write MERGE materialization: commit a compaction snapshot
-    * holding only the [[readLatest]] winners, so recrawl supersession paid
-    * per-read by the merge-on-read window collapses back to a plain scan
-    * (read-amplification O(1), the Iceberg rewrite-data-files analog for
-    * equality deletes). Same O(table) cost and history preservation as
-    * [[compact]]; run [[vacuum]] after to reclaim superseded rows' storage.
+  /** Copy-on-write MERGE materialization: [[compact]] without the
+    * tombstones, so the snapshot holds exactly the [[readLatest]] rows and
+    * deleted urls' data is gone (read-amplification O(1), the Iceberg
+    * rewrite-data-files analog for equality deletes). Run [[vacuum]] after
+    * to reclaim the superseded and deleted rows' storage.
     */
-  def compactLatest(spark: SparkSession, root: String): Long = withCommitLock(root) {
-    import spark.implicits._
-    // same derive+commit atomicity argument as [[compact]]
-    val winners = readLatest(spark, root).as[Extracted]
-    commitInternal(spark, root, winners, streamBatchId = None, compaction = true)
-  }
+  def compactLatest(spark: SparkSession, root: String): Long =
+    compactTo(spark, root)(readLatest(spark, root))
+
+  private def compactTo(spark: SparkSession, root: String)(derive: => DataFrame): Long =
+    withCommitLock(root) {
+      import spark.implicits._
+      // derive + commit under ONE lock hold: the derive pins the live set
+      // eagerly, so without the outer lock an append landing between the
+      // pin and the compaction commit would be silently dropped from the
+      // replacement snapshot (compaction rewrites live=[self])
+      commitInternal(spark, root, derive.as[Extracted], streamBatchId = None, compaction = true)
+    }
 
   /** Iceberg expire-snapshots analog — BOUNDED time-travel retention: keep
     * only the LAST `keepLast` published snapshots readable via [[readAsOf]];
@@ -343,43 +346,45 @@ object ManifestTable {
     seq
   }
 
-  /** Read full table state — ONLY data listed by published manifests, hidden
-    * columns stripped. Listing cost is O(published commits), and a torn
-    * (data-moved-but-unpublished) commit is never read.
-    */
   /** Fixed data schema — supplied explicitly so a table whose committed
     * snapshots are all empty (0-row no-op commits) still reads as an empty
     * DataFrame instead of failing schema inference.
     */
   private val dataSchema = org.apache.spark.sql.Encoders.product[Extracted].schema
 
-  def read(spark: SparkSession, root: String): DataFrame = {
-    val seqs = liveSeqs(root)
-    require(seqs.nonEmpty, s"no committed snapshots under $root")
-    val dirs = seqs.map(q => commitDir(root, q).toString)
+  /** The rows of the commits `seqs`, with the hidden `p_day` and
+    * `commit_seq` partition columns still attached. Every table read goes
+    * through here.
+    */
+  private def scan(spark: SparkSession, root: String, seqs: Seq[Long]): DataFrame =
     spark.read
       .option("basePath", dataPath(root))
       .schema(dataSchema)
-      .parquet(dirs: _*)
-      .drop("p_day", "commit_seq")
+      .parquet(seqs.map(q => commitDir(root, q).toString): _*)
+
+  /** The live commit seqs; a root without a committed snapshot fails. */
+  private def liveOrFail(root: String): Seq[Long] = {
+    val seqs = liveSeqs(root)
+    require(seqs.nonEmpty, s"no committed snapshots under $root")
+    seqs
   }
+
+  /** Read full table state — ONLY data listed by published manifests, hidden
+    * columns stripped. Listing cost is O(published commits), and a torn
+    * (data-moved-but-unpublished) commit is never read.
+    */
+  def read(spark: SparkSession, root: String): DataFrame =
+    scan(spark, root, liveOrFail(root)).drop("p_day", "commit_seq")
 
   /** Read with hidden-partition pruning: a warc_ts day range is translated to
     * p_day directory predicates BEFORE the scan, so only matching partition
     * directories are listed/read — the emulated Iceberg hidden-partitioning
     * benefit (SURVEY.md §4.2).
     */
-  def prunedRead(spark: SparkSession, root: String, fromDay: String, toDay: String): DataFrame = {
-    val seqs = liveSeqs(root)
-    require(seqs.nonEmpty, s"no committed snapshots under $root")
-    val dirs = seqs.map(q => commitDir(root, q).toString)
-    spark.read
-      .option("basePath", dataPath(root))
-      .schema(dataSchema)
-      .parquet(dirs: _*)
+  def prunedRead(spark: SparkSession, root: String, fromDay: String, toDay: String): DataFrame =
+    scan(spark, root, liveOrFail(root))
       .filter(col("p_day").cast("string") >= fromDay && col("p_day").cast("string") <= toDay)
       .drop("p_day", "commit_seq")
-  }
 
   /** Status value marking a url-level delete; a tombstone row is a normal
     * committed row with this status, so deletes ride the exact same
@@ -435,20 +440,20 @@ object ManifestTable {
     * At 10^12 rows amortize that shuffle by calling [[compactLatest]]
     * periodically — reads between recrawls then skip the window entirely.
     */
-  def readLatest(spark: SparkSession, root: String): DataFrame = {
-    val seqs = liveSeqs(root)
-    require(seqs.nonEmpty, s"no committed snapshots under $root")
-    val dirs = seqs.map(q => commitDir(root, q).toString)
+  def readLatest(spark: SparkSession, root: String): DataFrame =
+    latestWinners(spark, root).filter(col("status") =!= DeletedStatus)
+
+  /** The latest-commit winner per url over the live commits, tombstones
+    * included — the one window behind [[readLatest]], [[compact]] and
+    * [[compactLatest]].
+    */
+  private def latestWinners(spark: SparkSession, root: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("url"))
       .orderBy(col("commit_seq").cast("long").desc, col("warc_ts").desc)
-    spark.read
-      .option("basePath", dataPath(root))
-      .schema(dataSchema)
-      .parquet(dirs: _*)
+    scan(spark, root, liveOrFail(root))
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
-      .filter(col("status") =!= DeletedStatus)
       .drop("__rn", "p_day", "commit_seq")
   }
 
@@ -461,14 +466,8 @@ object ManifestTable {
     */
   def commitUrls(spark: SparkSession, root: String, seq: Long): DataFrame = {
     import spark.implicits._
-    val dir = commitDir(root, seq)
-    if (!graft.Fs.hasParquetFiles(dir)) spark.createDataset(Seq.empty[String]).toDF("url")
-    else
-      spark.read
-        .option("basePath", dataPath(root))
-        .schema(dataSchema)
-        .parquet(dir.toString)
-        .select("url")
+    if (graft.Fs.hasParquetFiles(commitDir(root, seq))) scan(spark, root, Seq(seq)).select("url")
+    else spark.createDataset(Seq.empty[String]).toDF("url")
   }
 
   /** Committed url set for resume (anti-join right side). */
@@ -639,16 +638,11 @@ $parts
     require(ms.nonEmpty, s"no published snapshot with seq <= $asOfSeq under $root")
     val seqs = liveSeqsOf(ms.last)
     require(seqs.nonEmpty, s"snapshot ${seqOf(ms.last)} under $root is empty")
-    val dirs = seqs.map(q => commitDir(root, q))
-    dirs.find(d => !Files.exists(d)).foreach { d =>
+    seqs.map(q => commitDir(root, q)).find(d => !Files.exists(d)).foreach { d =>
       throw new IllegalStateException(
         s"snapshot $asOfSeq references vacuumed data $d; its time-travel window has expired")
     }
-    spark.read
-      .option("basePath", dataPath(root))
-      .schema(dataSchema)
-      .parquet(dirs.map(_.toString): _*)
-      .drop("p_day", "commit_seq")
+    scan(spark, root, seqs).drop("p_day", "commit_seq")
   }
 
   /** Canonical per-row fingerprint (SQL text so the write-side observe
@@ -723,8 +717,7 @@ $parts
     */
   def verifyIntegrity(spark: SparkSession, root: String): Seq[IntegrityReport] = {
     import spark.implicits._
-    val seqs = liveSeqs(root)
-    require(seqs.nonEmpty, s"no committed snapshots under $root")
+    val seqs = liveOrFail(root)
     val manifests: Map[Long, String] = listManifests(root)
       .map(p => seqOf(p) -> Files.readString(p))
       .toMap
@@ -737,10 +730,7 @@ $parts
     val (present, vanished) = seqs.partition(q => Files.exists(commitDir(root, q)))
     val actual: Map[Long, (Long, Long)] =
       if (present.isEmpty) Map.empty
-      else spark.read
-        .option("basePath", dataPath(root))
-        .schema(dataSchema)
-        .parquet(present.map(q => commitDir(root, q).toString): _*)
+      else scan(spark, root, present)
         .groupBy(col("commit_seq").cast("long").as("seq"))
         .agg(expr(s"bit_xor($RowFpSql)").as("fp"), count(lit(1)).as("n"))
         .as[(Long, Long, Long)]

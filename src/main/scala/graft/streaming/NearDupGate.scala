@@ -103,9 +103,11 @@ object NearDupGate {
       val admitted = Dedup.keepRepresentatives(keptVsStore, "id", inBatch)
         .localCheckpoint(true)
       // 3. deterministic batch dirs, then the atomic marker = the commit
-      admitted.write.mode("overwrite").parquet(s"$root/docs/batch=$batchId")
+      admitted.write.options(graft.Fs.ForkFreeWriteOptions).mode("overwrite")
+        .parquet(s"$root/docs/batch=$batchId")
       Dedup.minhashIndex(admitted, "id", "text", ShingleK, Bands, RowsPerBand)
-        .write.mode("overwrite").parquet(s"$root/index/batch=$batchId")
+        .write.options(graft.Fs.ForkFreeWriteOptions).mode("overwrite")
+        .parquet(s"$root/index/batch=$batchId")
       val n = admitted.count()
       store.unpersist()
       val commits = Paths.get(root, "_commits")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.ExtractJob
+import graft.operators.{ExtractJob, Sharding}
 import graft.sources.{Corpus, ManifestTable}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
@@ -13,9 +13,10 @@ import java.nio.file.attribute.PosixFilePermissions
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
-/** The commit's staged write sets file and directory modes in-process
-  * ([[ForkFreeLocalFileSystem]]): the same modes as Hadoop's default local
-  * filesystem, and no `chmod` child process per file.
+/** The commit's staged write and the engine's other path writes set file
+  * and directory modes in-process ([[ForkFreeLocalFileSystem]]): the same
+  * modes as Hadoop's default local filesystem, and no `chmod` child process
+  * per file.
   */
 class ForkFreeFsSpec extends AnyFunSuite {
 
@@ -96,6 +97,7 @@ class ForkFreeFsSpec extends AnyFunSuite {
       ExtractJob.extractAll(pages, root.toString, 4)
       ManifestTable.deleteUrls(spark, root.toString, pages.select("url").limit(3),
         java.sql.Timestamp.valueOf("2025-02-01 12:00:00"))
+      Sharding.writeSharded(pages.toDF(), root.resolve("shards").toString, "url", "warc_ts", 4)
       // a process that is recorded, so an empty result cannot mean "no recording"
       assert(new ProcessBuilder("sh", "-c", "exit 0", probe.toString).start().waitFor() == 0)
       rec.stop()
@@ -106,6 +108,7 @@ class ForkFreeFsSpec extends AnyFunSuite {
         .map(_.getString("command"))
       assert(commands.exists(_.contains(probe.toString)), s"${commands.size} recorded")
       assert(ManifestTable.snapshots(root.toString).size == 2)
+      assert(Fs.hasParquetFiles(root.resolve("shards")), "the sharded write wrote no files")
       assert(ManifestTable.read(spark, root.toString).select("warc_ts")
         .agg(countDistinct(to_date(col("warc_ts")))).head().getLong(0) > 2L,
         "the commit must span several p_day directories")

@@ -81,7 +81,7 @@ class ManifestModelSpec extends AnyFunSuite {
           }
           // upsertChanged requires unique urls per batch (extract contract)
           val uniq = batch.groupBy(_.url).map(_._2.head).toSeq
-          ExtractJob.upsertChanged(uniq.toDS(), root, 4)
+          ExtractJob.upsertChanged(uniq.toDS(), root)
           uniq.foreach(applyUpsertRule)
           check(s"upsert#$op")
         case r if r < 7 => // takedown 1-2 urls (possibly never-committed ones)
@@ -94,7 +94,7 @@ class ManifestModelSpec extends AnyFunSuite {
         case r if r < 9 => // retry failures with repaired bodies
           val repaired = pool.map(u => nextPage(u, s"repaired $u".getBytes("UTF-8")))
           val failedNow = model.collect { case (u, (_, st)) if st != "ok" => u }.toSet
-          ExtractJob.retryFailed(repaired.toDS(), root, 4)
+          ExtractJob.retryFailed(repaired.toDS(), root)
           repaired.filter(p => failedNow.contains(p.url)).foreach(applyUpsertRule)
           check(s"retry#$op")
         case _ => // physical compaction must be invisible to readers

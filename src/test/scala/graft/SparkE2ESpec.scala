@@ -11,7 +11,7 @@ import scala.util.Using
 
 /** End-to-end pipeline tests under a real SparkSession (FIXTURES.md §5):
   * golden byte-identity via the J3 join, determinism under repartition,
-  * exact resume from manifests, incremental re-extract, lineage metrics.
+  * exact resume from manifests, incremental re-extract, commit lineage.
   */
 class SparkE2ESpec extends AnyFunSuite {
 
@@ -29,10 +29,15 @@ class SparkE2ESpec extends AnyFunSuite {
 
   private val N = 400L
 
+  /** Rows the latest commit wrote, from its manifest lineage (exact when
+    * tasks retry).
+    */
+  private def lastCommitRows(root: String): Long = ManifestTable.latestStats(root).map(_.rows).sum
+
   test("golden join: 0 mismatches over the synthetic corpus (byte identity)") {
     import spark.implicits._
     val pages = Corpus.generate(spark, N, 8).cache()
-    val extracted = ExtractKernel.extractBalanced(pages)
+    val extracted = ExtractKernel.extract(pages)
     val bad = ExtractJob.mismatches(pages, extracted)
     val rows = bad.collect()
     assert(rows.isEmpty, s"${rows.length} mismatches, first: ${rows.headOption}")
@@ -46,25 +51,10 @@ class SparkE2ESpec extends AnyFunSuite {
     import spark.implicits._
     val pages = Corpus.generate(spark, 120L, 4).cache()
     val results = Seq(1, 8, 32).map { k =>
-      ExtractKernel.extractSalted(pages, k).orderBy($"url").collect().toSeq
-    } :+ ExtractKernel.extract(pages).orderBy($"url").collect().toSeq :+
-      ExtractKernel.extractBalanced(pages, giantThreshold = 4096).orderBy($"url").collect().toSeq
+      ExtractKernel.extract(pages.repartition(k)).orderBy($"url").collect().toSeq
+    } :+ ExtractKernel.extract(pages).orderBy($"url").collect().toSeq
     assert(results.forall(_ == results.head))
     pages.unpersist()
-  }
-
-  test("metrics accumulators count pages, bytes, failures") {
-    import spark.implicits._
-    val pages = Corpus.generate(spark, 200L, 4)
-    val m = ExtractKernel.Metrics.register(spark)
-    // cache: accumulators count once per computed partition; without caching
-    // a second action would re-run the kernel and double-count
-    val out = ExtractKernel.extractBalanced(pages, Some(m)).cache()
-    val total = out.count()
-    assert(m.pages.value == total)
-    assert(m.bytes.value > 0L)
-    val fails = out.filter($"status" =!= "ok").count()
-    assert(m.failures.value == fails)
   }
 
   test("resume processes exactly the un-committed complement") {
@@ -79,9 +69,8 @@ class SparkE2ESpec extends AnyFunSuite {
     assert(ManifestTable.read(spark, root).count() == nFirst)
 
     // resume with the FULL input: only the complement must be processed
-    val m = ExtractKernel.Metrics.register(spark)
-    ExtractJob.resume(pages, root, 4, Some(m))
-    assert(m.pages.value == 300L - nFirst, s"resume processed ${m.pages.value}, expected ${300L - nFirst}")
+    ExtractJob.resume(pages, root)
+    assert(lastCommitRows(root) == 300L - nFirst, s"resume processed ${lastCommitRows(root)}, expected ${300L - nFirst}")
 
     // final table state == full-run table state
     val finalTable = ManifestTable.read(spark, root)
@@ -104,10 +93,9 @@ class SparkE2ESpec extends AnyFunSuite {
     val hw = ManifestTable.highWatermark(root).get
     assert(hw > 0)
 
-    val m = ExtractKernel.Metrics.register(spark)
-    ExtractJob.incremental(pages, root, 4, Some(m))
+    ExtractJob.incremental(pages, root)
     val expectedNew = pages.filter(unix_timestamp($"warc_ts") > hw).count()
-    assert(m.pages.value == expectedNew)
+    assert(lastCommitRows(root) == expectedNew)
     assert(ManifestTable.read(spark, root).count() == nOld + expectedNew)
     pages.unpersist()
   }
@@ -159,9 +147,8 @@ class SparkE2ESpec extends AnyFunSuite {
     // reads are manifest-scoped: torn rows invisible
     assert(ManifestTable.read(spark, root).count() == nCommitted)
     // resume re-processes the torn complement exactly once (no double rows)
-    val m = ExtractKernel.Metrics.register(spark)
-    ExtractJob.resume(pages, root, 4, Some(m))
-    assert(m.pages.value == 100L - nCommitted)
+    ExtractJob.resume(pages, root)
+    assert(lastCommitRows(root) == 100L - nCommitted)
     val finalTable = ManifestTable.read(spark, root)
     assert(finalTable.count() == 100L)
     assert(finalTable.select("url").distinct().count() == 100L)
@@ -175,9 +162,8 @@ class SparkE2ESpec extends AnyFunSuite {
     ExtractJob.extractAll(pages, root, 4)
     // everything is committed: resume's remaining set is EMPTY — the staged
     // write then contains no parquet files, which must not break the commit
-    val m = ExtractKernel.Metrics.register(spark)
-    val seq = ExtractJob.resume(pages, root, 4, Some(m))
-    assert(m.pages.value == 0L)
+    val seq = ExtractJob.resume(pages, root)
+    assert(lastCommitRows(root) == 0L)
     assert(seq == 1L)
     assert(ManifestTable.latestStats(root).isEmpty) // 0-row snapshot
     assert(ManifestTable.read(spark, root).count() == 60L)
@@ -210,9 +196,8 @@ class SparkE2ESpec extends AnyFunSuite {
     assert(ManifestTable.read(spark, root).count() == 90L, "vacuum must not touch live data")
 
     // appends after compaction extend the live set normally; resume exact
-    val m = ExtractKernel.Metrics.register(spark)
-    ExtractJob.resume(pages, root, 4, Some(m))
-    assert(m.pages.value == 0L) // everything already committed
+    ExtractJob.resume(pages, root)
+    assert(lastCommitRows(root) == 0L) // everything already committed
     assert(ManifestTable.liveSeqs(root) == Seq(cseq, cseq + 1))
     pages.unpersist()
   }
@@ -272,8 +257,8 @@ class SparkE2ESpec extends AnyFunSuite {
       assert(all.stats.size > 1, s"one p_day only: ${all.stats}")
       assert(all.stats.map(_.failures).sum > 0, "the corpus must hold failed/unsupported rows")
 
-      CommitOracle.check(spark, root, ExtractJob.resume(pages, root, 4))
-      val empty = CommitOracle.check(spark, root, ExtractJob.resume(pages, root, 4))
+      CommitOracle.check(spark, root, ExtractJob.resume(pages, root))
+      val empty = CommitOracle.check(spark, root, ExtractJob.resume(pages, root))
       assert(empty == CommitOracle.Lineage(Nil, 0L, 0L))
 
       val gone = pages.select($"url").limit(7)
@@ -282,7 +267,7 @@ class SparkE2ESpec extends AnyFunSuite {
       assert(tomb.stats.map(s => (s.p_day, s.rows, s.failures)) == Seq(("2025-02-01", 7L, 7L)))
 
       val c = CommitOracle.check(spark, root, ManifestTable.compact(spark, root))
-      assert(c.stats.map(_.rows).sum == 407L)
+      assert(c.stats.map(_.rows).sum == 400L)
       val cl = CommitOracle.check(spark, root, ManifestTable.compactLatest(spark, root))
       assert(cl.stats.map(_.rows).sum == 393L)
     } finally {
@@ -310,51 +295,14 @@ class SparkE2ESpec extends AnyFunSuite {
     } finally Fs.deleteRecursively(java.nio.file.Paths.get(root))
   }
 
-  /** Jobs, stages and shuffle bytes (read + written) that `body` ran. */
-  private def census(body: => Unit): (Int, Int, Long) = {
-    import org.apache.spark.scheduler._
-    val sc = spark.sparkContext
-    val drain = "census-drain"
-    val jobs, stages, drained = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val shuffle = new java.util.concurrent.atomic.AtomicLong()
-    def counted(props: java.util.Properties) =
-      props == null || props.getProperty("spark.jobGroup.id") != drain
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (counted(e.properties)) jobs.add(e.jobId)
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = { drained.add(e.jobId); () }
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        if (counted(e.properties)) stages.add(e.stageInfo.stageId)
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (stages.contains(e.stageId) && e.taskMetrics != null) {
-          shuffle.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten +
-            e.taskMetrics.shuffleReadMetrics.totalBytesRead)
-          ()
-        }
-    }
-    sc.addSparkListener(l)
-    try {
-      body
-      // listener events arrive in order: once a marker job's end is seen,
-      // every event of `body` has been seen too
-      sc.setJobGroup(drain, drain)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val marker = sc.statusTracker.getJobIdsForGroup(drain).max
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!drained.contains(marker) && System.nanoTime() < deadline) Thread.sleep(5)
-      assert(drained.contains(marker), "listener events did not drain within 30 s")
-      (jobs.size, stages.size, shuffle.get)
-    } finally sc.removeSparkListener(l)
-  }
-
   test("job census: a map-only extractAll commit is one job, one stage, no shuffle") {
     val root = tmpRoot("census")
     try {
       val pages = Corpus.generate(spark, 80L, 4)
-      assert(census(ExtractJob.extractAll(pages, root, 4)) == ((1, 1, 0L)),
+      assert(JobCensus.of(spark)(ExtractJob.extractAll(pages, root, 4)) == JobCensus.Counts(1, 1, 0L),
         "lineage must ride the staged write, not a read-back of the staged files")
-      assert(ManifestTable.latestStats(root).map(_.rows).sum == 80L)
-      val (jobs, _, _) = census(ExtractJob.extractAll(pages.limit(0), root, 4))
+      assert(lastCommitRows(root) == 80L)
+      val jobs = JobCensus.of(spark)(ExtractJob.extractAll(pages.limit(0), root, 4)).jobs
       assert(jobs <= 1, s"an empty commit ran $jobs jobs")
     } finally Fs.deleteRecursively(java.nio.file.Paths.get(root))
   }
@@ -391,10 +339,9 @@ class SparkE2ESpec extends AnyFunSuite {
       val half = pages.filter(xxhash64($"url") % 2 === 0)
       val nHalf = half.count()
       ManifestTable.commitAppend(spark, root, graft.operators.ExtractKernel.extract(half))
-      val m = graft.operators.ExtractKernel.Metrics.register(spark)
-      ExtractJob.resumeBucketed(spark, pagesTable, doneTable, root, 8, Some(m))
-      assert(m.pages.value == 120L - nHalf,
-        s"first-run heal must skip the ${nHalf} committed pages, processed ${m.pages.value}")
+      ExtractJob.resumeBucketed(spark, pagesTable, doneTable, root, 8)
+      assert(lastCommitRows(root) == 120L - nHalf,
+        s"first-run heal must skip the ${nHalf} committed pages, processed ${lastCommitRows(root)}")
       val table = ManifestTable.read(spark, root)
       assert(table.count() == 120L)
       assert(table.groupBy($"url").count().filter($"count" > 1).count() == 0L,
@@ -436,21 +383,19 @@ class SparkE2ESpec extends AnyFunSuite {
       assert(plan.contains("SortMergeJoin") && plan.contains("LeftAnti"), s"plan:\n$plan")
       assert(!plan.contains("Exchange"), s"bucketed resume must not shuffle either side:\n$plan")
 
-      val m = ExtractKernel.Metrics.register(spark)
-      ExtractJob.resumeBucketed(spark, pagesTable, doneTable, root, 8, Some(m))
-      assert(m.pages.value == 300L - nFirst, s"processed ${m.pages.value}, expected ${300L - nFirst}")
+        ExtractJob.resumeBucketed(spark, pagesTable, doneTable, root, 8)
+      assert(lastCommitRows(root) == 300L - nFirst, s"processed ${lastCommitRows(root)}, expected ${300L - nFirst}")
 
       // identical to the unbucketed resume on the reference root
-      ExtractJob.resume(pages, rootRef, 4)
+      ExtractJob.resume(pages, rootRef)
       val got = ManifestTable.read(spark, root).orderBy($"url").collect().toSeq
       val ref = ManifestTable.read(spark, rootRef).orderBy($"url").collect().toSeq
       assert(got == ref, s"bucketed resume diverged: got ${got.length} rows, ref ${ref.length}")
 
       // the commit appended its own urls to the done-set: a second resume
       // finds nothing WITHOUT a rebuild
-      val m2 = ExtractKernel.Metrics.register(spark)
-      ExtractJob.resumeBucketed(spark, pagesTable, doneTable, root, 8, Some(m2))
-      assert(m2.pages.value == 0L, s"re-resume reprocessed ${m2.pages.value} pages")
+      ExtractJob.resumeBucketed(spark, pagesTable, doneTable, root, 8)
+      assert(lastCommitRows(root) == 0L, s"re-resume reprocessed ${lastCommitRows(root)} pages")
       assert(ManifestTable.read(spark, root).count() == 300L)
 
       // CRASH WINDOW: a commit is published but the process dies before its
@@ -464,10 +409,9 @@ class SparkE2ESpec extends AnyFunSuite {
         ManifestTable.commitAppend(spark, root, ExtractKernel.extract(extra))
         // re-register the extra pages in the pages table so resume sees them
         graft.sources.Bucketing.appendBucketed(extra.toDF(), pagesTable, "url", 8)
-        val m3 = ExtractKernel.Metrics.register(spark)
-        ExtractJob.resumeBucketed(spark, pagesTable, doneTable, root, 8, Some(m3))
-        assert(m3.pages.value == 0L,
-          s"crash-reconcile failed: re-extracted ${m3.pages.value} already-committed pages")
+        ExtractJob.resumeBucketed(spark, pagesTable, doneTable, root, 8)
+        assert(lastCommitRows(root) == 0L,
+          s"crash-reconcile failed: re-extracted ${lastCommitRows(root)} already-committed pages")
         val dupes = ManifestTable.read(spark, root)
           .groupBy($"url").count().filter($"count" > 1).count()
         assert(dupes == 0L, s"$dupes urls duplicated after crash recovery")

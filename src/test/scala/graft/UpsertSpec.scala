@@ -60,7 +60,7 @@ class UpsertSpec extends AnyFunSuite {
         page("u/a", 2, "alpha"),
         page("u/b", 2, "beta CHANGED"),
         page("u/c", 2, "gamma")).toDS()
-      val seq = ExtractJob.upsertChanged(batch, root, 4)
+      val seq = ExtractJob.upsertChanged(batch, root)
       val committed = ManifestTable.commitUrls(spark, root, seq)
         .as[String].collect().toSet
       assert(committed === Set("u/b", "u/c"), s"committed: $committed")
@@ -79,7 +79,7 @@ class UpsertSpec extends AnyFunSuite {
       val v1 = Seq(page("u/a", 1, "one"), page("u/b", 1, "two")).toDS()
       ManifestTable.commitAppend(spark, root, ExtractKernel.extract(v1))
       ExtractJob.upsertChanged(
-        Seq(page("u/a", 2, "one PRIME")).toDS(), root, 4)
+        Seq(page("u/a", 2, "one PRIME")).toDS(), root)
       ManifestTable.compactLatest(spark, root)
       assert(ManifestTable.vacuum(root).length === 2)
       // post-compaction the plain read IS the latest view
@@ -107,7 +107,7 @@ class UpsertSpec extends AnyFunSuite {
       val fresh = ExtractKernel.extract(batch)
       assert(fresh.filter($"status" === "ok").count() === 0L,
         "corrupt payload must not extract ok")
-      val seq = ExtractJob.upsertChanged(batch, root, 4)
+      val seq = ExtractJob.upsertChanged(batch, root)
       assert(ManifestTable.commitUrls(spark, root, seq).count() === 0L,
         "failed re-extraction of an existing url must not commit")
       val latest = ManifestTable.readLatest(spark, root)
@@ -116,7 +116,7 @@ class UpsertSpec extends AnyFunSuite {
       // but a failed NEW url still commits (failure visibility)
       val batch2 = Seq(Page("u/new", Timestamp.valueOf("2024-01-02 00:00:00"),
         corrupt, null, "en")).toDS()
-      val seq2 = ExtractJob.upsertChanged(batch2, root, 4)
+      val seq2 = ExtractJob.upsertChanged(batch2, root)
       assert(ManifestTable.commitUrls(spark, root, seq2).count() === 1L)
     } finally graft.Fs.deleteRecursively(java.nio.file.Paths.get(root))
   }
@@ -134,13 +134,13 @@ class UpsertSpec extends AnyFunSuite {
       // retry 1: payload still corrupt -> same placeholder, nothing commits
       val seq1 = ExtractJob.retryFailed(
         Seq(Page("u/bad", Timestamp.valueOf("2024-01-02 00:00:00"), corrupt, null, "en"),
-          page("u/good", 2, "fine text")).toDS(), root, 4)
+          page("u/good", 2, "fine text")).toDS(), root)
       assert(ManifestTable.commitUrls(spark, root, seq1).count() === 0L)
       // retry 2: repaired payload heals ONLY u/bad (u/good in the batch is
       // filtered out by the failed-set join, so its changed body is ignored)
       val seq2 = ExtractJob.retryFailed(
         Seq(page("u/bad", 3, "recovered body"),
-          page("u/good", 3, "DIFFERENT body")).toDS(), root, 4)
+          page("u/good", 3, "DIFFERENT body")).toDS(), root)
       assert(ManifestTable.commitUrls(spark, root, seq2)
         .as[String].collect().toSet === Set("u/bad"))
       val latest = ManifestTable.readLatest(spark, root)
@@ -157,7 +157,7 @@ class UpsertSpec extends AnyFunSuite {
     val root = tmpRoot("bootstrap")
     try {
       val seq = ExtractJob.upsertChanged(
-        Seq(page("u/a", 1, "alpha"), page("u/b", 1, "beta")).toDS(), root, 4)
+        Seq(page("u/a", 1, "alpha"), page("u/b", 1, "beta")).toDS(), root)
       assert(ManifestTable.commitUrls(spark, root, seq).count() === 2L)
       assert(ManifestTable.readLatest(spark, root).count() === 2L)
     } finally graft.Fs.deleteRecursively(java.nio.file.Paths.get(root))
@@ -184,6 +184,37 @@ class UpsertSpec extends AnyFunSuite {
     } finally graft.Fs.deleteRecursively(java.nio.file.Paths.get(root))
   }
 
+  test("compact and compactLatest keep readLatest's winners when ts order disagrees with commit order") {
+    import spark.implicits._
+    val pages = Corpus.generate(spark, 60, 4).cache()
+    val root = tmpRoot("compact-winners")
+    try {
+      ExtractJob.extractAll(pages, root, 4) // 2025-01 rows
+      val urls = pages.select($"url").as[String].collect().sorted
+      // tombstones dated BEFORE the rows they delete
+      ManifestTable.deleteUrls(spark, root, urls.take(7).toSeq.toDF("url"),
+        Timestamp.valueOf("2024-03-01 00:00:00"))
+      // an upsert dated before the row it supersedes
+      val older = Page(urls(7), Timestamp.valueOf("2024-06-01 00:00:00"),
+        "older recrawl".getBytes("UTF-8"), null, "en")
+      ExtractJob.upsertChanged(Seq(older).toDS(), root)
+      def latest() = ManifestTable.readLatest(spark, root).orderBy($"url").collect().toSeq
+      val before = latest()
+      assert(before.size === 53)
+      assert(before.find(_.getAs[String]("url") == urls(7)).get.getAs[String]("text")
+        .contains("older recrawl"))
+      ManifestTable.compact(spark, root)
+      assert(latest() === before, "compact changed which row wins")
+      assert(ManifestTable.read(spark, root).count() === 60L, "compact keeps one row per url")
+      ManifestTable.compactLatest(spark, root)
+      assert(latest() === before, "compactLatest changed which row wins")
+      assert(ManifestTable.read(spark, root).count() === 53L)
+    } finally {
+      pages.unpersist()
+      graft.Fs.deleteRecursively(java.nio.file.Paths.get(root))
+    }
+  }
+
   test("a later recrawl upsert resurrects a tombstoned url") {
     import spark.implicits._
     val root = tmpRoot("resurrect")
@@ -195,7 +226,7 @@ class UpsertSpec extends AnyFunSuite {
       assert(ManifestTable.readLatest(spark, root).count() === 0L)
       // deleted url reads as absent, so the upsert treats it as NEW
       val seq = ExtractJob.upsertChanged(
-        Seq(page("u/a", 3, "alpha again")).toDS(), root, 4)
+        Seq(page("u/a", 3, "alpha again")).toDS(), root)
       assert(ManifestTable.commitUrls(spark, root, seq).count() === 1L)
       val latest = ManifestTable.readLatest(spark, root)
         .select($"url", $"text").as[(String, String)].collect().toMap
@@ -402,7 +433,7 @@ class UpsertSpec extends AnyFunSuite {
             encode(concat(lit("recrawl update of "), $"url"), "UTF-8"))
             .otherwise($"html"))
         .as[Page]
-      val seq = ExtractJob.upsertChanged(recrawl, root, 4)
+      val seq = ExtractJob.upsertChanged(recrawl, root)
       assert(ManifestTable.commitUrls(spark, root, seq).count() === nChanged)
       val latest = ManifestTable.readLatest(spark, root)
       assert(latest.count() === pages.count())
