@@ -2,10 +2,11 @@ package graft.sources
 
 import graft.functions.Codecs
 import java.sql.Timestamp
+import org.apache.hadoop.fs.{FSDataInputStream, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 
 /** CDX-style record index over WARC archives — the coordinates that turn
-  * "one task per archive" into record-addressable random access. Common
+  * whole-archive reads into record-addressable random access. Common
   * Crawl ships exactly this (the cdx index: url, timestamp, filename,
   * offset, length per member) so consumers can fetch single records with
   * ranged reads instead of scanning gigabyte archives.
@@ -23,11 +24,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
   * A mixed archive (members holding several records each) degrades
   * per-member: single-record members stay seekable.
   *
-  * Scale shape: `index` is a map-only pass over archives (binaryFile
-  * scan → offset walk; no shuffle, no payload retention — only
-  * coordinates leave the task). `fetch` joins a WANTED url set against
-  * the index, groups wanted coordinates per archive (a shuffle of
-  * coordinate rows, ~50 bytes each — not page bytes), and each task
+  * Scale shape: `index` is a map-only pass over archives ([[ArchiveScan]]
+  * lists them once on the Spark driver and packs them by bytes into at most
+  * `defaultParallelism` tasks → offset walk; no shuffle, no payload
+  * retention — only coordinates leave the task). `fetch` joins a WANTED
+  * url set against the index, groups wanted coordinates per archive (a
+  * shuffle of coordinate rows, ~50 bytes each — not page bytes), and each task
   * then decodes ONLY the addressed slices of its archive. At 10^12
   * records the win is the second pass never re-parses unwanted records:
   * a 0.1% re-extract touches 0.1% of record bytes (plus the inflate,
@@ -36,21 +38,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 object WarcIndex {
 
   /** Index archives matching `glob`: one row per WARC record with its
-    * retrieval coordinates. Map-only; payload bytes never leave the task.
+    * retrieval coordinates; `file` is the archive's Hadoop `Path.toString`.
+    * Map-only; payload bytes never leave the task.
     */
   def index(spark: SparkSession, glob: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile").load(glob)
-      .select(F.col("path"), F.col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        indexArchive(bytes).map { case (headers, off, len, seekable) =>
-          (headers.getOrElse("warc-target-uri", ""),
-            headers.get("warc-date").flatMap(WarcReader.parseTs).getOrElse(new Timestamp(0L)),
-            headers.getOrElse("warc-type", ""),
-            path, off, len, seekable)
-        }
+    ArchiveScan.read(spark, glob) { (path, bytes) =>
+      indexArchive(bytes).map { case (headers, off, len, seekable) =>
+        (headers.getOrElse("warc-target-uri", ""),
+          headers.get("warc-date").flatMap(WarcReader.parseTs).getOrElse(new Timestamp(0L)),
+          headers.getOrElse("warc-type", ""),
+          path, off, len, seekable)
       }
+    }
       .toDF("url", "warc_ts", "rec_type", "file", "rec_offset", "rec_length", "seekable")
   }
 
@@ -93,8 +93,8 @@ object WarcIndex {
   }
 
   /** Record-level SPLIT ingest: read every indexed response record with
-    * parallelism decoupled from the archive count — the index turns "one
-    * task per archive" into "any number of tasks", each seeking straight
+    * parallelism decoupled from the archive count — the index turns
+    * whole-archive tasks into "any number of tasks", each seeking straight
     * to its records with ranged reads. This is how ONE giant archive
     * stops being a straggler: its records spread across the cluster by
     * coordinate, not by file.
@@ -109,10 +109,12 @@ object WarcIndex {
     *
     * Each task sorts its coordinate slice by (file, offset) and reuses
     * one open handle per run of same-file rows — sequential forward
-    * seeks, no handle churn.
+    * seeks, no handle churn. Files open through their Hadoop
+    * `FileSystem`, like every other archive read.
     */
   def readSplit(spark: SparkSession, indexDf: DataFrame, numSlices: Int): DataFrame = {
     import spark.implicits._
+    val conf = ArchiveScan.hadoopConf(spark)
     indexDf
       .filter(F.col("rec_type") === "response")
       .select($"file", $"rec_offset", $"rec_length", $"seekable")
@@ -120,7 +122,7 @@ object WarcIndex {
       .repartition(numSlices, F.col("rec_offset")) // spread records, not files
       .mapPartitions { rows =>
         val sorted = rows.toArray.sortBy(r => (r._1, r._2))
-        var open: java.io.RandomAccessFile = null
+        var open: FSDataInputStream = null
         var openFile: String = null
         // the handle must close on EVERY task exit — mid-iteration failure
         // (truncated archive, the .gz require) or a consumer that stops
@@ -130,11 +132,11 @@ object WarcIndex {
         if (tc != null) tc.addTaskCompletionListener[Unit] { _ =>
           if (open != null) { open.close(); open = null }
         }
-        def handle(file: String): java.io.RandomAccessFile = {
+        def handle(file: String): FSDataInputStream = {
           if (file != openFile) {
             if (open != null) open.close()
-            open = new java.io.RandomAccessFile(
-              new java.io.File(new java.net.URI(file)), "r")
+            val path = new Path(file)
+            open = path.getFileSystem(conf.value.value).open(path)
             openFile = file
           }
           open
@@ -160,17 +162,19 @@ object WarcIndex {
     * coordinates shuffle to one task per archive; seekable rows decode
     * straight from the raw file bytes, and the archive is inflated (once,
     * lazily) only when non-seekable rows need the decompressed stream.
+    * Archives are read as [[ArchiveScan]] reads them, from the `file`
+    * column taken as a Hadoop `Path`.
     */
   def fetch(spark: SparkSession, indexDf: DataFrame, wanted: DataFrame): DataFrame = {
     import spark.implicits._
+    val conf = ArchiveScan.hadoopConf(spark)
     val want = indexDf
       .filter(F.col("rec_type") === "response")
       .join(wanted.select("url").distinct(), Seq("url"))
       .select($"file", $"rec_offset", $"rec_length", $"seekable")
       .as[(String, Long, Long, Boolean)]
     want.groupByKey(_._1).flatMapGroups { (file, rows) =>
-      val raw = java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(new java.net.URI(file)))
+      val raw = ArchiveScan.readFile(new Path(file), conf.value.value)
       // fail the task, don't return an empty stream: an unreadable archive
       // would otherwise silently drop EVERY wanted record it holds
       lazy val stream = WarcReader.inflate(raw) match {

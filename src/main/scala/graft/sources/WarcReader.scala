@@ -24,14 +24,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
   *   - a `.warc.gz` input (multi-member gzip) is inflated up front by the
   *     same bounded gunzip.
   *
-  * Spark surface: `readWarcs` scans files with the binaryFile source
-  * (one task per archive — WARC members are not independently seekable
-  * without an external index) and flatMaps the parser, producing rows in
-  * the pages-table shape `(url, warc_ts, html, lang)`. At crawl scale
-  * the unit of parallelism is the archive file (~1 GB each in Common
-  * Crawl), which is exactly the granularity the byte-bounded extract
-  * scan wants downstream; record-level random access goes through the
-  * CDX-style coordinates built by [[WarcIndex]].
+  * Spark surface: `readWarcs` reads archives through [[ArchiveScan]]:
+  * they are listed once on the Spark driver and packed by bytes into at most
+  * `defaultParallelism` tasks, each reading its archives whole (WARC
+  * members are not independently seekable without an external index)
+  * and flatMapping the parser into rows in the pages-table shape
+  * `(url, warc_ts, html, lang)`. The archive file (~1 GB each in Common
+  * Crawl) stays the indivisible unit of work; record-level random access
+  * goes through the CDX-style coordinates built by [[WarcIndex]].
   */
 object WarcReader {
 
@@ -249,16 +249,15 @@ object WarcReader {
     None // unreachable
   }
 
-  /** Spark surface: archives matching `glob` → pages-shaped rows
-    * (url, warc_ts, html, lang='', plus http_status/ingest_error for the
-    * gate). One task per archive (see scaladoc).
+  /** Spark surface: archives matching `glob` (a glob or a directory) →
+    * pages-shaped rows (url, warc_ts, html, lang='', plus
+    * http_status/ingest_error for the gate). Archives are listed once on
+    * the Spark driver and packed by bytes into at most
+    * `defaultParallelism` tasks (see [[ArchiveScan]]).
     */
   def readWarcs(spark: SparkSession, glob: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile").load(glob)
-      .select(F.col("content"))
-      .as[Array[Byte]]
-      .flatMap(parseWarc _)
+    ArchiveScan.read(spark, glob)((_, bytes) => parseWarc(bytes))
       .select(
         F.col("url"),
         F.col("warcTs").as("warc_ts"),

@@ -26,9 +26,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
   *
   * Scale shape: identical to WetSink — [[WetSink.writeArchives]] does the
   * one-file-per-task, temp-file + atomic-move, per-record-gzip-member
-  * publishing; readWat parallelizes one task per archive. The JSON body
-  * is caller-built (to_json over kernel outputs), so the sink stays a
-  * pure serialization boundary.
+  * publishing; readWat reads through the shared [[ArchiveScan]]. The
+  * JSON body is caller-built (to_json over kernel outputs), so the sink
+  * stays a pure serialization boundary.
   */
 object WatSink {
 
@@ -55,13 +55,13 @@ object WatSink {
       writeRecord(r.getString(0), r.getTimestamp(1), r.getString(2))
     }
 
-  /** Read WAT archives back to (url, warc_ts, wat). One task per archive. */
+  /** Read WAT archives back to (url, warc_ts, wat). Archives are listed
+    * once on the Spark driver and packed by bytes into at most
+    * `defaultParallelism` tasks, as in `WarcReader.readWarcs`.
+    */
   def readWat(spark: SparkSession, glob: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile").load(glob)
-      .select(F.col("content"))
-      .as[Array[Byte]]
-      .flatMap(parseWat _)
+    ArchiveScan.read(spark, glob)((_, bytes) => parseWat(bytes))
       .toDF("url", "warc_ts", "wat")
   }
 

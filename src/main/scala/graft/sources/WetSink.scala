@@ -32,9 +32,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
   * future range reader can inflate records independently). File names
   * are deterministic in the partition id and writes go through a
   * temp-file + atomic-move, so a retried task republishes the same
-  * bytes instead of duplicating records. One file per task is exactly
-  * the archive granularity `readWet` parallelizes over on the way back
-  * in. The driver never sees row data; only task-side streams.
+  * bytes instead of duplicating records. `readWet` reads the archives
+  * back through [[ArchiveScan]], packed by bytes into at most
+  * `defaultParallelism` tasks. The Spark driver never sees row data; only
+  * task-side streams.
   */
 object WetSink {
 
@@ -99,15 +100,13 @@ object WetSink {
     }
   }
 
-  /** Read WET archives back to (url, warc_ts, text). One task per
-    * archive, mirroring `WarcReader.readWarcs`.
+  /** Read WET archives back to (url, warc_ts, text). Archives are listed
+    * once on the Spark driver and packed by bytes into at most
+    * `defaultParallelism` tasks, as in `WarcReader.readWarcs`.
     */
   def readWet(spark: SparkSession, glob: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile").load(glob)
-      .select(F.col("content"))
-      .as[Array[Byte]]
-      .flatMap(parseWet _)
+    ArchiveScan.read(spark, glob)((_, bytes) => parseWet(bytes))
       .toDF("url", "warc_ts", "text")
   }
 

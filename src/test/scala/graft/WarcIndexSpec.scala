@@ -154,4 +154,29 @@ class WarcIndexSpec extends AnyFunSuite {
       idx.unpersist()
     } finally graft.Fs.deleteRecursively(java.nio.file.Paths.get(dir))
   }
+
+  test("index, fetch and readSplit open archives under a path with a space") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-warcidx")
+    try {
+      val dir = java.nio.file.Files.createDirectory(tmp.resolve("warc dir"))
+      val (ra, rb) = recs.splitAt(20)
+      java.nio.file.Files.write(dir.resolve("a.warc"), WarcReader.writeWarc(ra))
+      java.nio.file.Files.write(dir.resolve("b.warc.gz"), WarcReader.writeWarcRecordGz(rb))
+      val idx = WarcIndex.index(spark, dir.toString).cache()
+      // the file column is Hadoop's Path.toString, raw space included
+      assert(idx.select($"file").distinct().as[String].collect().sorted.toSeq ==
+        Seq("a.warc", "b.warc.gz").map(f => s"file:$dir/$f"))
+      val wantedUrls = recs.indices.filter(_ % 3 == 0).map(i => recs(i)._1)
+      val want = recs.filter(r => wantedUrls.contains(r._1)).map(r => (r._1, r._3.toSeq)).sortBy(_._1)
+      val fetched = WarcIndex.fetch(spark, idx, wantedUrls.toDF("url"))
+        .as[(String, java.sql.Timestamp, Array[Byte])].collect()
+        .map(r => (r._1, r._3.toSeq)).sortBy(_._1)
+      assert(fetched.toSeq == want)
+      val split = WarcIndex.readSplit(spark, idx, numSlices = 4)
+        .select($"url", $"html").as[(String, Array[Byte])].collect()
+      assert(split.length == recs.length)
+      idx.unpersist()
+    } finally graft.Fs.deleteRecursively(tmp)
+  }
 }
