@@ -61,8 +61,15 @@ object TextAssembly {
     sb.toString
   }
 
+  /** The one whitespace test of the byte-identity grammar: Java's
+    * isWhitespace plus NBSP. Printable ASCII (`!`..`~`), the bulk of any
+    * text, is decided by its first compare; every other char takes the
+    * full test. `TextAssemblySpec` checks all 65,536 chars against the
+    * full definition.
+    */
   @inline def isSpace(c: Char): Boolean =
-    c == ' ' || c == '\t' || c == '\n' || c == '\r' || c == '\f' ||
+    if (c > ' ' && c < '\u007F') false
+    else c == ' ' || c == '\t' || c == '\n' || c == '\r' || c == '\f' ||
       c == '\u000B' || c == '\u00A0' || Character.isWhitespace(c)
 
   /** Page header grammar — reference enhanced_extract.py:283. */

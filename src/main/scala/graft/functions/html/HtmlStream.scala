@@ -90,7 +90,16 @@ object HtmlStream {
       var i = start
       while (i < end) {
         val c = src.charAt(i)
-        if (c == '&') {
+        if (isPlain(c)) {
+          // a run of printable ASCII holds no space and no entity: emitChar's
+          // effect on every char of it is one pending-space check and one copy
+          var j = i + 1
+          while (j < end && isPlain(src.charAt(j))) j += 1
+          if (pendingSpace) { buf.append(' '); if (linkDepth > 0) bufLink += 1; pendingSpace = false }
+          buf.underlying.append(src, i, j)
+          if (linkDepth > 0) bufLink += j - i
+          i = j
+        } else if (c == '&') {
           val r = Entities.decodeAt(src, i, end)
           if (r < 0) { emitChar('&'); i += 1 }
           else {
@@ -207,6 +216,9 @@ object HtmlStream {
     val content = blocks.filter(_.isContent)
     HtmlExtractor.Result(content.map(_.text).mkString("\n"), content.length)
   }
+
+  /** Printable ASCII other than `&`: never whitespace, never an entity. */
+  @inline private def isPlain(c: Char): Boolean = c > ' ' && c < '\u007F' && c != '&'
 
   @inline private def isCellStop(n: String): Boolean =
     n == "tr" || n == "table" || n == "tbody" || n == "thead" || n == "tfoot"

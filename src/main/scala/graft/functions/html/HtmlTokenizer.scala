@@ -72,6 +72,13 @@ object HtmlTokenizer {
     var i = 0
     var textStart = -1
     @inline def openText(at: Int): Unit = if (textStart < 0) textStart = at
+    // text at `at` runs at least to the next '<', the only char that can
+    // end it: open it and return where markup may start
+    @inline def textRun(at: Int): Int = {
+      openText(at)
+      val lt = html.indexOf('<', at + 1)
+      if (lt < 0) n else lt
+    }
     def flushText(upTo: Int): Unit =
       if (textStart >= 0) { if (upTo > textStart) out.text(html, textStart, upTo); textStart = -1 }
 
@@ -105,7 +112,7 @@ object HtmlTokenizer {
             while (j < n && html.charAt(j) != '>') j += 1
             out.endTag(name)
             i = if (j < n) j + 1 else n
-          } else { openText(i); i += 1 }
+          } else i = textRun(i)
         } else if (isNameStart(c1)) {
           flushText(i)
           val (tok, next) = parseStartTag(html, i)
@@ -137,8 +144,8 @@ object HtmlTokenizer {
               i = if (e < 0) n else e + 1
             }
           }
-        } else { openText(i); i += 1 }
-      } else { openText(i); i += 1 }
+        } else i = textRun(i)
+      } else i = textRun(i)
     }
     flushText(n)
   }

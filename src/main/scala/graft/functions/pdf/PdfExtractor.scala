@@ -63,7 +63,6 @@ object PdfExtractor {
 
   final case class Result(text: String, nLines: Int, pages: Seq[PageFeature])
 
-  private val objRe: Regex = """(\d+)\s+0\s+obj""".r
   private val rootRe: Regex = """/Root\s+(\d+)\s+0\s+R""".r
   private val pagesRe: Regex = """/Pages\s+(\d+)\s+0\s+R""".r
   private val kidsRe: Regex = """/Kids\s*\[([^\]]*)\]""".r
@@ -156,6 +155,50 @@ object PdfExtractor {
 
   // ---- document object table ---------------------------------------------
 
+  /** Every object header `N 0 obj` in `s`, as (start, digits of N, end):
+    * the leftmost, non-overlapping matches of the regex
+    * `(\d+)\s+0\s+obj` (Java's ASCII `\d` and `\s`), found without one.
+    * Each `obj` is matched backwards: a space run, `0`, a space run, then
+    * the digit run before it, stopping at the previous match's end. A
+    * regex match could start nowhere else: its digit and space runs are
+    * maximal (no backtracking can help), and it contains no other `obj`.
+    */
+  private[pdf] def objHeaders(s: String): ArrayBuffer[(Int, String, Int)] = {
+    val out = new ArrayBuffer[(Int, String, Int)]
+    var from = 0 // end of the last match: the next one starts at or after it
+    var q = s.indexOf("obj")
+    while (q >= 0) {
+      val zero = spacesBefore(s, q, from) - 1
+      if (zero < q - 1 && zero >= from && s.charAt(zero) == '0') {
+        val numEnd = spacesBefore(s, zero, from)
+        if (numEnd < zero) {
+          var start = numEnd
+          while (start > from && isAsciiDigit(s.charAt(start - 1))) start -= 1
+          if (start < numEnd) {
+            out += ((start, s.substring(start, numEnd), q + 3))
+            from = q + 3
+          }
+        }
+      }
+      q = s.indexOf("obj", q + 1)
+    }
+    out
+  }
+
+  /** The start of the run of regex `\s` chars that ends at `end`, not
+    * before `from`.
+    */
+  private def spacesBefore(s: String, end: Int, from: Int): Int = {
+    var i = end
+    while (i > from && isRegexSpace(s.charAt(i - 1))) i -= 1
+    i
+  }
+
+  @inline private def isRegexSpace(c: Char): Boolean =
+    c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
+
+  @inline private def isAsciiDigit(c: Char): Boolean = c >= '0' && c <= '9'
+
   private final class Doc(val s: String, val bytes: Array[Byte]) {
     /** objNum → (dict/body text, (start, length) of its stream data if any) */
     val objs = scala.collection.mutable.HashMap.empty[Int, (String, Option[(Int, Int)])]
@@ -167,10 +210,10 @@ object PdfExtractor {
     // stream (binary font/image payloads legitimately contain "N 0 obj")
     {
       var lastEnd = -1
-      for (m <- objRe.findAllMatchIn(s)) {
-        if (m.start >= lastEnd) {
-          val num = m.group(1).toInt
-          val bodyStart = m.end
+      for ((start, digits, end) <- objHeaders(s)) {
+        if (start >= lastEnd) {
+          val num = digits.toInt
+          val bodyStart = end
           val endObj = s.indexOf("endobj", bodyStart)
           if (endObj > 0) {
             val streamKw = s.indexOf("stream", bodyStart)
@@ -849,9 +892,13 @@ object PdfExtractor {
   private def readToken(cs: String, start: Int): (String, Int) = {
     var i = start
     val n = cs.length
-    val sb = new StringBuilder
-    while (i < n && !" \n\r\t()[]/<>".contains(cs.charAt(i))) { sb.append(cs.charAt(i)); i += 1 }
-    if (i == start) (sb.toString, i + 1) else (sb.toString, i)
+    while (i < n && !isTokenEnd(cs.charAt(i))) i += 1
+    if (i == start) ("", i + 1) else (cs.substring(start, i), i)
+  }
+
+  @inline private def isTokenEnd(c: Char): Boolean = c match {
+    case ' ' | '\n' | '\r' | '\t' | '(' | ')' | '[' | ']' | '/' | '<' | '>' => true
+    case _ => false
   }
 
   /** PDF literal string with escapes + balanced nested parens. Returns
@@ -860,7 +907,7 @@ object PdfExtractor {
     * current font.
     */
   private[pdf] def parseString(cs: String, start: Int): (String, Int) = {
-    val sb = new StringBuilder
+    val sb = new java.lang.StringBuilder
     var depth = 1
     var i = start + 1
     val n = cs.length
@@ -894,7 +941,13 @@ object PdfExtractor {
         }
       } else if (c == '(') { depth += 1; sb.append(c); i += 1 }
       else if (c == ')') { depth -= 1; if (depth > 0) sb.append(c); i += 1 }
-      else { sb.append(c); i += 1 }
+      else {
+        // plain bytes up to the next escape or paren are copied as they are
+        var j = i + 1
+        while (j < n && { val d = cs.charAt(j); d != '\\' && d != '(' && d != ')' }) j += 1
+        sb.append(cs, i, j)
+        i = j
+      }
     }
     (sb.toString, i)
   }

@@ -5,7 +5,7 @@ import graft.functions.{Charsets, Codecs, CsvKernel, FormatSniff, RtfKernel, Tex
 import graft.functions.office.{DocxKernel, OdtKernel, PptxKernel, XlsxKernel}
 import graft.functions.html.HtmlStream
 import graft.functions.pdf.PdfExtractor
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions.col
 
 /** The format-dispatched extraction operator (north rule): content sniff →
@@ -103,12 +103,14 @@ object ExtractKernel {
     * ([[graft.sources.ManifestTable.latestStats]]), which stays exact when
     * tasks retry.
     */
-  def extract(pages: Dataset[Page]): Dataset[Extracted] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
+  def extract(pages: Dataset[Page]): Dataset[Extracted] =
     // project away the golden text column BEFORE deserialization: the scan
     // then never decodes it (visible as ReadSchema in .explain)
-    pages.select(col("url"), col("warc_ts"), col("html"), col("lang")).as[PageIn]
-      .mapPartitions(_.map(extractOneIn))
-  }
+    pages.select(col("url"), col("warc_ts"), col("html"), col("lang")).as(PageInEncoder)
+      .mapPartitions(_.map(extractOneIn))(ExtractedEncoder)
+
+  // derived once: deriving a product encoder reflects over the case class,
+  // which every call would otherwise repeat
+  private val PageInEncoder: Encoder[PageIn] = Encoders.product[PageIn]
+  private val ExtractedEncoder: Encoder[Extracted] = Encoders.product[Extracted]
 }

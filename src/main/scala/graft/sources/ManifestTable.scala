@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.Extracted
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
@@ -49,6 +49,13 @@ import scala.jdk.CollectionConverters._
   * `extractAll` input, which made the staged write slower than the
   * extraction kernel. The same nine permission bits are now set with one
   * syscall each; the files, sidecars and modes on disk are unchanged.
+  *
+  * The staged write also turns parquet's dictionary encoding off for `text`
+  * and `url` ([[StagedWriteOptions]]). Nearly every value of those columns
+  * is distinct, so parquet spent CPU on a dictionary for each column chunk
+  * only to drop it and fall back to plain encoding. The low-cardinality
+  * columns (`format`, `status`, `charset`, `error`) keep their
+  * dictionaries.
   *
   * The seam is thin by design: a real Iceberg catalog drops in by replacing
   * this object's write/read with `.writeTo(table)` / `read.table`.
@@ -282,9 +289,9 @@ object ManifestTable {
             DayLineage.column(col("p_day"), col("n_bytes_in"),
               when(col("status") =!= "ok", 1L).otherwise(0L)).as("days"),
             max(unix_timestamp(col("warc_ts"))).as("hw"),
-            expr(s"bit_xor($RowFpSql)").as("fp"))
+            bit_xor(RowFp).as("fp"))
           .write
-          .options(graft.Fs.ForkFreeWriteOptions) // no chmod process per file, see scaladoc
+          .options(StagedWriteOptions)
           .mode(SaveMode.Overwrite)
           .partitionBy("p_day")
           .parquet(staging.toString)
@@ -645,19 +652,30 @@ $parts
     scan(spark, root, seqs).drop("p_day", "commit_seq")
   }
 
-  /** Canonical per-row fingerprint (SQL text so the write-side observe
-    * and the read-side audit can never drift): every content-bearing
-    * column, nulls sentineled with chr(1). Accepted collision: a null column and a
-    * literal "" value hash identically — the one swap this scheme
-    * cannot see. bit_xor over rows makes the commit fingerprint
-    * order-independent (recompute ordering can't matter); XOR's blindness
-    * to DUPLICATED rows (they self-cancel) is covered by the row-count
-    * comparison the audit does alongside the fingerprint.
+  /** Canonical per-row fingerprint (one column value, so the write-side
+    * observe and the read-side audit can never drift): every
+    * content-bearing column, nulls sentineled with U+0001. Accepted
+    * collision: a null column and a literal U+0001 value hash identically —
+    * the one swap this scheme cannot see. bit_xor over rows makes the
+    * commit fingerprint order-independent (recompute ordering can't
+    * matter); XOR's blindness to DUPLICATED rows (they self-cancel) is
+    * covered by the row-count comparison the audit does alongside the
+    * fingerprint.
     */
-  private[graft] val RowFpSql: String =
-    "xxhash64(url, unix_timestamp(warc_ts), coalesce(text, chr(1)), " +
-      "format, coalesce(charset, chr(1)), status, coalesce(error, chr(1)), " +
-      "n_blocks, n_bytes_in)"
+  private[graft] val RowFp: Column = {
+    def orSentinel(c: String): Column = coalesce(col(c), lit("\u0001"))
+    xxhash64(col("url"), unix_timestamp(col("warc_ts")), orSentinel("text"),
+      col("format"), orSentinel("charset"), col("status"), orSentinel("error"),
+      col("n_blocks"), col("n_bytes_in"))
+  }
+
+  /** Options of the staged write: no `chmod` process per file (see the
+    * object's scaladoc), and no parquet dictionary for the two columns whose
+    * values are nearly all distinct.
+    */
+  private val StagedWriteOptions: Map[String, String] = graft.Fs.ForkFreeWriteOptions ++ Map(
+    "parquet.enable.dictionary#text" -> "false",
+    "parquet.enable.dictionary#url" -> "false")
 
   /** Bound on the wait for a commit's observed lineage: the row is posted
     * through the listener bus right after the write, so a miss means it
@@ -732,7 +750,7 @@ $parts
       if (present.isEmpty) Map.empty
       else scan(spark, root, present)
         .groupBy(col("commit_seq").cast("long").as("seq"))
-        .agg(expr(s"bit_xor($RowFpSql)").as("fp"), count(lit(1)).as("n"))
+        .agg(bit_xor(RowFp).as("fp"), count(lit(1)).as("n"))
         .as[(Long, Long, Long)]
         .collect()
         .map(r => r._1 -> ((r._2, r._3)))

@@ -27,7 +27,7 @@ object CommitOracle {
           sum(col("n_bytes_in")),
           sum(when(col("status") =!= "ok", 1L).otherwise(0L)),
           max(unix_timestamp(col("warc_ts"))),
-          expr(s"bit_xor(${ManifestTable.RowFpSql})"))
+          bit_xor(ManifestTable.RowFp))
         .collect()
       Lineage(
         agg.map(r => PartitionStat(r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))

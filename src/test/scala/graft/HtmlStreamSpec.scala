@@ -46,11 +46,29 @@ class HtmlStreamSpec extends AnyFunSuite {
       "<form><textarea>inside boiler form</textarea></form><p>keep</p>",
       "<textarea>&#x110000; invalid ref stays literal</textarea>",
       "text with no tags at all",
-      ""
+      "",
+      // printable-ASCII runs (copied in bulk by the stream path) broken by
+      // entities, NBSP, U+2003, U+001C-U+001F and link boundaries
+      "<p>fish&amp;chips&amp;&amp;peas &amp; more&amp</p>",
+      "<p>one\u00A0two\u00A0\u00A0three &nbsp;four&nbsp;</p>",
+      "<p>em\u2003space\u2003\u2003run \u2003 end\u2003</p>",
+      "<p>a\u001Cb\u001Dc\u001Ed\u001Fe \u001C\u001F f</p>",
+      "<p>tab\tline\nfeed\rret\u000Bvt\fff</p>",
+      "<p>caf\u00E9 na\u00EFve \u65E5\u672C &#x1F600;x&#233;y</p>",
+      "<div>plain words before <a href=1>linked&amp;text\u00A0here</a> and after</div>",
+      "<div><a href=1>One</a><a href=2>Two</a>\u2003<a href=3>Three&nbsp;</a> tail text</div>",
+      "<p><a>x</a> <a> y </a>z</p><p> <a>only link text</a> </p>"
     )
     cases.foreach { html =>
       assert(HtmlStream.extract(html) == HtmlExtractor.extract(html), s"diverged on: $html")
     }
+    // pinned texts: the DOM path shares the whitespace test, so it alone
+    // cannot tell a wrong one
+    def text(html: String) = HtmlStream.extract(html).text
+    assert(text("<p>fish&amp;chips&amp;&amp;peas &amp; more&amp</p>") == "fish&chips&&peas & more&amp")
+    assert(text("<p>one\u00A0two\u00A0\u00A0three &nbsp;four&nbsp;</p>") == "one two three four")
+    assert(text("<p>em\u2003space\u2003\u2003run \u2003 end\u2003</p>") == "em space run end")
+    assert(text("<p>a\u001Cb\u001Dc\u001Ed\u001Fe \u001C\u001F f</p>") == "a b c d e f")
   }
 
   test("streaming == DOM on random adversarial pages") {

@@ -30,6 +30,19 @@ class TextAssemblySpec extends AnyFunSuite {
   test("pages assembly grammar") {
     assert(TextAssembly.assemblePages(Seq("a", "b")) == "[Page 1]\na\n\n[Page 2]\nb")
   }
+  test("isSpace equals Java isWhitespace plus NBSP on all 65,536 chars") {
+    // the streaming and DOM HTML paths both call isSpace, so their
+    // equivalence cannot catch a wrong fast path; the full definition can
+    def definition(c: Char): Boolean =
+      c == ' ' || c == '\t' || c == '\n' || c == '\r' || c == '\f' ||
+        c == '\u000B' || c == '\u00A0' || Character.isWhitespace(c)
+    val wrong = (Char.MinValue to Char.MaxValue).filter(c => TextAssembly.isSpace(c) != definition(c))
+    assert(wrong.isEmpty, s"differs on ${wrong.take(10).map(c => f"U+${c.toInt}%04X")}")
+    // the definition itself: separators beyond ASCII space count, a
+    // zero-width space and printable ASCII do not
+    Seq('\u001C', '\u001F', '\u00A0', '\u2003', '\u3000').foreach(c => assert(TextAssembly.isSpace(c)))
+    Seq('!', '~', 'a', '\u007F', '\u200B').foreach(c => assert(!TextAssembly.isSpace(c)))
+  }
 }
 
 class CharsetSpec extends AnyFunSuite {

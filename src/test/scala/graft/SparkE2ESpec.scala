@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.TextAssembly
 import graft.operators.{ExtractJob, ExtractKernel}
 import graft.sources.{Corpus, ManifestTable}
 import org.apache.spark.sql.SparkSession
@@ -274,6 +275,43 @@ class SparkE2ESpec extends AnyFunSuite {
       pages.unpersist()
       Fs.deleteRecursively(java.nio.file.Paths.get(root))
     }
+  }
+
+  test("committed files: no dictionary for text and url, dictionaries for the low-cardinality columns") {
+    import org.apache.hadoop.fs.{Path => HPath}
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import spark.implicits._
+    val root = tmpRoot("encodings")
+    try {
+      CommitOracle.check(spark, root, ExtractJob.extractAll(Corpus.generate(spark, 200L, 4), root, 4))
+      // distinct texts and urls fall back to plain encoding on their own; a
+      // batch that repeats them would keep a dictionary unless it is off
+      val day = java.sql.Timestamp.valueOf("2025-03-01 00:00:00")
+      val repeats = (0 until 40).map(i =>
+        Extracted(s"u/${i % 4}", day, "txt", TextAssembly.NoText, "utf-8", "ok", null, 1, 1L))
+      CommitOracle.check(spark, root, ManifestTable.commitAppend(spark, root, repeats.toDS().repartition(1)))
+      val files = Using.resource(Files.walk(java.nio.file.Paths.get(ManifestTable.dataPath(root)))) { s =>
+        s.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).toList
+      }
+      assert(files.size > 1, s"files: $files")
+      val conf = spark.sparkContext.hadoopConfiguration
+      val footers = files.map { f =>
+        f -> Using.resource(ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(f.toUri), conf)))(_.getFooter)
+      }
+      footers.foreach { case (f, footer) =>
+        val dict: Map[String, Boolean] = footer.getBlocks.asScala.toSeq
+          .flatMap(_.getColumns.asScala.map(c => c.getPath.toDotString -> c.hasDictionaryPage))
+          .groupMapReduce(_._1)(_._2)(_ || _)
+        Seq("text", "url").foreach(c => assert(dict.get(c).contains(false), s"$c in $f: $dict"))
+        // parquet itself drops a dictionary no smaller than the plain
+        // values, which happens in files of one to three rows
+        if (footer.getBlocks.asScala.map(_.getRowCount).sum >= 10)
+          Seq("format", "status", "charset").foreach(c => assert(dict.get(c).contains(true), s"$c in $f: $dict"))
+      }
+      assert(footers.count(_._2.getBlocks.asScala.map(_.getRowCount).sum >= 10) > 5)
+      assert(footers.exists(_._2.getBlocks.asScala.map(_.getRowCount).sum == 40L))
+    } finally Fs.deleteRecursively(java.nio.file.Paths.get(root))
   }
 
   test("a batch with a null warc_ts (no p_day) fails its commit and publishes nothing") {
