@@ -3,10 +3,13 @@ package graft.functions
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, EOFException, IOException, InputStream}
 import java.util.zip.{Deflater, GZIPInputStream, Inflater, InflaterInputStream}
 
-/** Compressed payloads: gzip envelopes (HTTP `Content-Encoding`, WARC
-  * archives), PDF `/FlateDecode` streams, OOXML/ODF ZIP entries, PNG
-  * `IDAT`. Every decompression reads through ONE bounded loop, [[inflate]]:
-  * a 10 KB bomb must not allocate 10 GB on an executor.
+/** Compressed payloads: gzip envelopes (HTTP `Content-Encoding`),
+  * PDF `/FlateDecode` streams, OOXML/ODF ZIP entries, PNG `IDAT`. Every
+  * decompression of a document reads through ONE bounded loop,
+  * [[inflate]]: a 10 KB bomb must not allocate 10 GB on an executor. The
+  * one inflate loop outside it is the WARC member walk
+  * ([[graft.sources.WarcReader.records]]), which inflates an archive one
+  * gzip member at a time and keeps at most one record.
   */
 object Codecs {
 
@@ -72,61 +75,6 @@ object Codecs {
       case None                      => Left(OverCapError)
       case _                         => Left("gzip decode error")
     } catch { case _: IOException => Left("gzip decode error") } // corrupt header, data or CRC
-
-  /** Boundaries of the concatenated RFC 1952 members in a gzip stream:
-    * (byte offset, compressed length) per member, in order. This is what
-    * makes the per-record-gzipped WARC layout (Common Crawl's) seekable —
-    * each member inflates independently, so member file coordinates are
-    * random-access record coordinates. None on any malformation
-    * (truncated header/stream, bad magic, non-deflate method). Member
-    * payloads are inflated into a scratch buffer to find the stream end
-    * (constant memory; output discarded), so cost is one decompression
-    * pass — the same work an indexer does anyway. This scan keeps nothing,
-    * so it is the one decompression that does not go through [[inflate]].
-    */
-  def gzipMemberBounds(bytes: Array[Byte]): Option[Seq[(Long, Long)]] = {
-    if (!isGzip(bytes)) return None
-    val out = Seq.newBuilder[(Long, Long)]
-    var pos = 0
-    while (pos < bytes.length) {
-      val start = pos
-      if (bytes.length - pos < 10) return None
-      if ((bytes(pos) & 0xFF) != 0x1F || (bytes(pos + 1) & 0xFF) != 0x8B ||
-        bytes(pos + 2) != 8) return None // deflate is the only defined method
-      val flg = bytes(pos + 3) & 0xFF
-      pos += 10
-      if ((flg & 4) != 0) { // FEXTRA: 2-byte little-endian length + payload
-        if (bytes.length - pos < 2) return None
-        val xlen = (bytes(pos) & 0xFF) | ((bytes(pos + 1) & 0xFF) << 8)
-        pos += 2 + xlen
-      }
-      if ((flg & 8) != 0) { // FNAME: zero-terminated
-        while (pos < bytes.length && bytes(pos) != 0) pos += 1
-        pos += 1
-      }
-      if ((flg & 16) != 0) { // FCOMMENT: zero-terminated
-        while (pos < bytes.length && bytes(pos) != 0) pos += 1
-        pos += 1
-      }
-      if ((flg & 2) != 0) pos += 2 // FHCRC
-      if (pos >= bytes.length) return None
-      val inf = new Inflater(true)
-      try {
-        inf.setInput(bytes, pos, bytes.length - pos)
-        val scratch = new Array[Byte](8192)
-        try {
-          while (!inf.finished()) {
-            if (inf.inflate(scratch) == 0 && (inf.needsInput() || inf.needsDictionary()))
-              return None // truncated or preset-dictionary stream
-          }
-        } catch { case _: java.util.zip.DataFormatException => return None }
-        pos += inf.getBytesRead.toInt + 8 // deflate stream + CRC32 + ISIZE
-      } finally inf.end()
-      if (pos > bytes.length) return None
-      out += ((start.toLong, (pos - start).toLong))
-    }
-    Some(out.result())
-  }
 
   /** zlib (RFC 1950) at BEST_SPEED: PNG `IDAT` and generated PDF streams. */
   def deflate(data: Array[Byte]): Array[Byte] = {

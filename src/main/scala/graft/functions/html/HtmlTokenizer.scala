@@ -228,7 +228,7 @@ private[html] object TextUtil {
   * behavior for unterminated/unknown refs).
   */
 object Entities {
-  private val named: Map[String, String] = Map(
+  private val named: Map[String, Int] = Map[String, String](
     "amp" -> "&", "lt" -> "<", "gt" -> ">", "quot" -> "\"", "apos" -> "'",
     "nbsp" -> "\u00A0", "copy" -> "©", "reg" -> "®", "trade" -> "™",
     "mdash" -> "—", "ndash" -> "–", "hellip" -> "…",
@@ -238,21 +238,20 @@ object Entities {
     "agrave" -> "à", "uuml" -> "ü", "ouml" -> "ö", "auml" -> "ä",
     "szlig" -> "ß", "ccedil" -> "ç", "ntilde" -> "ñ", "pound" -> "£",
     "euro" -> "€", "sect" -> "§"
-  )
-
-  private lazy val namedCp: Map[String, Int] = named.map { case (k, v) => k -> v.codePointAt(0) }
+  ).map { case (k, v) => k -> v.codePointAt(0) }
 
   /** Decode a character reference starting at src(i)=='&' (i < end).
     * Returns (nextIndex.toLong << 32) | codepoint when a valid reference is
-    * found, or -1L when the ampersand is literal. Allocation-free for named
-    * refs up to 12 chars (bounded scan, no substring until map probe).
-    * Numeric refs outside the valid codepoint range (`&#x110000;`, `&#-1;`)
-    * stay literal — identical to decode()'s Character.toChars catch, so the
-    * streaming and DOM paths never diverge on adversarial references.
+    * found, or -1L when the ampersand is literal. The `;` is searched for
+    * in the next 12 chars only, so text with many `&` decodes in linear
+    * time. Numeric refs outside the valid codepoint range (`&#x110000;`,
+    * `&#-1;`) stay literal.
     */
   def decodeAt(src: String, i: Int, end: Int): Long = {
-    val semi = src.indexOf(';', i + 1)
-    if (semi <= i || semi - i > 12 || semi >= end) return -1L
+    val lim = math.min(end, i + 13)
+    var semi = i + 1
+    while (semi < lim && src.charAt(semi) != ';') semi += 1
+    if (semi >= lim) return -1L
     val body = src.substring(i + 1, semi)
     val next = (semi + 1).toLong << 32
     if (body.startsWith("#x") || body.startsWith("#X")) {
@@ -265,36 +264,25 @@ object Entities {
         val cp = Integer.parseInt(body.substring(1))
         if (Character.isValidCodePoint(cp)) next | cp.toLong else -1L
       } catch { case _: Exception => -1L }
-    } else namedCp.get(body) match {
+    } else named.get(body) match {
       case Some(cp) => next | cp.toLong
       case None     => -1L
     }
   }
 
+  /** Every character reference in `s` decoded, by [[decodeAt]]. */
   def decode(s: String): String = {
-    if (s.indexOf('&') < 0) return s
-    val sb = new StringBuilder(s.length)
+    var amp = s.indexOf('&')
+    if (amp < 0) return s
+    val sb = new java.lang.StringBuilder(s.length)
     var i = 0
-    val n = s.length
-    while (i < n) {
-      val c = s.charAt(i)
-      if (c == '&') {
-        val semi = s.indexOf(';', i + 1)
-        if (semi > i && semi - i <= 12) {
-          val body = s.substring(i + 1, semi)
-          if (body.startsWith("#x") || body.startsWith("#X")) {
-            try { sb.appendAll(Character.toChars(Integer.parseInt(body.substring(2), 16))); i = semi + 1 }
-            catch { case _: Exception => sb.append(c); i += 1 }
-          } else if (body.startsWith("#")) {
-            try { sb.appendAll(Character.toChars(Integer.parseInt(body.substring(1)))); i = semi + 1 }
-            catch { case _: Exception => sb.append(c); i += 1 }
-          } else named.get(body) match {
-            case Some(v) => sb.append(v); i = semi + 1
-            case None    => sb.append(c); i += 1
-          }
-        } else { sb.append(c); i += 1 }
-      } else { sb.append(c); i += 1 }
+    while (amp >= 0) {
+      sb.append(s, i, amp)
+      val r = decodeAt(s, amp, s.length)
+      if (r < 0) { sb.append('&'); i = amp + 1 }
+      else { sb.appendCodePoint(r.toInt); i = (r >>> 32).toInt }
+      amp = s.indexOf('&', i)
     }
-    sb.toString
+    sb.append(s, i, s.length).toString
   }
 }

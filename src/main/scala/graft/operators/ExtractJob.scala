@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.{Extracted, Page}
 import graft.sources.{Bucketing, ManifestTable}
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The three north-rule query shapes over the pages table:
@@ -13,12 +13,24 @@ import org.apache.spark.sql.functions._
   */
 object ExtractJob {
 
+  /** The kernel over pages bound for a commit. A page with a null
+    * `warc_ts` has no `p_day`: its task fails before the kernel runs,
+    * naming the url, and the commit publishes nothing.
+    */
+  private def kernel(pages: Dataset[Page]): Dataset[Extracted] =
+    ExtractKernel.extract(pages.withColumn("warc_ts", when(col("warc_ts").isNull,
+      raise_error(concat(lit("page has a null warc_ts, so no commit can hold it: "), col("url"))))
+      .otherwise(col("warc_ts"))).as(PageEncoder))
+
+  // derived once, as ExtractKernel's encoders are
+  private val PageEncoder: Encoder[Page] = Encoders.product[Page]
+
   /** Full extraction of a pages dataset into a committed snapshot. The
     * third argument is not read: the plan's parallelism is the scan's
     * byte-bounded splits. It stays because existing callers pass it.
     */
   def extractAll(pages: Dataset[Page], outRoot: String, partitions: Int): Long =
-    ManifestTable.commitAppend(pages.sparkSession, outRoot, ExtractKernel.extract(pages))
+    ManifestTable.commitAppend(pages.sparkSession, outRoot, kernel(pages))
 
   /** Exact resume: process only pages whose url is NOT in any committed
     * snapshot (reference analog: skip-if-output-exists, main.py:42-44,62-66).
@@ -30,7 +42,7 @@ object ExtractJob {
     import spark.implicits._
     val done = ManifestTable.committedUrls(spark, outRoot)
     val remaining = pages.join(done, Seq("url"), "left_anti").as[Page]
-    val out = ExtractKernel.extract(remaining)
+    val out = kernel(remaining)
     ManifestTable.commitAppend(spark, outRoot, out)
   }
 
@@ -76,7 +88,7 @@ object ExtractJob {
       markIngested(outRoot, doneTable, q)
     }
     val remaining = remainingBucketed(spark, pagesTable, doneTable)
-    val out = ExtractKernel.extract(remaining)
+    val out = kernel(remaining)
     val seq = ManifestTable.commitAppend(spark, outRoot, out)
     Bucketing.appendBucketed(
       ManifestTable.commitUrls(spark, outRoot, seq), doneTable, "url", nBuckets)
@@ -140,7 +152,7 @@ object ExtractJob {
     import spark.implicits._
     val hw = ManifestTable.highWatermark(outRoot).getOrElse(0L)
     val fresh = pages.filter(unix_timestamp(col("warc_ts")) > hw).as[Page]
-    val out = ExtractKernel.extract(fresh)
+    val out = kernel(fresh)
     ManifestTable.commitAppend(spark, outRoot, out)
   }
 
@@ -161,7 +173,7 @@ object ExtractJob {
     */
   def upsertChanged(pages: Dataset[Page], outRoot: String): Long = {
     val spark = pages.sparkSession
-    val fresh = ExtractKernel.extract(pages)
+    val fresh = kernel(pages)
     ManifestTable.commitAppend(spark, outRoot, diffChanged(fresh, outRoot))
   }
 
@@ -236,7 +248,7 @@ object ExtractJob {
     try {
       val failed = current.filter(col("status") =!= lit("ok")).select("url")
       val todo = pages.join(failed, Seq("url")).as[Page]
-      val fresh = ExtractKernel.extract(todo)
+      val fresh = kernel(todo)
       val changed = diffChangedAgainst(fresh,
         current.select(col("url"), col("__cur_digest")))
       ManifestTable.commitAppend(spark, outRoot, changed)

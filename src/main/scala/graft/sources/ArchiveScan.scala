@@ -1,7 +1,9 @@
 package graft.sources
 
+import java.io.InputStream
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, Path}
+import org.apache.spark.TaskContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 import org.apache.spark.util.SerializableConfiguration
@@ -13,9 +15,10 @@ import org.apache.spark.util.SerializableConfiguration
   * The Spark driver expands the glob or directory once, with Hadoop
   * `globStatus`/`listStatus`, and packs the archives by their listed
   * lengths, largest first, each into the lightest of
-  * `min(#archives, defaultParallelism)` bins. One task per bin reads its
-  * archives whole through the path's Hadoop `FileSystem` under the
-  * session's Hadoop configuration, so any scheme Hadoop can open works. A
+  * `min(#archives, defaultParallelism)` bins. One task per bin streams its
+  * archives, one open at a time, through the path's Hadoop `FileSystem`
+  * under the session's Hadoop configuration, so any scheme Hadoop can open
+  * works; heap per task is what the parser keeps, not an archive. A
   * read is one Spark job of one stage with no shuffle; Spark's binaryFile
   * source would list the same files again in a job of its own whenever a
   * glob matches more than
@@ -31,25 +34,41 @@ import org.apache.spark.util.SerializableConfiguration
   */
 object ArchiveScan {
 
-  /** Longest file one task reads whole: the JVM's array bound. */
-  final val MaxFileBytes: Long = Int.MaxValue - 8
-
   /** One listed archive: Hadoop `Path.toString` and length in bytes. */
   final case class Archive(path: String, length: Long)
 
-  /** Every archive under `glob`, parsed by `parse(path, bytes)` in tasks
-    * packed by bytes (see the object doc). Lists on the call; reads when
-    * the result runs.
+  /** Every archive under `glob`, parsed by `parse(path, stream)` in tasks
+    * packed by bytes (see the object doc). The stream closes when its
+    * rows are drained or the task ends. Lists on the call; reads when the
+    * result runs.
     */
   def read[T](spark: SparkSession, glob: String)(
-      parse: (String, Array[Byte]) => Seq[T])(implicit enc: Encoder[T]): Dataset[T] = {
+      parse: (String, InputStream) => Iterator[T])(implicit enc: Encoder[T]): Dataset[T] = {
     val sc = spark.sparkContext
     val bins = pack(list(spark, glob), sc.defaultParallelism)
     val conf = hadoopConf(spark)
     spark.createDataset(
-      sc.parallelize(bins, math.max(1, bins.size)).flatMap(_.iterator.flatMap { a =>
-        parse(a.path, readFile(new Path(a.path), conf.value.value))
-      })(enc.clsTag))
+      sc.parallelize(bins, math.max(1, bins.size)).flatMap { bin =>
+        val files = new Handle(conf.value.value)
+        bin.iterator.flatMap(a => parse(a.path, files.open(a.path)) ++ { files.close(); Iterator.empty })
+      }(enc.clsTag))
+  }
+
+  /** A task's one open archive: `open` closes the file opened before it,
+    * and the last one closes when the task ends, so a read that fails or
+    * stops early leaks no handle.
+    */
+  private[sources] final class Handle(conf: Configuration) {
+    private var file: String = null
+    private var in: FSDataInputStream = null
+    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => close()))
+
+    def open(path: String): FSDataInputStream = {
+      if (path != file) { close(); in = new Path(path).getFileSystem(conf).open(new Path(path)); file = path }
+      in
+    }
+
+    def close(): Unit = if (in != null) try in.close() finally { in = null; file = null }
   }
 
   /** The session's Hadoop configuration, shipped once per executor. */
@@ -88,20 +107,5 @@ object ArchiveScan {
       load(i) += a.length
     }
     bins.toSeq
-  }
-
-  /** A whole file through its Hadoop `FileSystem`; a file past
-    * [[MaxFileBytes]] fails with its name and length.
-    */
-  private[sources] def readFile(path: Path, conf: Configuration): Array[Byte] = {
-    val fs = path.getFileSystem(conf)
-    val length = fs.getFileStatus(path).getLen
-    if (length > MaxFileBytes)
-      throw new java.io.IOException(
-        s"archive $path is $length bytes, more than the $MaxFileBytes one task reads whole")
-    val bytes = new Array[Byte](length.toInt)
-    val in = fs.open(path)
-    try in.readFully(bytes) finally in.close()
-    bytes
   }
 }

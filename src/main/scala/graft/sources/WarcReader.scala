@@ -1,17 +1,29 @@
 package graft.sources
 
 import graft.functions.Codecs
+import java.io.{ByteArrayInputStream, IOException, InputStream}
 import java.nio.charset.StandardCharsets
 import java.sql.Timestamp
+import java.util.zip.{CRC32, DataFormatException, Inflater}
 import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 
 /** WARC (ISO 28500) ingest — the source format crawl archives actually
   * ship in (Common Crawl publishes .warc.gz: one gzip member per record,
   * concatenated). From-scratch byte-level parser, no libraries:
   *
+  *   - one lazy walk, [[records]], reads an archive stream record by
+  *     record, inflating a gzipped one member at a time with one reused
+  *     `Inflater` (FEXTRA/FNAME/FCOMMENT/FHCRC headers, CRC32 and length
+  *     trailers checked). Plain, whole-archive gzip, per-record gzip and
+  *     several records per member are one code path; heap is one record;
   *   - record grammar: `WARC/1.0\r\n` + headers + `\r\n` + Content-Length
-  *     payload + `\r\n\r\n`; all offsets advance in Long arithmetic
-  *     (untrusted lengths must not Int-wrap a bound check into a crash);
+  *     payload + `\r\n\r\n`. A header block past [[MaxHeaderBytes]], a
+  *     payload past [[MaxRecordBytes]], a cut-short record or any malformed
+  *     tail ends the walk quietly;
+  *   - damage in the gzip layer (a corrupt or truncated member, or bytes
+  *     after a member that start no other) throws [[UnreadableArchive]]
+  *     after the records before it: one error record from [[parseWarc]] and
+  *     [[readWarcs]], a failure from index, WET and WAT reads;
   *   - only `WARC-Type: response` records become pages; warcinfo /
   *     request / metadata records are skipped by their declared length —
   *     never scanned for content;
@@ -20,18 +32,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
   *     then `Content-Encoding: gzip` inflation (bounded, via
   *     [[Codecs.gunzip]]). A record whose envelope is malformed is kept
   *     with an error tag and the raw payload — ingest must not silently
-  *     drop pages;
-  *   - a `.warc.gz` input (multi-member gzip) is inflated up front by the
-  *     same bounded gunzip.
+  *     drop pages.
   *
   * Spark surface: `readWarcs` reads archives through [[ArchiveScan]]:
   * they are listed once on the Spark driver and packed by bytes into at most
-  * `defaultParallelism` tasks, each reading its archives whole (WARC
-  * members are not independently seekable without an external index)
-  * and flatMapping the parser into rows in the pages-table shape
-  * `(url, warc_ts, html, lang)`. The archive file (~1 GB each in Common
-  * Crawl) stays the indivisible unit of work; record-level random access
-  * goes through the CDX-style coordinates built by [[WarcIndex]].
+  * `defaultParallelism` tasks, each streaming its archives through the walk
+  * into rows in the pages-table shape `(url, warc_ts, html, lang)`. The
+  * archive file (~1 GB each in Common Crawl) stays the indivisible unit of
+  * work; record-level random access goes through the CDX-style coordinates
+  * the walk hands [[WarcIndex]].
   */
 object WarcReader {
 
@@ -42,7 +51,30 @@ object WarcReader {
       body: Array[Byte],
       error: String) // null = clean
 
+  /** One record of the walk: lower-cased WARC headers (last wins), the
+    * payload (empty when skipped) and coordinates. Seekable ones are the
+    * file range that parses alone to this record (the record in a plain
+    * archive, or the gzip member holding only it); others are its range in
+    * the inflated stream.
+    */
+  final case class Record(headers: Map[String, String], payload: Array[Byte], offset: Long, length: Long,
+      seekable: Boolean) {
+    def warcType: String = headers.getOrElse("warc-type", "")
+    def url: String = headers.getOrElse("warc-target-uri", "")
+    def date: Timestamp = headers.get("warc-date").flatMap(parseTs).getOrElse(new Timestamp(0L))
+  }
+
+  /** The gzip layer of an archive cannot be read past this point. */
+  final class UnreadableArchive(message: String) extends IOException(message)
+
+  /** Longest payload one record may declare. */
+  final val MaxRecordBytes: Int = 1 << 30
+
+  /** Longest WARC header block, blank line included, the walk searches. */
+  final val MaxHeaderBytes: Int = 1 << 20
+
   private val HeaderEnd = "\r\n\r\n".getBytes(StandardCharsets.ISO_8859_1)
+  private val Crlf = "\r\n".getBytes(StandardCharsets.ISO_8859_1)
 
   private def indexOf(hay: Array[Byte], needle: Array[Byte], from: Int): Int = {
     var i = from
@@ -56,113 +88,245 @@ object WarcReader {
     -1
   }
 
-  /** Walk an archive's record grammar (plain or gzipped), yielding every
-    * record's lower-cased headers + raw payload. Malformed tail data ends
-    * the scan. Shared by the response path ([[parseWarc]]) and the WET
-    * conversion path ([[WetSink.parseWet]]).
-    */
-  private[graft] def rawRecords(
-      archive: Array[Byte]): Seq[(Map[String, String], Array[Byte])] =
-    rawRecordsWithOffsets(archive).map { case (h, p, _, _) => (h, p) }
+  /** `name: value` lines after the first as (lower-cased name, value), in order. */
+  private def fields(lines: Array[String]): Seq[(String, String)] =
+    lines.toSeq.drop(1).flatMap { l =>
+      val c = l.indexOf(':')
+      if (c < 0) None else Some(l.substring(0, c).trim.toLowerCase -> l.substring(c + 1).trim)
+    }
 
-  /** Like [[rawRecords]] but each record also carries its (offset, length)
-    * in the DECOMPRESSED record stream — the CDX-index coordinates that
-    * make records independently addressable (offset points at `WARC/`,
-    * length spans headers + payload).
+  /** Every record of one archive, read lazily from `in`, which the caller
+    * closes; `payloads = false` skips payload bytes instead of keeping
+    * them. See the object doc for layouts, bounds and damage.
     */
-  private[graft] def rawRecordsWithOffsets(
-      archive: Array[Byte]): Seq[(Map[String, String], Array[Byte], Long, Long)] = {
-    // an unreadable archive envelope FAILS the task rather than yielding
-    // zero records: index/WET builds have no error column, and an archive
-    // silently vanishing from the corpus is the one outcome ingest must
-    // never produce (parseWarc, which has an error channel, inflates
-    // before calling this and surfaces the Left as an error record)
-    val bytes = inflate(archive) match {
-      case Left(err) => throw new java.io.IOException(s"unreadable WARC archive: $err")
-      case Right(b)  => b
-    }
-    val out = Seq.newBuilder[(Map[String, String], Array[Byte], Long, Long)]
-    var pos = 0
-    while (pos < bytes.length) {
-      // skip inter-record blank lines
-      while (pos < bytes.length && (bytes(pos) == '\r' || bytes(pos) == '\n')) pos += 1
-      if (pos >= bytes.length) return out.result()
-      val recStart = pos
-      val hEnd = indexOf(bytes, HeaderEnd, pos)
-      if (hEnd < 0) return out.result() // truncated header block: stop
-      val headBlock = new String(bytes, pos, hEnd - pos, StandardCharsets.ISO_8859_1)
-      val lines = headBlock.split("\r\n")
-      if (lines.isEmpty || !lines(0).startsWith("WARC/")) return out.result()
-      val headers = lines.drop(1).flatMap { l =>
-        val c = l.indexOf(':')
-        if (c < 0) None else Some(l.substring(0, c).trim.toLowerCase -> l.substring(c + 1).trim)
-      }.toMap
-      val cl = headers.get("content-length").flatMap(s => s.toLongOption).getOrElse(-1L)
-      val payloadStart = hEnd + 4
-      // bound check by SUBTRACTION: a hostile Content-Length near
-      // Long.MaxValue would overflow `payloadStart + cl` and sail past an
-      // addition-based check
-      if (cl < 0 || cl > bytes.length.toLong - payloadStart) return out.result()
-      pos = payloadStart + cl.toInt
-      out += ((headers,
-        java.util.Arrays.copyOfRange(bytes, payloadStart, payloadStart + cl.toInt),
-        recStart.toLong, (pos - recStart).toLong))
-    }
-    out.result()
+  def records(in: InputStream, payloads: Boolean = true): Iterator[Record] = {
+    val walk = new Walk(in, payloads)
+    Iterator.continually(walk.record()).takeWhile(_ != null)
   }
 
-  /** Decompressed bytes per gzipped archive or member (a JVM array bound). */
-  final val MaxArchiveBytes: Int = 1 << 30
+  private final class Walk(in: InputStream, payloads: Boolean) {
+    // file bytes raw(rawPos until rawLim), raw(0) at file offset rawBase
+    private val raw = new Array[Byte](1 << 16)
+    private var rawPos, rawLim = 0
+    private var rawBase = 0L
+    while (rawLim < 2 && { val n = in.read(raw, rawLim, raw.length - rawLim); rawLim += math.max(n, 0); n > 0 }) ()
+    private val gz = rawLim >= 2 && (raw(0) & 0xFF) == 0x1F && (raw(1) & 0xFF) == 0x8B
+    // the record stream buf(pos until lim), buf(0) at stream offset
+    // bufBase; a plain archive's record stream is its file
+    private val buf = if (gz) new Array[Byte](1 << 16) else raw
+    private var pos = 0
+    private var lim = if (gz) 0 else rawLim
+    private var bufBase = 0L
+    // the gzip member being inflated; members count from 1
+    private val inf = if (gz) new Inflater(true) else null
+    private val crc = new CRC32
+    private var inMember = false
+    private var member, lastEndMember = 0
+    private var memberStart = 0L
 
-  /** Inflate a gzipped archive envelope, or pass plain bytes through.
-    * Left = why the archive is unreadable (corrupt stream, or past
-    * [[MaxArchiveBytes]] — bigger archives must be per-record-gzipped,
-    * where members inflate independently).
-    */
-  private[graft] def inflate(archive: Array[Byte]): Either[String, Array[Byte]] =
-    if (Codecs.isGzip(archive))
-      Codecs.gunzip(archive, maxOut = MaxArchiveBytes)
-        .toRight("archive gunzip failed: corrupt stream or > 1 GiB decompressed")
-    else Right(archive)
+    private def damage(why: String): Nothing =
+      throw new UnreadableArchive(s"archive gunzip failed: $why (member at byte $memberStart)")
+
+    private def refill(): Boolean = {
+      rawBase += rawLim; rawPos = 0; rawLim = math.max(in.read(raw, 0, raw.length), 0)
+      rawLim > 0
+    }
+
+    /** The next file byte; -1 at the end, or damage `why` when given. */
+    private def rawByte(why: String = null): Int = {
+      if (rawPos == rawLim && !refill()) { if (why != null) damage(why); return -1 }
+      rawPos += 1
+      raw(rawPos - 1) & 0xFF
+    }
+
+    /** Reads the next member's header; false at the end of the file. */
+    private def startMember(): Boolean = {
+      memberStart = rawBase + rawPos
+      val first = rawByte()
+      if (first < 0) return false
+      val hcrc = new CRC32
+      hcrc.update(first)
+      def hb(): Int = { val b = rawByte("truncated member header"); hcrc.update(b); b }
+      if (first != 0x1F || hb() != 0x8B) damage("bytes after a member start no gzip member")
+      if (hb() != 8) damage("compression method is not deflate")
+      val flg = hb()
+      (1 to 6).foreach(_ => hb()) // MTIME, XFL, OS
+      if ((flg & 4) != 0) (1 to (hb() | hb() << 8)).foreach(_ => hb()) // FEXTRA
+      if ((flg & 8) != 0) while (hb() != 0) () // FNAME, zero-terminated
+      if ((flg & 16) != 0) while (hb() != 0) () // FCOMMENT, zero-terminated
+      val want = (hcrc.getValue & 0xFFFF).toInt // FHCRC: the header's CRC32, low 16 bits
+      if ((flg & 2) != 0 && (rawByte("truncated member header") | rawByte("truncated member header") << 8) != want)
+        damage("header CRC mismatch")
+      inf.reset(); crc.reset(); inMember = true; member += 1
+      true
+    }
+
+    /** Up to `len` inflated bytes of the member; at its end, checks the trailer. */
+    private def inflate(dst: Array[Byte], off: Int, len: Int): Int = {
+      var n = 0
+      while (n == 0 && inMember) {
+        if (inf.needsInput()) {
+          if (rawPos == rawLim && !refill()) damage("truncated member")
+          inf.setInput(raw, rawPos, rawLim - rawPos)
+          rawPos = rawLim
+        }
+        n = try inf.inflate(dst, off, len) catch { case _: DataFormatException => damage("corrupt deflate data") }
+        crc.update(dst, off, n)
+        if (inf.finished()) {
+          rawPos = rawLim - inf.getRemaining
+          def le32(): Int = (0 until 4).map(k => rawByte("truncated member trailer") << (8 * k)).sum
+          if (le32() != crc.getValue.toInt || le32() != inf.getBytesWritten.toInt) damage("CRC or length mismatch")
+          inMember = false
+        } else if (n == 0 && inf.needsDictionary()) damage("preset dictionary")
+      }
+      n
+    }
+
+    /** Refills `buf`; false at the end of the stream or, unless `cross`, the member. */
+    private def fill(cross: Boolean): Boolean = {
+      bufBase += lim; pos = 0; lim = 0
+      if (!gz) lim = math.max(in.read(buf, 0, buf.length), 0)
+      else while (lim == 0 && (inMember || (cross && startMember()))) lim = inflate(buf, 0, buf.length)
+      lim > 0
+    }
+
+    /** Skips CR and LF; true when another byte follows. */
+    private def skipBlank(cross: Boolean): Boolean = {
+      while (pos < lim || fill(cross)) {
+        if (buf(pos) != '\r' && buf(pos) != '\n') return true
+        pos += 1
+      }
+      false
+    }
+
+    private var head = new Array[Byte](1024)
+
+    /** The header block before its blank line; null when the stream ends
+      * or [[MaxHeaderBytes]] pass first.
+      */
+    private def readHead(): String = {
+      var n = 0
+      while (n < 4 || head(n - 4) != '\r' || head(n - 3) != '\n' || head(n - 2) != '\r' || head(n - 1) != '\n') {
+        if (n == MaxHeaderBytes || (pos == lim && !fill(cross = true))) return null
+        if (n == head.length) head = java.util.Arrays.copyOf(head, math.min(2 * n, MaxHeaderBytes))
+        head(n) = buf(pos)
+        n += 1; pos += 1
+      }
+      new String(head, 0, n - 4, StandardCharsets.ISO_8859_1)
+    }
+
+    /** The next `len` stream bytes (skipped without payloads; null when the
+      * stream ends first), in an array that grows as they arrive.
+      */
+    private def readPayload(len: Int): Array[Byte] = {
+      var out = if (payloads) new Array[Byte](math.min(len, 1 << 23)) else Array.emptyByteArray
+      var off = 0
+      while (off < len) {
+        if (pos == lim && !fill(cross = true)) return null
+        val n = math.min(len - off, lim - pos)
+        if (payloads) {
+          if (off + n > out.length)
+            out = java.util.Arrays.copyOf(out, math.min(len.toLong, math.max(off + n, 2L * out.length)).toInt)
+          System.arraycopy(buf, pos, out, off, n)
+        }
+        pos += n; off += n
+      }
+      out
+    }
+
+    /** The next record; null at the end of the walk. */
+    def record(): Record = {
+      val r = next()
+      if (r == null && inf != null) inf.end()
+      r
+    }
+
+    private def next(): Record = {
+      if (!skipBlank(cross = true)) return null
+      val start = bufBase + pos
+      val startMember = member
+      val block = readHead()
+      if (block == null) return null
+      val lines = block.split("\r\n")
+      if (!lines(0).startsWith("WARC/")) return null
+      val headers = fields(lines).toMap
+      val cl = headers.get("content-length").flatMap(_.toLongOption).getOrElse(-1L)
+      if (cl < 0 || cl > MaxRecordBytes) return null
+      val payload = readPayload(cl.toInt)
+      if (payload == null) return null
+      val end = bufBase + pos
+      // a gzip member is the record's coordinate when the record is all
+      // it holds: no other record ends in it, and only CR/LF follows, up
+      // to the member's end, where the file position now is
+      val firstInMember = lastEndMember != startMember
+      lastEndMember = member
+      if (!gz) Record(headers, payload, start, end - start, seekable = true)
+      else if (firstInMember && member == startMember && !skipBlank(cross = false))
+        Record(headers, payload, memberStart, rawBase + rawPos - memberStart, seekable = true)
+      else Record(headers, payload, start, end - start, seekable = false)
+    }
+  }
 
   /** Parse one archive (plain or .warc.gz) into response pages.
     * Non-response records (warcinfo/request/metadata) are skipped by
     * their declared length; malformed HTTP envelopes surface `error`.
-    * An unreadable archive envelope yields ONE error record instead of
-    * silently vanishing — ingest must not silently drop pages.
+    * An unreadable gzip layer yields ONE error record after the pages
+    * before it, instead of the rest silently vanishing.
     */
   def parseWarc(archive: Array[Byte]): Seq[WarcRecord] =
-    inflate(archive) match {
-      case Left(err) =>
-        Seq(WarcRecord("", new Timestamp(0L), 0, Array.emptyByteArray, err))
-      case Right(bytes) =>
-        rawRecords(bytes).collect {
-          case (headers, payload) if headers.getOrElse("warc-type", "") == "response" =>
-            val url = headers.getOrElse("warc-target-uri", "")
-            val ts = headers.get("warc-date").flatMap(parseTs).getOrElse(new Timestamp(0L))
-            parseHttp(url, ts, payload)
-        }
+    responses(new ByteArrayInputStream(archive)).toVector
+
+  /** [[parseWarc]] over a stream, lazily. */
+  private[sources] def responses(in: InputStream): Iterator[WarcRecord] = {
+    val pages = records(in).filter(_.warcType == "response").map(response)
+    var failed = false
+    Iterator.continually(
+      if (failed) null
+      else try if (pages.hasNext) pages.next() else null
+      catch { case e: UnreadableArchive => failed = true; unreadable(e.getMessage) }
+    ).takeWhile(_ != null)
+  }
+
+  private def unreadable(error: String): WarcRecord =
+    WarcRecord("", new Timestamp(0L), 0, Array.emptyByteArray, error)
+
+  /** A response record as a page: its HTTP envelope stripped. */
+  private[sources] def response(r: Record): WarcRecord = parseHttp(r.url, r.date, r.payload)
+
+  /** The WET and WAT read: (url, date, UTF-8 payload) of one WARC type's records. */
+  private[sources] def texts(in: InputStream, warcType: String): Iterator[(String, Timestamp, String)] =
+    records(in).collect {
+      case r if r.warcType == warcType => (r.url, r.date, new String(r.payload, StandardCharsets.UTF_8))
     }
 
   private[graft] def parseTs(iso: String): Option[Timestamp] =
     try Some(Timestamp.from(java.time.Instant.parse(iso)))
     catch { case _: java.time.format.DateTimeParseException => None }
 
-  /** Strip the HTTP envelope: status line + headers, de-chunk, inflate. */
-  private def parseHttp(url: String, ts: Timestamp, payload: Array[Byte]): WarcRecord = {
+  /** Status code, header fields in order and body offset of an HTTP
+    * response envelope; None when the payload is not one. The one head
+    * parse behind [[parseHttp]] and [[httpHeaderView]].
+    */
+  private def httpHead(payload: Array[Byte]): Option[(Int, Seq[(String, String)], Int)] = {
+    if (!startsWithHttp(payload)) return None
     val hEnd = indexOf(payload, HeaderEnd, 0)
-    if (hEnd < 0 || !startsWithHttp(payload))
-      return WarcRecord(url, ts, 0, payload, "malformed http envelope")
-    val head = new String(payload, 0, hEnd, StandardCharsets.ISO_8859_1)
-    val lines = head.split("\r\n")
+    if (hEnd < 0) return None
+    val lines = new String(payload, 0, hEnd, StandardCharsets.ISO_8859_1).split("\r\n")
     val status = lines(0).split(" ", 3) match {
       case parts if parts.length >= 2 => parts(1).toIntOption.getOrElse(0)
       case _                          => 0
     }
-    val headers = lines.drop(1).flatMap { l =>
-      val c = l.indexOf(':')
-      if (c < 0) None else Some(l.substring(0, c).trim.toLowerCase -> l.substring(c + 1).trim)
-    }.toMap
+    Some((status, fields(lines), hEnd + 4))
+  }
+
+  /** Strip the HTTP envelope: status line + headers, de-chunk, inflate.
+    * A repeated header's last value wins.
+    */
+  private def parseHttp(url: String, ts: Timestamp, payload: Array[Byte]): WarcRecord = {
+    val (status, headers, bodyStart) = httpHead(payload) match {
+      case Some((s, h, b)) => (s, h.toMap, b)
+      case None            => return WarcRecord(url, ts, 0, payload, "malformed http envelope")
+    }
     // encoding headers are comma-separated LISTS ("gzip, chunked") and
     // x-gzip is the RFC 2616 alias — whole-value equality would pass the
     // undecoded bytes through untagged as a clean record
@@ -173,7 +337,7 @@ object WarcReader {
     val unsupported =
       te.filterNot(t => t == "chunked" || t == "identity") ++
         ce.filterNot(t => t == "gzip" || t == "x-gzip" || t == "identity")
-    var body = java.util.Arrays.copyOfRange(payload, hEnd + 4, payload.length)
+    var body = java.util.Arrays.copyOfRange(payload, bodyStart, payload.length)
     if (unsupported.nonEmpty)
       return WarcRecord(url, ts, status, body,
         s"unsupported encoding: ${unsupported.mkString(",")}")
@@ -195,33 +359,15 @@ object WarcReader {
 
   /** Public header view of one HTTP response envelope: status code +
     * lower-cased header map (first occurrence wins), None when the bytes
-    * are not an HTTP envelope. The curation surface over the SAME parse
-    * the ingest path runs: content-type distribution audits, and the
+    * are not an HTTP envelope. The curation surface over the SAME head
+    * parse the ingest path runs: content-type distribution audits, and the
     * cache validators (`etag`, `last-modified`) that drive
     * conditional-GET recrawl planning — a crawler that re-fetches a page
     * whose validators it already holds wastes the politeness budget
     * [[graft.operators.Revisit]] schedules.
     */
-  def httpHeaderView(payload: Array[Byte]): Option[(Int, Map[String, String])] = {
-    if (payload == null) return None
-    val hEnd = indexOf(payload, HeaderEnd, 0)
-    if (hEnd < 0 || !startsWithHttp(payload)) return None
-    val head = new String(payload, 0, hEnd, StandardCharsets.ISO_8859_1)
-    val lines = head.split("\r\n")
-    val status = lines(0).split(" ", 3) match {
-      case parts if parts.length >= 2 => parts(1).toIntOption.getOrElse(0)
-      case _                          => 0
-    }
-    val headers = lines.drop(1).foldLeft(Map.empty[String, String]) { (m, l) =>
-      val c = l.indexOf(':')
-      if (c < 0) m
-      else {
-        val k = l.substring(0, c).trim.toLowerCase
-        if (m.contains(k)) m else m + (k -> l.substring(c + 1).trim)
-      }
-    }
-    Some((status, headers))
-  }
+  def httpHeaderView(payload: Array[Byte]): Option[(Int, Map[String, String])] =
+    Option(payload).flatMap(httpHead).map { case (status, headers, _) => (status, headers.reverse.toMap) }
 
   /** RFC 7230 chunked decoding: hex-size line, data, CRLF, ... , 0-chunk.
     * Trailers after the 0-chunk are ignored. None on any malformation.
@@ -230,7 +376,7 @@ object WarcReader {
     val out = new java.io.ByteArrayOutputStream(b.length)
     var pos = 0
     while (true) {
-      val lineEnd = indexOf(b, "\r\n".getBytes(StandardCharsets.ISO_8859_1), pos)
+      val lineEnd = indexOf(b, Crlf, pos)
       if (lineEnd < 0) return None
       val sizeStr = new String(b, pos, lineEnd - pos, StandardCharsets.ISO_8859_1)
         .split(";")(0).trim // chunk extensions ignored
@@ -253,11 +399,12 @@ object WarcReader {
     * pages-shaped rows (url, warc_ts, html, lang='', plus
     * http_status/ingest_error for the gate). Archives are listed once on
     * the Spark driver and packed by bytes into at most
-    * `defaultParallelism` tasks (see [[ArchiveScan]]).
+    * `defaultParallelism` tasks (see [[ArchiveScan]]), each streaming its
+    * archives through the walk.
     */
   def readWarcs(spark: SparkSession, glob: String): DataFrame = {
     import spark.implicits._
-    ArchiveScan.read(spark, glob)((_, bytes) => parseWarc(bytes))
+    ArchiveScan.read(spark, glob)((_, in) => responses(in))
       .select(
         F.col("url"),
         F.col("warcTs").as("warc_ts"),
@@ -295,7 +442,6 @@ object WarcReader {
       gzipBody: Long => Boolean = _ => false,
       chunked: Long => Boolean = _ => false): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    def w(s: String): Unit = out.write(s.getBytes(StandardCharsets.ISO_8859_1))
     records.zipWithIndex.foreach { case ((url, ts, rawBody), i) =>
       val idx = i.toLong
       var body = rawBody
@@ -312,7 +458,7 @@ object WarcReader {
           val n = math.min(chunkSize, body.length - p)
           framed.write(s"${n.toHexString}\r\n".getBytes(StandardCharsets.ISO_8859_1))
           framed.write(body, p, n)
-          framed.write("\r\n".getBytes(StandardCharsets.ISO_8859_1))
+          framed.write(Crlf)
           p += n
         }
         framed.write("0\r\n\r\n".getBytes(StandardCharsets.ISO_8859_1))
@@ -320,17 +466,24 @@ object WarcReader {
         headers ++= "Transfer-Encoding: chunked\r\n"
       }
       val http = s"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n$headers\r\n"
-      val payloadLen = http.length + body.length
-      w("WARC/1.0\r\n")
-      w(s"WARC-Type: response\r\n")
-      w(s"WARC-Target-URI: $url\r\n")
-      w(s"WARC-Date: ${ts.toInstant}\r\n")
-      w(s"Content-Length: $payloadLen\r\n")
-      w("\r\n")
-      w(http)
-      out.write(body)
-      w("\r\n\r\n")
+      out.write(writeRecord("response", url, ts, Nil, http.getBytes(StandardCharsets.ISO_8859_1), body))
     }
+    out.toByteArray
+  }
+
+  /** One WARC/1.0 record: type, target URI and date, then `fields`,
+    * Content-Length and the payload, written in parts.
+    */
+  private[sources] def writeRecord(warcType: String, url: String, ts: Timestamp,
+      fields: Seq[(String, String)], payload: Array[Byte]*): Array[Byte] = {
+    val length = payload.map(_.length).sum
+    val head = ((Seq("WARC-Type" -> warcType, "WARC-Target-URI" -> url, "WARC-Date" -> ts.toInstant.toString) ++
+      fields :+ ("Content-Length" -> length.toString)).map { case (k, v) => s"$k: $v\r\n" })
+      .mkString("WARC/1.0\r\n", "", "\r\n").getBytes(StandardCharsets.ISO_8859_1)
+    val out = new java.io.ByteArrayOutputStream(head.length + length + HeaderEnd.length)
+    out.write(head)
+    payload.foreach(out.write)
+    out.write(HeaderEnd)
     out.toByteArray
   }
 
@@ -367,30 +520,18 @@ object WarcReader {
     */
   def writeWarcDeduped(records: Seq[(String, Timestamp, Array[Byte])]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    def w(s: String): Unit = out.write(s.getBytes(StandardCharsets.ISO_8859_1))
     val seen = scala.collection.mutable.HashMap.empty[String, (String, Timestamp)]
     records.foreach { case (url, ts, body) =>
       val digest = payloadDigest(body)
-      seen.get(digest) match {
+      out.write(seen.get(digest) match {
         case None =>
           seen(digest) = (url, ts)
-          val http = "HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
-          val payloadLen = http.length + body.length
-          w("WARC/1.0\r\nWARC-Type: response\r\n")
-          w(s"WARC-Target-URI: $url\r\nWARC-Date: ${ts.toInstant}\r\n")
-          w(s"WARC-Payload-Digest: $digest\r\n")
-          w(s"Content-Length: $payloadLen\r\n\r\n")
-          w(http); out.write(body); w("\r\n\r\n")
+          writeRecord("response", url, ts, Seq("WARC-Payload-Digest" -> digest),
+            "HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n".getBytes(StandardCharsets.ISO_8859_1), body)
         case Some((refUrl, refTs)) =>
-          w("WARC/1.0\r\nWARC-Type: revisit\r\n")
-          w(s"WARC-Target-URI: $url\r\nWARC-Date: ${ts.toInstant}\r\n")
-          w(s"WARC-Payload-Digest: $digest\r\n")
-          w(s"WARC-Profile: $RevisitProfile\r\n")
-          w(s"WARC-Refers-To-Target-URI: $refUrl\r\n")
-          w(s"WARC-Refers-To-Date: ${refTs.toInstant}\r\n")
-          w("Content-Length: 0\r\n\r\n")
-          w("\r\n\r\n")
-      }
+          writeRecord("revisit", url, ts, Seq("WARC-Payload-Digest" -> digest, "WARC-Profile" -> RevisitProfile,
+            "WARC-Refers-To-Target-URI" -> refUrl, "WARC-Refers-To-Date" -> refTs.toInstant.toString))
+      })
     }
     out.toByteArray
   }
@@ -403,37 +544,28 @@ object WarcReader {
     * digest-keyed JOIN of the distributed tier, not silent data loss).
     * Returns (resolved records, n_revisits_resolved).
     */
-  def parseWarcResolved(archive: Array[Byte]): (Seq[WarcRecord], Int) =
-    inflate(archive) match {
-      case Left(err) =>
-        (Seq(WarcRecord("", new Timestamp(0L), 0, Array.emptyByteArray, err)), 0)
-      case Right(bytes) =>
-        val entries = rawRecords(bytes).toSeq
-        val byDigest = scala.collection.mutable.HashMap.empty[String, WarcRecord]
-        val out = scala.collection.mutable.ArrayBuffer.empty[WarcRecord]
-        var resolved = 0
-        entries.foreach { case (headers, payload) =>
-          headers.getOrElse("warc-type", "") match {
-            case "response" =>
-              val url = headers.getOrElse("warc-target-uri", "")
-              val ts = headers.get("warc-date").flatMap(parseTs).getOrElse(new Timestamp(0L))
-              val rec = parseHttp(url, ts, payload)
-              headers.get("warc-payload-digest").foreach(d => byDigest.getOrElseUpdate(d, rec))
-              out += rec
-            case "revisit" =>
-              val url = headers.getOrElse("warc-target-uri", "")
-              val ts = headers.get("warc-date").flatMap(parseTs).getOrElse(new Timestamp(0L))
-              headers.get("warc-payload-digest").flatMap(byDigest.get) match {
-                case Some(ref) =>
-                  resolved += 1
-                  out += WarcRecord(url, ts, ref.httpStatus, ref.body, null)
-                case None =>
-                  out += WarcRecord(url, ts, 0, Array.emptyByteArray,
-                    "unresolved revisit: digest not in archive")
-              }
-            case _ => () // warcinfo/request/metadata skipped as in parseWarc
+  def parseWarcResolved(archive: Array[Byte]): (Seq[WarcRecord], Int) = {
+    val byDigest = scala.collection.mutable.HashMap.empty[String, WarcRecord]
+    val out = scala.collection.mutable.ArrayBuffer.empty[WarcRecord]
+    var resolved = 0
+    try records(new ByteArrayInputStream(archive)).foreach { r =>
+      r.warcType match {
+        case "response" =>
+          val rec = response(r)
+          r.headers.get("warc-payload-digest").foreach(d => byDigest.getOrElseUpdate(d, rec))
+          out += rec
+        case "revisit" =>
+          r.headers.get("warc-payload-digest").flatMap(byDigest.get) match {
+            case Some(ref) =>
+              resolved += 1
+              out += WarcRecord(r.url, r.date, ref.httpStatus, ref.body, null)
+            case None =>
+              out += WarcRecord(r.url, r.date, 0, Array.emptyByteArray,
+                "unresolved revisit: digest not in archive")
           }
-        }
-        (out.toSeq, resolved)
-    }
+        case _ => () // warcinfo/request/metadata skipped as in parseWarc
+      }
+    } catch { case e: UnreadableArchive => out += unreadable(e.getMessage) }
+    (out.toSeq, resolved)
+  }
 }

@@ -26,25 +26,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
   *
   * Scale shape: identical to WetSink — [[WetSink.writeArchives]] does the
   * one-file-per-task, temp-file + atomic-move, per-record-gzip-member
-  * publishing; readWat reads through the shared [[ArchiveScan]]. The
+  * publishing; readWat streams through the shared [[ArchiveScan]] and
+  * record walk ([[WarcReader.records]]). The
   * JSON body is caller-built (to_json over kernel outputs), so the sink
   * stays a pure serialization boundary.
   */
 object WatSink {
 
   /** Serialize one metadata record (headers ASCII, JSON body UTF-8). */
-  def writeRecord(url: String, ts: Timestamp, json: String): Array[Byte] = {
-    val body = (if (json == null) "" else json).getBytes(StandardCharsets.UTF_8)
-    val head =
-      s"WARC/1.0\r\nWARC-Type: metadata\r\nWARC-Target-URI: $url\r\n" +
-        s"WARC-Date: ${ts.toInstant}\r\nContent-Type: application/json\r\n" +
-        s"Content-Length: ${body.length}\r\n\r\n"
-    val out = new java.io.ByteArrayOutputStream(head.length + body.length + 4)
-    out.write(head.getBytes(StandardCharsets.ISO_8859_1))
-    out.write(body)
-    out.write("\r\n\r\n".getBytes(StandardCharsets.ISO_8859_1))
-    out.toByteArray
-  }
+  def writeRecord(url: String, ts: Timestamp, json: String): Array[Byte] =
+    WarcReader.writeRecord("metadata", url, ts, Seq("Content-Type" -> "application/json"),
+      (if (json == null) "" else json).getBytes(StandardCharsets.UTF_8))
 
   /** Write `df` (url, warc_ts, wat) as WAT archives under `outDir`, one
     * `part-NNNNN.warc.wat[.gz]` per input partition.
@@ -61,17 +53,11 @@ object WatSink {
     */
   def readWat(spark: SparkSession, glob: String): DataFrame = {
     import spark.implicits._
-    ArchiveScan.read(spark, glob)((_, bytes) => parseWat(bytes))
+    ArchiveScan.read(spark, glob)((_, in) => WarcReader.texts(in, "metadata"))
       .toDF("url", "warc_ts", "wat")
   }
 
-  /** Parse one WAT archive: metadata records only, payload decoded UTF-8. */
-  def parseWat(archive: Array[Byte]): Seq[(String, Timestamp, String)] = {
-    WarcReader.rawRecords(archive).collect {
-      case (headers, payload) if headers.getOrElse("warc-type", "") == "metadata" =>
-        (headers.getOrElse("warc-target-uri", ""),
-          headers.get("warc-date").flatMap(WarcReader.parseTs).getOrElse(new Timestamp(0L)),
-          new String(payload, StandardCharsets.UTF_8))
-    }
-  }
+  /** Parse one WAT archive: metadata records, UTF-8 payloads; damage throws. */
+  def parseWat(archive: Array[Byte]): Seq[(String, Timestamp, String)] =
+    WarcReader.texts(new java.io.ByteArrayInputStream(archive), "metadata").toVector
 }

@@ -28,30 +28,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
   *
   * Scale shape: `writeWet` is a foreachPartition sink — each task
   * serializes its partition into ONE archive file (gzipped as
-  * concatenated per-record members, the Common Crawl layout, so a
-  * future range reader can inflate records independently). File names
+  * concatenated per-record members, the Common Crawl layout, so each
+  * record's member is a seekable [[WarcIndex]] coordinate). File names
   * are deterministic in the partition id and writes go through a
   * temp-file + atomic-move, so a retried task republishes the same
-  * bytes instead of duplicating records. `readWet` reads the archives
-  * back through [[ArchiveScan]], packed by bytes into at most
+  * bytes instead of duplicating records. `readWet` streams the archives
+  * back through [[ArchiveScan]] and the record walk
+  * ([[WarcReader.records]]), packed by bytes into at most
   * `defaultParallelism` tasks. The Spark driver never sees row data; only
   * task-side streams.
   */
 object WetSink {
 
   /** Serialize one conversion record (headers ASCII, body UTF-8). */
-  def writeRecord(url: String, ts: Timestamp, text: String): Array[Byte] = {
-    val body = (if (text == null) "" else text).getBytes(StandardCharsets.UTF_8)
-    val head =
-      s"WARC/1.0\r\nWARC-Type: conversion\r\nWARC-Target-URI: $url\r\n" +
-        s"WARC-Date: ${ts.toInstant}\r\nContent-Type: text/plain\r\n" +
-        s"Content-Length: ${body.length}\r\n\r\n"
-    val out = new java.io.ByteArrayOutputStream(head.length + body.length + 4)
-    out.write(head.getBytes(StandardCharsets.ISO_8859_1))
-    out.write(body)
-    out.write("\r\n\r\n".getBytes(StandardCharsets.ISO_8859_1))
-    out.toByteArray
-  }
+  def writeRecord(url: String, ts: Timestamp, text: String): Array[Byte] =
+    WarcReader.writeRecord("conversion", url, ts, Seq("Content-Type" -> "text/plain"),
+      (if (text == null) "" else text).getBytes(StandardCharsets.UTF_8))
 
   /** Write `df` (url, warc_ts, text) as WET archives under `outDir`,
     * one `part-NNNNN.warc.wet[.gz]` per input partition. Caller controls
@@ -106,19 +98,13 @@ object WetSink {
     */
   def readWet(spark: SparkSession, glob: String): DataFrame = {
     import spark.implicits._
-    ArchiveScan.read(spark, glob)((_, bytes) => parseWet(bytes))
+    ArchiveScan.read(spark, glob)((_, in) => WarcReader.texts(in, "conversion"))
       .toDF("url", "warc_ts", "text")
   }
 
-  /** Parse one WET archive: conversion records only, payload decoded as
-    * UTF-8. Gzipped archives (single- or multi-member) inflate first.
+  /** Parse one WET archive, any layout: conversion records only, payload
+    * decoded as UTF-8. An unreadable gzip layer throws.
     */
-  def parseWet(archive: Array[Byte]): Seq[(String, Timestamp, String)] = {
-    WarcReader.rawRecords(archive).collect {
-      case (headers, payload) if headers.getOrElse("warc-type", "") == "conversion" =>
-        (headers.getOrElse("warc-target-uri", ""),
-          headers.get("warc-date").flatMap(WarcReader.parseTs).getOrElse(new Timestamp(0L)),
-          new String(payload, StandardCharsets.UTF_8))
-    }
-  }
+  def parseWet(archive: Array[Byte]): Seq[(String, Timestamp, String)] =
+    WarcReader.texts(new java.io.ByteArrayInputStream(archive), "conversion").toVector
 }

@@ -324,6 +324,14 @@ class SparkE2ESpec extends AnyFunSuite {
       val err = intercept[IllegalArgumentException](
         ManifestTable.commitAppend(spark, root, Seq(ok.copy(url = "u/b", warc_ts = null)).toDS()))
       assert(err.getMessage.contains("null warc_ts"))
+      // through ExtractJob the page is rejected before the kernel runs,
+      // and the error names its url
+      val page = Page("u/null-ts-page", null, "<p>x</p>".getBytes("UTF-8"), null, "en")
+      val pages = Seq(page, page.copy(url = "u/c", warc_ts = ok.warc_ts)).toDS()
+      val jobErr = intercept[Exception](ExtractJob.extractAll(pages, root, 1))
+      val chain = Iterator.iterate[Throwable](jobErr)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString("|")
+      assert(chain.contains("null warc_ts") && chain.contains("u/null-ts-page"), chain)
       val left = Using.resource(Files.list(java.nio.file.Paths.get(root))) { s =>
         s.iterator().asScala.map(_.getFileName.toString).filter(_.startsWith("_staging-")).toList
       }

@@ -23,13 +23,13 @@ class WarcIndexSpec extends AnyFunSuite {
 
   test("coordinates address every record; readRecordAt round-trips bodies") {
     val stream = WarcReader.writeWarc(recs, gzipBody = _ % 3 == 0, chunked = _ % 4 == 0)
-    val coords = graft.sources.WarcReader.rawRecordsWithOffsets(stream)
+    val coords = WarcReader.records(new java.io.ByteArrayInputStream(stream)).map(r => (r.offset, r.length)).toSeq
     assert(coords.length === 40)
     // offsets strictly increase and tile the stream without overlap
-    coords.sliding(2).foreach { case Seq((_, _, o1, l1), (_, _, o2, _)) =>
+    coords.sliding(2).foreach { case Seq((o1, l1), (o2, _)) =>
       assert(o1 + l1 <= o2)
     }
-    coords.zip(recs).foreach { case ((_, _, off, len), (url, t, body)) =>
+    coords.zip(recs).foreach { case ((off, len), (url, t, body)) =>
       val rec = WarcIndex.readRecordAt(stream, off, len).get
       assert(rec.url === url)
       assert(rec.warcTs === t)
@@ -74,27 +74,30 @@ class WarcIndexSpec extends AnyFunSuite {
   }
 
   test("gzip member bounds: walks concatenated members, incl. third-party header flags") {
-    val parts = Seq("alpha".getBytes("UTF-8"), "beta-longer-content".getBytes("UTF-8"),
-      "gamma".getBytes("UTF-8"))
-    val members = parts.map(Codecs.gzip)
+    def walk(b: Array[Byte]) = WarcReader.records(new java.io.ByteArrayInputStream(b)).toList
+    val members = recs.take(3).map(r => Codecs.gzip(WarcReader.writeWarc(Seq(r))))
     val stream = members.reduce(_ ++ _)
-    val bounds = Codecs.gzipMemberBounds(stream).get
-    assert(bounds.length === 3)
-    assert(bounds.head._1 === 0L)
-    bounds.zip(members).foldLeft(0L) { case (pos, ((off, len), m)) =>
-      assert(off === pos); assert(len === m.length.toLong); pos + len
+    val coords = walk(stream).map(r => (r.offset, r.length, r.seekable))
+    assert(coords.length === 3)
+    coords.zip(members).foldLeft(0L) { case (pos, ((off, len, seekable), m)) =>
+      assert(off === pos); assert(len === m.length.toLong); assert(seekable); pos + len
     }
-    assert(bounds.map(_._2).sum === stream.length.toLong)
     // third-party layout: a conformant writer may set FNAME (gzip CLI
-    // does) — splice a zero-terminated name into the header and set FLG
-    val named = members.head.clone()
-    val withName = named.take(3) ++ Array[Byte](8) ++ named.slice(4, 10) ++
-      "file.warc\u0000".getBytes("ISO-8859-1") ++ named.drop(10)
-    val b2 = Codecs.gzipMemberBounds(withName ++ members(1)).get
-    assert(b2.length === 2 && b2.head._2 === withName.length.toLong)
-    // truncated member stream refuses instead of mis-coordinating
-    assert(Codecs.gzipMemberBounds(stream.dropRight(5)).isEmpty)
-    assert(Codecs.gzipMemberBounds("not gzip".getBytes("UTF-8")).isEmpty)
+    // does) and FEXTRA — splice both into the header and set FLG
+    val named = members.head
+    val withName = named.take(3) ++ Array[Byte](12) ++ named.slice(4, 10) ++
+      Array[Byte](3, 0, 1, 2, 3) ++ "file.warc\u0000".getBytes("ISO-8859-1") ++ named.drop(10)
+    val c2 = walk(withName ++ members(1))
+    assert(c2.map(r => (r.offset, r.length)) === Seq((0L, withName.length.toLong),
+      (withName.length.toLong, members(1).length.toLong)))
+    assert(c2.head.url === recs.head._1)
+    // a truncated member stream gives the members before it, then refuses
+    // instead of mis-coordinating
+    val cut = WarcReader.records(new java.io.ByteArrayInputStream(stream.dropRight(5)))
+    assert(cut.next().offset === 0L && cut.next().offset === members.head.length.toLong)
+    assertThrows[WarcReader.UnreadableArchive](cut.hasNext)
+    // bytes without gzip magic are a plain archive: no record, no throw
+    assert(walk("not gzip".getBytes("UTF-8")).isEmpty)
   }
 
   test("per-record-gzipped archive: members are seekable coordinates; readSplit and fetch decode them") {

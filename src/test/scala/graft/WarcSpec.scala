@@ -92,7 +92,12 @@ class WarcSpec extends AnyFunSuite {
     assert(parsed.length == 1 && parsed.head.error != null &&
       parsed.head.error.contains("gunzip failed"))
     // the index/WET walk has no error channel: it must throw, not return empty
-    assertThrows[java.io.IOException](WarcReader.rawRecordsWithOffsets(corrupt))
+    assertThrows[java.io.IOException](WarcReader.records(new java.io.ByteArrayInputStream(corrupt)).toList)
+    // the pages before a bad member stay, and the error row follows them
+    val good = WarcReader.writeWarcRecordGz((0 until 3).map(i => (s"https://w/g$i", ts(i), body(i))))
+    val mixed = WarcReader.parseWarc(good ++ corrupt)
+    assert(mixed.map(_.url) == Seq("https://w/g0", "https://w/g1", "https://w/g2", ""))
+    assert(mixed.take(3).forall(_.error == null) && mixed.last.error.contains("gunzip failed"))
   }
 
   test("readWarcs: archives on disk -> pages-shaped rows; extraction runs downstream") {
