@@ -220,8 +220,7 @@ object BenchExtra {
   }
 
   private val StressSuspects = Seq(
-    "d_clusters", "d_cluster_histogram", "w_scc", "w_kcore", "w_trustrank",
-    "m_phash_neardup")
+    "d_clusters", "d_cluster_histogram", "w_kcore", "m_phash_neardup")
 
   /** Stress leg for the superlinear-suspect operators: runs each suspect
     * on `base`'s documents and on a deterministic 10× corpus derived from
@@ -239,9 +238,9 @@ object BenchExtra {
     * — their within-copy Jaccard is UNCHANGED — while the same doc across
     * copies shares only the unmutated 70% (cross-copy Jaccard ≈ 0.54,
     * safely under the 0.8 near-dup gate). Near-dup pairs and duplicate
-    * families therefore scale exactly 10×. The `w_*` suspects synthesize
-    * their graphs from doc_id modulo fixed constants, so their graph does
-    * not grow with the corpus. The derived corpus is cached
+    * families therefore scale exactly 10×. `w_kcore` synthesizes its
+    * graph from doc_id modulo fixed constants: its edge list grows with the
+    * corpus, its node set does not. The derived corpus is cached
     * under target/graft-stress. Output: STRESS_BENCH.json (rendered into
     * BENCH.md by Bench; the `sf01`/`sf1` keys name the base and 10× legs).
     */

@@ -221,8 +221,8 @@ object ExtractionQueries {
       // snapshot lifecycle driven through the manifest table from the driver
       // surface: day-split commit, high-watermark incremental re-extract,
       // and the hidden-partition PRUNED read — all checked by sf-invariant
-      // zeros (prunedRead's directory pruning is additionally plan-asserted
-      // in PartitionPruneSpec).
+      // zeros (what prunedRead opens, commits by manifest and row groups by
+      // p_day statistics, is guarded in PartitionPruneSpec).
       val pages = Corpus.pages(s, dir)
       val nTotal = pages.count()
       val root = java.nio.file.Files.createTempDirectory("graft-incr").toString

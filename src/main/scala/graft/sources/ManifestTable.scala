@@ -4,6 +4,7 @@ import graft.Extracted
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.collection.mutable
 import scala.concurrent.Await
@@ -14,11 +15,17 @@ import scala.jdk.CollectionConverters._
   * jar exists in this environment, so we emulate the three semantics the
   * north rule needs —
   *
-  *  1. **hidden partitioning**: each snapshot's data lives under
-  *     `data/commit_seq=N/p_day=YYYY-MM-DD/` where p_day is DERIVED from
-  *     warc_ts at write time and stripped from reads; queries filter on
-  *     warc_ts and [[prunedRead]] translates the range to partition-directory
-  *     pruning (the Catalyst analog: partition pruning on directory columns).
+  *  1. **hidden partitioning**: each snapshot's data lives flat under
+  *     `data/commit_seq=N/`, one parquet file per write task, rows sorted by
+  *     warc_ts within the file. `p_day` is DERIVED from warc_ts at write
+  *     time and stored as an ordinary column that reads do not return; the
+  *     manifest, not the directory tree, records which days a commit holds
+  *     (Iceberg's manifest-level partition values). [[prunedRead]] drops
+  *     the commits whose manifest lists no day in range before opening any
+  *     file, then filters the stored `p_day`, which parquet prunes by row
+  *     group statistics. A table written in the older
+  *     `commit_seq=N/p_day=D/` layout is not read: Spark's partition
+  *     discovery fails on the mixed directory shapes.
   *  2. **snapshot manifests**: every commit writes
   *     `_manifests/manifest-<seq>.json` (write-then-atomic-rename) recording
   *     per-partition lineage: p_day → rows/bytes/failures, plus the commit's
@@ -290,10 +297,10 @@ object ManifestTable {
               when(col("status") =!= "ok", 1L).otherwise(0L)).as("days"),
             max(unix_timestamp(col("warc_ts"))).as("hw"),
             bit_xor(RowFp).as("fp"))
+          .sortWithinPartitions("warc_ts")
           .write
           .options(StagedWriteOptions)
           .mode(SaveMode.Overwrite)
-          .partitionBy("p_day")
           .parquet(staging.toString)
         val t1 = System.nanoTime()
 
@@ -355,18 +362,20 @@ object ManifestTable {
 
   /** Fixed data schema — supplied explicitly so a table whose committed
     * snapshots are all empty (0-row no-op commits) still reads as an empty
-    * DataFrame instead of failing schema inference.
+    * DataFrame instead of failing schema inference. It leaves out the
+    * stored `p_day`, so reads never return it.
     */
   private val dataSchema = org.apache.spark.sql.Encoders.product[Extracted].schema
 
-  /** The rows of the commits `seqs`, with the hidden `p_day` and
-    * `commit_seq` partition columns still attached. Every table read goes
+  /** The rows of the commits `seqs` in `schema`, with the hidden
+    * `commit_seq` directory column still attached. Every table read goes
     * through here.
     */
-  private def scan(spark: SparkSession, root: String, seqs: Seq[Long]): DataFrame =
+  private def scan(spark: SparkSession, root: String, seqs: Seq[Long],
+      schema: StructType = dataSchema): DataFrame =
     spark.read
       .option("basePath", dataPath(root))
-      .schema(dataSchema)
+      .schema(schema)
       .parquet(seqs.map(q => commitDir(root, q).toString): _*)
 
   /** The live commit seqs; a root without a committed snapshot fails. */
@@ -381,17 +390,24 @@ object ManifestTable {
     * (data-moved-but-unpublished) commit is never read.
     */
   def read(spark: SparkSession, root: String): DataFrame =
-    scan(spark, root, liveOrFail(root)).drop("p_day", "commit_seq")
+    scan(spark, root, liveOrFail(root)).drop("commit_seq")
 
-  /** Read with hidden-partition pruning: a warc_ts day range is translated to
-    * p_day directory predicates BEFORE the scan, so only matching partition
-    * directories are listed/read — the emulated Iceberg hidden-partitioning
-    * benefit (SURVEY.md §4.2).
+  /** Read the rows whose `p_day` lies in `[fromDay, toDay]` — the emulated
+    * Iceberg hidden-partitioning benefit (SURVEY.md §4.2). A live commit is
+    * listed only when its own manifest records a day in range (one whose
+    * manifest has expired is kept: nothing says it can be skipped). The
+    * stored `p_day` filter then reaches parquet, whose row-group min/max
+    * are tight because the write sorts each file by warc_ts.
     */
-  def prunedRead(spark: SparkSession, root: String, fromDay: String, toDay: String): DataFrame =
-    scan(spark, root, liveOrFail(root))
-      .filter(col("p_day").cast("string") >= fromDay && col("p_day").cast("string") <= toDay)
+  def prunedRead(spark: SparkSession, root: String, fromDay: String, toDay: String): DataFrame = {
+    val own = listManifests(root).map(p => seqOf(p) -> p).toMap
+    val seqs = liveOrFail(root).filter(q => own.get(q).forall(p =>
+      parseStats(Files.readString(p)).exists(s => s.p_day >= fromDay && s.p_day <= toDay)))
+    if (seqs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), dataSchema)
+    else scan(spark, root, seqs, dataSchema.add("p_day", StringType))
+      .filter(col("p_day") >= fromDay && col("p_day") <= toDay)
       .drop("p_day", "commit_seq")
+  }
 
   /** Status value marking a url-level delete; a tombstone row is a normal
     * committed row with this status, so deletes ride the exact same
@@ -461,7 +477,7 @@ object ManifestTable {
     scan(spark, root, liveOrFail(root))
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
-      .drop("__rn", "p_day", "commit_seq")
+      .drop("__rn", "commit_seq")
   }
 
   def exists(root: String): Boolean =
@@ -649,7 +665,7 @@ $parts
       throw new IllegalStateException(
         s"snapshot $asOfSeq references vacuumed data $d; its time-travel window has expired")
     }
-    scan(spark, root, seqs).drop("p_day", "commit_seq")
+    scan(spark, root, seqs).drop("commit_seq")
   }
 
   /** Canonical per-row fingerprint (one column value, so the write-side

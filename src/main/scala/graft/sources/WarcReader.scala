@@ -21,9 +21,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
   *     payload past [[MaxRecordBytes]], a cut-short record or any malformed
   *     tail ends the walk quietly;
   *   - damage in the gzip layer (a corrupt or truncated member, or bytes
-  *     after a member that start no other) throws [[UnreadableArchive]]
-  *     after the records before it: one error record from [[parseWarc]] and
-  *     [[readWarcs]], a failure from index, WET and WAT reads;
+  *     after a member that start no other), or a non-empty archive that
+  *     starts with neither gzip magic nor `WARC/`, throws
+  *     [[UnreadableArchive]] after the records before it: one error record
+  *     from [[parseWarc]] and [[readWarcs]], a failure from index, WET and
+  *     WAT reads;
   *   - only `WARC-Type: response` records become pages; warcinfo /
   *     request / metadata records are skipped by their declared length —
   *     never scanned for content;
@@ -64,7 +66,9 @@ object WarcReader {
     def date: Timestamp = headers.get("warc-date").flatMap(parseTs).getOrElse(new Timestamp(0L))
   }
 
-  /** The gzip layer of an archive cannot be read past this point. */
+  /** The archive cannot be read past this point: its gzip layer is
+    * damaged, or it starts with neither gzip magic nor a record.
+    */
   final class UnreadableArchive(message: String) extends IOException(message)
 
   /** Longest payload one record may declare. */
@@ -75,6 +79,7 @@ object WarcReader {
 
   private val HeaderEnd = "\r\n\r\n".getBytes(StandardCharsets.ISO_8859_1)
   private val Crlf = "\r\n".getBytes(StandardCharsets.ISO_8859_1)
+  private val WarcMagic = "WARC/".getBytes(StandardCharsets.ISO_8859_1)
 
   private def indexOf(hay: Array[Byte], needle: Array[Byte], from: Int): Int = {
     var i = from
@@ -200,6 +205,15 @@ object WarcReader {
     }
 
     private var head = new Array[Byte](1024)
+    private var started = false
+
+    /** A plain stream's first bytes must begin a WARC record: a non-empty
+      * archive that starts with neither that nor gzip magic (a `.warc.gz`
+      * whose first magic byte is damaged, say) is unreadable, not empty.
+      */
+    private def checkStart(n: Int): Unit =
+      if (!gz && !started && (0 until math.min(n, WarcMagic.length)).exists(i => head(i) != WarcMagic(i)))
+        throw new UnreadableArchive("archive starts with neither gzip magic nor a WARC record")
 
     /** The header block before its blank line; null when the stream ends
       * or [[MaxHeaderBytes]] pass first.
@@ -207,11 +221,13 @@ object WarcReader {
     private def readHead(): String = {
       var n = 0
       while (n < 4 || head(n - 4) != '\r' || head(n - 3) != '\n' || head(n - 2) != '\r' || head(n - 1) != '\n') {
-        if (n == MaxHeaderBytes || (pos == lim && !fill(cross = true))) return null
+        if (n == MaxHeaderBytes || (pos == lim && !fill(cross = true))) { checkStart(n); return null }
         if (n == head.length) head = java.util.Arrays.copyOf(head, math.min(2 * n, MaxHeaderBytes))
         head(n) = buf(pos)
         n += 1; pos += 1
+        if (n == WarcMagic.length) checkStart(n)
       }
+      started = true
       new String(head, 0, n - 4, StandardCharsets.ISO_8859_1)
     }
 

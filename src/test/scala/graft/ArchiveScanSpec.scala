@@ -120,13 +120,17 @@ class ArchiveScanSpec extends AnyFunSuite {
     withDir { dir =>
       write(dir.resolve("small.warc"), WarcReader.writeWarc(Seq(page(0))))
       // sparse: setLength writes no data, so the file reads as zeros, which
-      // hold no header end within WarcReader.MaxHeaderBytes
+      // start neither a gzip member nor a WARC record
       val huge = new java.io.RandomAccessFile(dir.resolve("huge.warc.gz").toFile, "rw")
       try huge.setLength((2L << 30) + 1) finally huge.close()
       import spark.implicits._
-      val urls = WarcReader.readWarcs(spark, dir.toString).select($"url").as[String].collect()
-      assert(urls.toSeq == Seq(page(0)._1))
-      assert(WarcIndex.index(spark, dir.toString).count() == 1L)
+      val rows = WarcReader.readWarcs(spark, dir.toString)
+        .select($"url", $"ingest_error").as[(String, String)].collect().sortBy(_._1)
+      assert(rows.map(_._1).toSeq == Seq("", page(0)._1))
+      assert(rows.head._2.contains("neither gzip magic nor a WARC record") && rows(1)._2 == null)
+      val err = intercept[Exception](WarcIndex.index(spark, dir.toString).count())
+      assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[WarcReader.UnreadableArchive]), err)
     }
     // the same zeros as a stream that counts what the walk reads of it
     var consumed = 0L
@@ -142,7 +146,7 @@ class ArchiveScanSpec extends AnyFunSuite {
           n
         }
     }
-    assert(WarcReader.records(zeros).isEmpty)
+    assertThrows[WarcReader.UnreadableArchive](WarcReader.records(zeros).hasNext)
     assert(consumed <= WarcReader.MaxHeaderBytes + (1 << 17), s"the walk read $consumed bytes")
   }
 

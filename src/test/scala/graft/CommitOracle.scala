@@ -16,6 +16,8 @@ object CommitOracle {
 
   def lineage(spark: SparkSession, root: String, seq: Long): Lineage = {
     val dir = Paths.get(ManifestTable.dataPath(root), s"commit_seq=$seq")
+    // an empty commit holds no file, or one schema-only file when its
+    // first write task had no rows: either way no lineage
     if (!Fs.hasParquetFiles(dir)) Lineage(Nil, 0L, 0L)
     else {
       val agg = spark.read
@@ -32,7 +34,7 @@ object CommitOracle {
       Lineage(
         agg.map(r => PartitionStat(r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
           .sortBy(_.p_day).toSeq,
-        agg.map(_.getLong(4)).max,
+        agg.map(_.getLong(4)).maxOption.getOrElse(0L),
         agg.foldLeft(0L)((acc, r) => acc ^ r.getLong(5)))
     }
   }

@@ -10,16 +10,16 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   */
 object JobCensus {
 
-  final case class Counts(jobs: Int, stages: Int, tasks: Int, shuffleBytes: Long)
+  final case class Counts(jobs: Int, stages: Int, tasks: Int, shuffleBytes: Long, writers: Int)
 
-  /** Jobs, stages, finished tasks and shuffle bytes (read + written) that
-    * `body` ran.
+  /** Jobs, stages, finished tasks, shuffle bytes (read + written) and tasks
+    * that wrote at least one output record, that `body` ran.
     */
   def of(spark: SparkSession)(body: => Unit): Counts = {
     val sc = spark.sparkContext
     val drain = "census-drain"
     val jobs, stages, drained = ConcurrentHashMap.newKeySet[Int]()
-    val tasks = new AtomicInteger()
+    val tasks, writers = new AtomicInteger()
     val shuffle = new AtomicLong()
     def counted(props: java.util.Properties) =
       props == null || props.getProperty("spark.jobGroup.id") != drain
@@ -32,9 +32,11 @@ object JobCensus {
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         if (stages.contains(e.stageId)) {
           tasks.incrementAndGet()
-          if (e.taskMetrics != null)
+          if (e.taskMetrics != null) {
             shuffle.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten +
               e.taskMetrics.shuffleReadMetrics.totalBytesRead)
+            if (e.taskMetrics.outputMetrics.recordsWritten > 0) writers.incrementAndGet()
+          }
           ()
         }
     }
@@ -50,7 +52,7 @@ object JobCensus {
       while (!drained.contains(marker) && System.nanoTime() < deadline) Thread.sleep(5)
       if (!drained.contains(marker))
         throw new IllegalStateException("listener events did not drain within 30 s")
-      Counts(jobs.size, stages.size, tasks.get, shuffle.get)
+      Counts(jobs.size, stages.size, tasks.get, shuffle.get, writers.get)
     } finally sc.removeSparkListener(l)
   }
 }

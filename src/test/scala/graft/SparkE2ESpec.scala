@@ -143,7 +143,7 @@ class SparkE2ESpec extends AnyFunSuite {
     val torn = pages.filter(xxhash64($"url") % 2 =!= 0).as[Page]
     ExtractKernel.extract(torn)
       .withColumn("p_day", date_format($"warc_ts", "yyyy-MM-dd"))
-      .write.partitionBy("p_day")
+      .write
       .parquet(s"${ManifestTable.dataPath(root)}/commit_seq=1")
     // reads are manifest-scoped: torn rows invisible
     assert(ManifestTable.read(spark, root).count() == nCommitted)
@@ -284,17 +284,21 @@ class SparkE2ESpec extends AnyFunSuite {
     import spark.implicits._
     val root = tmpRoot("encodings")
     try {
-      CommitOracle.check(spark, root, ExtractJob.extractAll(Corpus.generate(spark, 200L, 4), root, 4))
+      val first = JobCensus.of(spark)(CommitOracle.check(spark, root,
+        ExtractJob.extractAll(Corpus.generate(spark, 200L, 4), root, 4)))
       // distinct texts and urls fall back to plain encoding on their own; a
       // batch that repeats them would keep a dictionary unless it is off
       val day = java.sql.Timestamp.valueOf("2025-03-01 00:00:00")
       val repeats = (0 until 40).map(i =>
         Extracted(s"u/${i % 4}", day, "txt", TextAssembly.NoText, "utf-8", "ok", null, 1, 1L))
-      CommitOracle.check(spark, root, ManifestTable.commitAppend(spark, root, repeats.toDS().repartition(1)))
+      val second = JobCensus.of(spark)(CommitOracle.check(spark, root,
+        ManifestTable.commitAppend(spark, root, repeats.toDS().repartition(1))))
       val files = Using.resource(Files.walk(java.nio.file.Paths.get(ManifestTable.dataPath(root)))) { s =>
         s.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).toList
       }
-      assert(files.size > 1, s"files: $files")
+      // one file per write task that wrote rows, whatever days it holds
+      assert((first.writers, second.writers) == ((4, 1)))
+      assert(files.size == first.writers + second.writers, s"files: $files")
       val conf = spark.sparkContext.hadoopConfiguration
       val footers = files.map { f =>
         f -> Using.resource(ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(f.toUri), conf)))(_.getFooter)
@@ -305,11 +309,11 @@ class SparkE2ESpec extends AnyFunSuite {
           .groupMapReduce(_._1)(_._2)(_ || _)
         Seq("text", "url").foreach(c => assert(dict.get(c).contains(false), s"$c in $f: $dict"))
         // parquet itself drops a dictionary no smaller than the plain
-        // values, which happens in files of one to three rows
-        if (footer.getBlocks.asScala.map(_.getRowCount).sum >= 10)
-          Seq("format", "status", "charset").foreach(c => assert(dict.get(c).contains(true), s"$c in $f: $dict"))
+        // values, which happens in files of one to three rows; every file
+        // here holds a whole task's rows
+        assert(footer.getBlocks.asScala.map(_.getRowCount).sum >= 10, s"rows in $f")
+        Seq("format", "status", "charset").foreach(c => assert(dict.get(c).contains(true), s"$c in $f: $dict"))
       }
-      assert(footers.count(_._2.getBlocks.asScala.map(_.getRowCount).sum >= 10) > 5)
       assert(footers.exists(_._2.getBlocks.asScala.map(_.getRowCount).sum == 40L))
     } finally Fs.deleteRecursively(java.nio.file.Paths.get(root))
   }

@@ -307,9 +307,8 @@ class UpsertSpec extends AnyFunSuite {
       val victim = java.nio.file.Paths.get(root, "data", s"commit_seq=${seqs.head}")
       val rows = spark.read.parquet(victim.toString)
       val corrupted = rows.withColumn("text", concat($"text", lit("!")))
-        .withColumn("p_day", $"p_day".cast("string"))
       val tmp = tmpRoot("integrity-rewrite")
-      corrupted.write.mode("overwrite").partitionBy("p_day").parquet(tmp)
+      corrupted.write.mode("overwrite").parquet(tmp)
       graft.Fs.deleteRecursively(victim)
       java.nio.file.Files.move(java.nio.file.Paths.get(tmp), victim)
       java.nio.file.Files.deleteIfExists(victim.resolve("_SUCCESS"))

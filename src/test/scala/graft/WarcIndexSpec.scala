@@ -96,8 +96,10 @@ class WarcIndexSpec extends AnyFunSuite {
     val cut = WarcReader.records(new java.io.ByteArrayInputStream(stream.dropRight(5)))
     assert(cut.next().offset === 0L && cut.next().offset === members.head.length.toLong)
     assertThrows[WarcReader.UnreadableArchive](cut.hasNext)
-    // bytes without gzip magic are a plain archive: no record, no throw
-    assert(walk("not gzip".getBytes("UTF-8")).isEmpty)
+    // bytes that start neither a gzip member nor a WARC record are
+    // refused; an empty file is an empty archive
+    assertThrows[WarcReader.UnreadableArchive](walk("not gzip".getBytes("UTF-8")))
+    assert(walk(Array.emptyByteArray).isEmpty)
   }
 
   test("per-record-gzipped archive: members are seekable coordinates; readSplit and fetch decode them") {
