@@ -24,14 +24,12 @@ import java.util.concurrent.atomic.AtomicLong
   *   explain <sfDir> <out> <q...> write .explain("formatted") of each query
   *                               to <out>/<query>.txt, or to <out>/<file>
   *                               for a `<query>:<file>` argument.
-  *   trace <sfDir> <query...>    run each query once (after one warmup) and
-  *                               print every Spark job it launched with its
-  *                               wall time and description.
-  *   jobs <sfDir> <query...>     run each query once (after one warmup) and
-  *                               report how many Spark jobs + stages it
-  *                               launched — the fixed-overhead census that
-  *                               explains multi-second timings on KB-sized
-  *                               tables.
+  *   jobs <sfDir> <query...>     run each query once after one warmup, under
+  *                               [[JobCensus]]: one QUERY_JOBS line (time,
+  *                               jobs, stages, tasks, shuffle bytes, spill,
+  *                               GC), then each job with its wall time and
+  *                               description — the fixed-overhead census
+  *                               behind multi-second timings on KB tables.
   *   kernels                     the extraction kernels alone, no Spark:
   *                               20,000 CorpusGen pages pulled off one
   *                               shared index by 1, nproc/4 and nproc
@@ -69,7 +67,7 @@ object BenchExtra {
   }
 
   private val Usage =
-    "usage: BenchExtra <time|noop|trace|jobs> <sfDir> <query...> | " +
+    "usage: BenchExtra <time|noop|jobs> <sfDir> <query...> | " +
       "explain <sfDir> <outDir> <query[:file]...> | kernels | stress <sfDir> | soak [n]"
 
   def main(args: Array[String]): Unit = args.toSeq match {
@@ -120,63 +118,16 @@ object BenchExtra {
           s.sharedState.cacheManager.clearCache()
           println(s"EXPLAIN_WRITTEN $name -> ${outDir.resolve(file)}")
         }
-      case "trace" =>
-        val sc = s.sparkContext
-        for (name <- args) {
-          SparkEntry.queries(name)(s, sfDir).count() // warm
-          s.sharedState.cacheManager.clearCache()
-          val events = new java.util.concurrent.ConcurrentLinkedQueue[String]
-          val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]
-          val listener = new org.apache.spark.scheduler.SparkListener {
-            override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-              val desc = Option(j.properties)
-                .flatMap(p => Option(p.getProperty("spark.job.description")))
-                .orElse(Option(j.properties)
-                  .flatMap(p => Option(p.getProperty("callSite.short"))))
-                .getOrElse("?")
-              starts.put(j.jobId, (System.nanoTime(), desc)); ()
-            }
-            override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-              val st = starts.remove(j.jobId)
-              if (st != null) {
-                val ms = (System.nanoTime() - st._1) / 1e6
-                events.add(f"  job ${j.jobId}%4d ${ms}%8.1f ms  ${st._2.take(110)}"); ()
-              }
-            }
-          }
-          sc.addSparkListener(listener)
-          val t = timeIt(SparkEntry.queries(name)(s, sfDir).count())
-          Thread.sleep(400)
-          sc.removeSparkListener(listener)
-          s.sharedState.cacheManager.clearCache()
-          println(f"QUERY_TRACE $name $t%.3f")
-          events.forEach(e => println(e))
-        }
       case "jobs" =>
-        val sc = s.sparkContext
         for (name <- args) {
           SparkEntry.queries(name)(s, sfDir).count() // warm (JIT + codegen)
           s.sharedState.cacheManager.clearCache()
-          val listener = new org.apache.spark.scheduler.SparkListener {
-            val jobs = new java.util.concurrent.atomic.AtomicInteger
-            val stages = new java.util.concurrent.atomic.AtomicInteger
-            val tasks = new java.util.concurrent.atomic.AtomicInteger
-            override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-              jobs.incrementAndGet(); ()
-            }
-            override def onStageCompleted(
-                st: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-              stages.incrementAndGet()
-              tasks.addAndGet(st.stageInfo.numTasks); ()
-            }
-          }
-          sc.addSparkListener(listener)
-          val t = timeIt(SparkEntry.queries(name)(s, sfDir).count())
-          Thread.sleep(300) // let listener events drain
-          sc.removeSparkListener(listener)
+          var t = 0.0
+          val c = JobCensus.of(s) { t = timeIt(SparkEntry.queries(name)(s, sfDir).count()) }
           s.sharedState.cacheManager.clearCache()
-          println(f"QUERY_JOBS $name $t%.3f jobs=${listener.jobs.get} " +
-            f"stages=${listener.stages.get} tasks=${listener.tasks.get}")
+          println(f"QUERY_JOBS $name $t%.3f jobs=${c.jobs} stages=${c.stages} tasks=${c.tasks} " +
+            s"shuffle_bytes=${c.shuffleBytes} spill_bytes=${c.spillBytes} gc_ms=${c.gcMs}")
+          c.perJob.foreach(j => println(f"  job ${j.id}%4d ${j.wallMs}%8d ms  ${j.description.take(110)}"))
         }
       case other => throw new IllegalArgumentException(s"unknown mode $other\n$Usage")
     }
@@ -310,7 +261,8 @@ object BenchExtra {
     * after [[ManifestTable.compact]].
     *
     * Output: SOAK_BENCH.json (rendered into BENCH.md by Bench): per-decile
-    * mean commit latency, first/last-thousand means (fewer when n < 1000),
+    * mean commit latency, the means of the first and last n / 10 commits
+    * (`window_commits`; `first_1k`/`last_1k` name the default window),
     * p50/p99, the least-squares slope in µs/commit, and the read timings.
     */
   private def soak(s: SparkSession, n: Int): Unit = {
@@ -342,8 +294,9 @@ object BenchExtra {
     val p50 = sorted(n / 2)
     val p99 = sorted(n * 99 / 100)
     def mean(xs: Array[Double]) = xs.sum / xs.length
-    val first1k = mean(lat.take(1000))
-    val last1k = mean(lat.takeRight(1000))
+    val window = n / 10
+    val first1k = mean(lat.take(window))
+    val last1k = mean(lat.takeRight(window))
     // least-squares slope of latency vs commit index, reported in µs/commit
     val xm = (n - 1) / 2.0
     val ym = lat.sum / n
@@ -363,7 +316,7 @@ object BenchExtra {
       s"soak table lost rows: $rowsRaw vs $rowsCompacted vs ${n * 10}")
 
     val json =
-      s"""{"n_commits":$n,"rows_per_commit":10,""" +
+      s"""{"n_commits":$n,"rows_per_commit":10,"window_commits":$window,""" +
         s""""decile_mean_sec":[${deciles.map(d => f"$d%.4f").mkString(",")}],""" +
         s""""first_1k_mean_sec":${f"$first1k%.4f"},"last_1k_mean_sec":${f"$last1k%.4f"},""" +
         s""""p50_sec":${f"$p50%.4f"},"p99_sec":${f"$p99%.4f"},""" +

@@ -28,32 +28,6 @@ object TextStats {
 
   def tokenCount(text: String): Int = tokens(text).length
 
-  /** BPE-ish subword count: letter runs, digit runs, single punctuation —
-    * a cheap deterministic proxy for tokenizer cost estimation.
-    */
-  def subwordCount(text: String): Int = {
-    var count = 0
-    var i = 0
-    val n = text.length
-    while (i < n) {
-      val c = text.charAt(i)
-      if (Character.isWhitespace(c)) i += 1
-      else if (Character.isLetter(c)) {
-        var j = i
-        while (j < n && Character.isLetter(text.charAt(j))) j += 1
-        // letter runs split every 6 chars (subword-ish granularity)
-        count += (j - i + 5) / 6
-        i = j
-      } else if (Character.isDigit(c)) {
-        var j = i
-        while (j < n && Character.isDigit(text.charAt(j))) j += 1
-        count += (j - i + 2) / 3
-        i = j
-      } else { count += 1; i += 1 }
-    }
-    count
-  }
-
   // ---- line-level cleaning (C4 rules) ------------------------------------
 
   final case class LineCleanResult(cleaned: String, nLines: Int, nKept: Int, nKeptWords: Int)

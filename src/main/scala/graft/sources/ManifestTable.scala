@@ -86,7 +86,7 @@ object ManifestTable {
   final case class CommitPhases(stage: Double, stats: Double, move: Double, publish: Double)
 
   // keyed by root: the commit protocol serializes commits WITHIN a root
-  // (nextSeq is per-root), so per-root last-phases cannot race with a
+  // (sequence numbers are per-root), so per-root last-phases cannot race with a
   // concurrent committer on a different root (e.g. a streaming sink
   // committing elsewhere while the bench measures its own temp root)
   private val phasesByRoot =
@@ -561,12 +561,9 @@ $parts
   private def publishedSeqs(root: String): Seq[Long] =
     listManifests(root).map(seqOf)
 
-  private def nextSeq(root: String): Long =
-    publishedSeqs(root).lastOption.map(_ + 1).getOrElse(0L)
-
   /** Per-root (lastPublishedSeq, its live set) — the ONLY manifest state a
     * commit needs. Without it every commit pays two O(#manifests)
-    * directory listings (nextSeq + latestManifest) plus an O(live-set)
+    * directory listings (next seq + latest manifest) plus an O(live-set)
     * manifest re-parse; the 10^4-commit soak measured that as a real
     * latency slope (~6.5 µs/commit, +28% by commit 10,000). With it a
     * commit's manifest-state cost is two Files.exists probes. Guarded by

@@ -17,15 +17,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
   *     trailers checked). Plain, whole-archive gzip, per-record gzip and
   *     several records per member are one code path; heap is one record;
   *   - record grammar: `WARC/1.0\r\n` + headers + `\r\n` + Content-Length
-  *     payload + `\r\n\r\n`. A header block past [[MaxHeaderBytes]], a
-  *     payload past [[MaxRecordBytes]], a cut-short record or any malformed
-  *     tail ends the walk quietly;
+  *     payload + `\r\n\r\n`. A stream that ends inside a record ends the
+  *     walk quietly;
   *   - damage in the gzip layer (a corrupt or truncated member, or bytes
-  *     after a member that start no other), or a non-empty archive that
-  *     starts with neither gzip magic nor `WARC/`, throws
-  *     [[UnreadableArchive]] after the records before it: one error record
-  *     from [[parseWarc]] and [[readWarcs]], a failure from index, WET and
-  *     WAT reads;
+  *     after a member that start no other), a non-empty archive that
+  *     starts with neither gzip magic nor `WARC/`, or a malformed record
+  *     header (a header block past [[MaxHeaderBytes]], no `WARC/` line, or
+  *     a `Content-Length` that is missing, not a number or past
+  *     [[MaxRecordBytes]]) throws [[UnreadableArchive]] after the records
+  *     before it: one error record from [[parseWarc]] and [[readWarcs]], a
+  *     failure from index, WET and WAT reads;
   *   - only `WARC-Type: response` records become pages; warcinfo /
   *     request / metadata records are skipped by their declared length —
   *     never scanned for content;
@@ -66,9 +67,7 @@ object WarcReader {
     def date: Timestamp = headers.get("warc-date").flatMap(parseTs).getOrElse(new Timestamp(0L))
   }
 
-  /** The archive cannot be read past this point: its gzip layer is
-    * damaged, or it starts with neither gzip magic nor a record.
-    */
+  /** The archive cannot be read past this point (see the object doc). */
   final class UnreadableArchive(message: String) extends IOException(message)
 
   /** Longest payload one record may declare. */
@@ -215,13 +214,17 @@ object WarcReader {
       if (!gz && !started && (0 until math.min(n, WarcMagic.length)).exists(i => head(i) != WarcMagic(i)))
         throw new UnreadableArchive("archive starts with neither gzip magic nor a WARC record")
 
+    private def malformed(why: String, at: Long): Nothing =
+      throw new UnreadableArchive(s"malformed WARC record: $why (record at stream byte $at)")
+
     /** The header block before its blank line; null when the stream ends
-      * or [[MaxHeaderBytes]] pass first.
+      * first. A block past [[MaxHeaderBytes]] is malformed.
       */
-    private def readHead(): String = {
+    private def readHead(at: Long): String = {
       var n = 0
       while (n < 4 || head(n - 4) != '\r' || head(n - 3) != '\n' || head(n - 2) != '\r' || head(n - 1) != '\n') {
-        if (n == MaxHeaderBytes || (pos == lim && !fill(cross = true))) { checkStart(n); return null }
+        if (n == MaxHeaderBytes) malformed(s"no header end within $MaxHeaderBytes bytes", at)
+        if (pos == lim && !fill(cross = true)) { checkStart(n); return null }
         if (n == head.length) head = java.util.Arrays.copyOf(head, math.min(2 * n, MaxHeaderBytes))
         head(n) = buf(pos)
         n += 1; pos += 1
@@ -261,13 +264,13 @@ object WarcReader {
       if (!skipBlank(cross = true)) return null
       val start = bufBase + pos
       val startMember = member
-      val block = readHead()
+      val block = readHead(start)
       if (block == null) return null
       val lines = block.split("\r\n")
-      if (!lines(0).startsWith("WARC/")) return null
+      if (!lines(0).startsWith("WARC/")) malformed("no WARC/ version line", start)
       val headers = fields(lines).toMap
-      val cl = headers.get("content-length").flatMap(_.toLongOption).getOrElse(-1L)
-      if (cl < 0 || cl > MaxRecordBytes) return null
+      val cl = headers.get("content-length").flatMap(_.toLongOption).filter(l => l >= 0 && l <= MaxRecordBytes)
+        .getOrElse(malformed(s"Content-Length missing, not a number or past $MaxRecordBytes", start))
       val payload = readPayload(cl.toInt)
       if (payload == null) return null
       val end = bufBase + pos
@@ -286,7 +289,7 @@ object WarcReader {
   /** Parse one archive (plain or .warc.gz) into response pages.
     * Non-response records (warcinfo/request/metadata) are skipped by
     * their declared length; malformed HTTP envelopes surface `error`.
-    * An unreadable gzip layer yields ONE error record after the pages
+    * An unreadable archive yields ONE error record after the pages
     * before it, instead of the rest silently vanishing.
     */
   def parseWarc(archive: Array[Byte]): Seq[WarcRecord] =

@@ -2,17 +2,17 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** WAT-style metadata sink + reader — the third leg of the Common Crawl
+/** WAT-style metadata records — the third leg of the Common Crawl
   * archive triple the engine already speaks (WARC ingest, WET publish):
   * WAT files carry one WARC `metadata` record per page whose payload is
   * a JSON document of extracted metadata (title, meta tags, outlinks).
   * Downstream graph and provenance pipelines consume WAT instead of
-  * re-parsing page bytes; publishing it from the extraction pass means
-  * the HTML is tokenized ONCE for text + metadata + links together.
+  * re-parsing page bytes. This object serializes one record and reads
+  * WAT archives; it writes no archive.
   *
-  * Record grammar written (mirrors [[WetSink]]'s conversion records):
+  * Record grammar (mirrors [[WetSink]]'s conversion records):
   * {{{
   * WARC/1.0\r\n
   * WARC-Type: metadata\r\n
@@ -24,12 +24,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
   * <json bytes>\r\n\r\n
   * }}}
   *
-  * Scale shape: identical to WetSink — [[WetSink.writeArchives]] does the
-  * one-file-per-task, temp-file + atomic-move, per-record-gzip-member
-  * publishing; readWat streams through the shared [[ArchiveScan]] and
-  * record walk ([[WarcReader.records]]). The
-  * JSON body is caller-built (to_json over kernel outputs), so the sink
-  * stays a pure serialization boundary.
+  * `readWat` streams through the shared [[ArchiveScan]] and record walk
+  * ([[WarcReader.records]]). The JSON body is caller-built (to_json over
+  * kernel outputs), so the record writer stays a pure serialization
+  * boundary.
   */
 object WatSink {
 
@@ -38,16 +36,7 @@ object WatSink {
     WarcReader.writeRecord("metadata", url, ts, Seq("Content-Type" -> "application/json"),
       (if (json == null) "" else json).getBytes(StandardCharsets.UTF_8))
 
-  /** Write `df` (url, warc_ts, wat) as WAT archives under `outDir`, one
-    * `part-NNNNN.warc.wat[.gz]` per input partition.
-    */
-  def writeWat(df: DataFrame, outDir: String, gzip: Boolean = true): Unit =
-    WetSink.writeArchives(df.select(F.col("url"), F.col("warc_ts"), F.col("wat")),
-      outDir, if (gzip) ".warc.wat.gz" else ".warc.wat", gzip) { r =>
-      writeRecord(r.getString(0), r.getTimestamp(1), r.getString(2))
-    }
-
-  /** Read WAT archives back to (url, warc_ts, wat). Archives are listed
+  /** Read WAT archives as (url, warc_ts, wat). Archives are listed
     * once on the Spark driver and packed by bytes into at most
     * `defaultParallelism` tasks, as in `WarcReader.readWarcs`.
     */

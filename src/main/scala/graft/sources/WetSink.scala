@@ -55,11 +55,10 @@ object WetSink {
       writeRecord(r.getString(0), r.getTimestamp(1), r.getString(2))
     }
 
-  /** Shared task-side archive writer: one file per partition, temp-file +
-    * atomic-move, gzip as concatenated per-record members. The record
-    * serializer is the only thing WET and WAT publishing differ in.
+  /** Task-side archive writer: one file per partition, temp-file +
+    * atomic-move, gzip as concatenated per-record members.
     */
-  private[sources] def writeArchives(
+  private def writeArchives(
       df: DataFrame, outDir: String, ext: String, gzip: Boolean)(
       rec: org.apache.spark.sql.Row => Array[Byte]): Unit = {
     Files.createDirectories(Paths.get(outDir))
@@ -103,7 +102,7 @@ object WetSink {
   }
 
   /** Parse one WET archive, any layout: conversion records only, payload
-    * decoded as UTF-8. An unreadable gzip layer throws.
+    * decoded as UTF-8. An unreadable archive throws.
     */
   def parseWet(archive: Array[Byte]): Seq[(String, Timestamp, String)] =
     WarcReader.texts(new java.io.ByteArrayInputStream(archive), "conversion").toVector

@@ -56,11 +56,13 @@ class WarcSpec extends AnyFunSuite {
     // truncated mid-payload: parser returns what it completed, no throw
     val truncated = WarcReader.parseWarc((info ++ good).dropRight(good.length / 2))
     assert(truncated.isEmpty)
-    // hostile Content-Length must not wrap: records with absurd lengths stop the scan
+    // hostile Content-Length must not wrap: a record with an absurd length
+    // gives one error row and no page
     val hostile = ("WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: https://w/h\r\n" +
       "WARC-Date: 2026-01-01T00:00:00Z\r\nContent-Length: 9223372036854775806\r\n\r\nx")
       .getBytes(StandardCharsets.ISO_8859_1)
-    assert(WarcReader.parseWarc(hostile).isEmpty)
+    val refused = WarcReader.parseWarc(hostile)
+    assert(refused.length == 1 && refused.head.url == "" && refused.head.error.contains("malformed WARC record"))
   }
 
   test("encoding header lists and aliases: x-gzip decodes, unsupported tokens tag the record") {

@@ -8,7 +8,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.{functions => F}
 import org.scalacheck.{Gen, Prop, Test => SCTest}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.{forAll, forAllNoShrink}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The streamed record walk, `WarcReader.records`: every archive layout,
@@ -35,6 +35,8 @@ class WarcWalkSpec extends AnyFunSuite {
 
   private def walk(bytes: Array[Byte], payloads: Boolean = true): List[WarcReader.Record] =
     WarcReader.records(new ByteArrayInputStream(bytes), payloads).toList
+
+  private def throws(f: => Any): Boolean = try { f; false } catch { case _: java.io.IOException => true }
 
   test("1,030 records of 1 MiB in a 1.3 MB per-record-gzip archive read as 1,030 clean rows") {
     val body = ("<p>" + "a" * ((1 << 20) - 3)).getBytes("UTF-8")
@@ -98,18 +100,20 @@ class WarcWalkSpec extends AnyFunSuite {
       1 -> Gen.oneOf("", "\r\n\r\n", "WARC/1.0\r\n\r\n", "HTTP/1.1 200 OK\r\n\r\n").map(_.getBytes("ISO-8859-1"))))
   } yield bodies.zipWithIndex.map { case (b, i) => Rec(s"https://walk.example.org/$i", ts(i), b) }
 
-  private def genBuilt(recs: Seq[Rec]): Gen[Built] = {
-    val plain = WarcReader.writeWarc(recs.map(r => (r.url, r.ts, r.body)))
+  private def writeOne(r: Rec): Array[Byte] = WarcReader.writeWarc(Seq((r.url, r.ts, r.body)))
+
+  /** Every layout of `recs`, each record serialized by `one`. */
+  private def genBuilt(recs: Seq[Rec], one: Rec => Array[Byte] = writeOne): Gen[Built] = {
+    val plain = recs.map(one).foldLeft(Array.emptyByteArray)(_ ++ _)
     val flags = Gen.listOfN(4, Gen.prob(0.3))
     def gz(parts: Seq[Array[Byte]]): Gen[Seq[Array[Byte]]] =
       Gen.sequence[Seq[Array[Byte]], Array[Byte]](parts.map(p => flags.map(f =>
         withFlags(Codecs.gzip(p), f(0), f(1), f(2), f(3)))))
-    def oneRecord(r: Rec) = WarcReader.writeWarc(Seq((r.url, r.ts, r.body)))
     Gen.oneOf(
       Gen.const(Built(plain, Nil, "plain")),
       gz(Seq(plain)).map(Built(plain, _, "whole-archive gzip")),
-      gz(recs.map(oneRecord)).map(Built(plain, _, "per-record gzip")),
-      Gen.choose(1, 4).flatMap(k => gz(recs.grouped(k).map(g => g.map(oneRecord).reduce(_ ++ _)).toSeq))
+      gz(recs.map(one)).map(Built(plain, _, "per-record gzip")),
+      Gen.choose(1, 4).flatMap(k => gz(recs.grouped(k).map(g => g.map(one).reduce(_ ++ _)).toSeq))
         .map(Built(plain, _, "records grouped in members")),
       Gen.listOfN(3, Gen.choose(0, plain.length)).flatMap { cuts =>
         val at = (0 +: cuts.sorted :+ plain.length).distinct
@@ -189,7 +193,6 @@ class WarcWalkSpec extends AnyFunSuite {
       val got = walked.map(r => (r.url, r.date)).toSeq
       val prefix = got == recs.take(got.length).map(r => (r.url, r.ts))
       val parsed = WarcReader.parseWarc(bytes)
-      def throws(f: => Any): Boolean = try { f; false } catch { case _: java.io.IOException => true }
       val gzipMagic = bytes.length >= 2 && (bytes(0) & 0xFF) == 0x1F && (bytes(1) & 0xFF) == 0x8B
       val why = if (gzipMagic) "gunzip failed" else "neither gzip magic nor a WARC record"
       Prop(threw == hurt) :| s"${built.layout}: threw $threw" &&
@@ -203,6 +206,39 @@ class WarcWalkSpec extends AnyFunSuite {
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(400), prop)
     assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
     assert(hurtCases > 100, s"only $hurtCases damaged archives")
+  }
+
+  test("a malformed Content-Length: the records before it, then one error row; index, WET and WAT throw") {
+    val damaged: Gen[(Seq[Rec], Int, Built)] = for {
+      recs <- genRecs.suchThat(_.nonEmpty)
+      k <- Gen.choose(0, recs.length - 1)
+      built <- genBuilt(recs, r => {
+        val bytes = writeOne(r)
+        if (r.url != recs(k).url) bytes
+        else new String(bytes, "ISO-8859-1").replaceFirst("Content-Length: ", "Content-Length: x")
+          .getBytes("ISO-8859-1")
+      })
+    } yield (recs, k, built)
+    val layouts = scala.collection.mutable.Set.empty[String]
+    // no shrinking: a shrunk record list no longer matches the archive built from it
+    val prop = forAllNoShrink(damaged) { case (recs, k, built) =>
+      layouts += built.layout
+      val walked = scala.collection.mutable.ArrayBuffer.empty[WarcReader.Record]
+      val threw =
+        try { WarcReader.records(new ByteArrayInputStream(built.bytes)).foreach(walked += _); false }
+        catch { case _: WarcReader.UnreadableArchive => true }
+      val parsed = WarcReader.parseWarc(built.bytes)
+      Prop(threw && walked.map(r => (r.url, r.date)) == recs.take(k).map(r => (r.url, r.ts))) :|
+        s"${built.layout}: threw $threw after ${walked.length} records, want $k" &&
+        Prop(asPages(parsed.take(k)) == pages(recs.take(k)) && parsed.length == k + 1 &&
+          parsed.last.error.contains("malformed WARC record")) :|
+        s"${built.layout}: parseWarc ${parsed.length} rows, last ${parsed.lastOption.map(_.error)}" &&
+        Prop(throws(walk(built.bytes, payloads = false))) :| "index walk" &&
+        Prop(throws(WetSink.parseWet(built.bytes)) && throws(WatSink.parseWat(built.bytes))) :| "WET and WAT"
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(400), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+    assert(layouts.size == 5, layouts)
   }
 
   test("index coordinates of every layout round-trip through readSplit and fetch") {
