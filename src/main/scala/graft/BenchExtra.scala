@@ -28,7 +28,8 @@ import java.util.concurrent.atomic.AtomicLong
   *                               [[JobCensus]]: one QUERY_JOBS line (time,
   *                               jobs, stages, tasks, shuffle bytes, spill,
   *                               GC), then each job with its wall time and
-  *                               description — the fixed-overhead census
+  *                               description (the query's name, set around
+  *                               it) — the fixed-overhead census
   *                               behind multi-second timings on KB tables.
   *   kernels                     the extraction kernels alone, no Spark:
   *                               20,000 CorpusGen pages pulled off one
@@ -120,10 +121,13 @@ object BenchExtra {
         }
       case "jobs" =>
         for (name <- args) {
-          SparkEntry.queries(name)(s, sfDir).count() // warm (JIT + codegen)
+          // every job, AQE's included, is described by its query's name
+          JobCensus.described(s, name)(SparkEntry.queries(name)(s, sfDir).count()) // warm (JIT + codegen)
           s.sharedState.cacheManager.clearCache()
           var t = 0.0
-          val c = JobCensus.of(s) { t = timeIt(SparkEntry.queries(name)(s, sfDir).count()) }
+          val c = JobCensus.of(s) {
+            t = JobCensus.described(s, name)(timeIt(SparkEntry.queries(name)(s, sfDir).count()))
+          }
           s.sharedState.cacheManager.clearCache()
           println(f"QUERY_JOBS $name $t%.3f jobs=${c.jobs} stages=${c.stages} tasks=${c.tasks} " +
             s"shuffle_bytes=${c.shuffleBytes} spill_bytes=${c.spillBytes} gc_ms=${c.gcMs}")

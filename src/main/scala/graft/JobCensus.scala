@@ -27,6 +27,20 @@ object JobCensus {
   final case class Counts(jobs: Int, stages: Int, tasks: Int, shuffleBytes: Long, writers: Int,
       spillBytes: Long, gcMs: Long, perJob: Seq[Job])
 
+  /** Runs `body` with `spark.job.description` set to `description`, so
+    * every job it submits carries it: AQE submits its query-stage and
+    * broadcast jobs from its own threads, which copy the caller's local
+    * properties. The caller's description is restored after.
+    */
+  private val JobDescription = "spark.job.description"
+
+  def described[T](spark: SparkSession, description: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val before = sc.getLocalProperty(JobDescription)
+    sc.setJobDescription(description)
+    try body finally sc.setLocalProperty(JobDescription, before)
+  }
+
   def of(spark: SparkSession)(body: => Unit): Counts = {
     val sc = spark.sparkContext
     val drain = "census-drain"
@@ -38,7 +52,7 @@ object JobCensus {
     def counted(props: java.util.Properties) =
       props == null || props.getProperty("spark.jobGroup.id") != drain
     def described(e: SparkListenerJobStart) = Option(e.properties)
-      .flatMap(p => Option(p.getProperty("spark.job.description")).orElse(Option(p.getProperty("callSite.short"))))
+      .flatMap(p => Option(p.getProperty(JobDescription)).orElse(Option(p.getProperty("callSite.short"))))
       .orElse(e.stageInfos.maxByOption(_.stageId).map(_.name))
       .getOrElse("?")
     val l = new SparkListener {

@@ -72,10 +72,20 @@ object PdfExtractor {
   private val xobjRe: Regex = """/XObject\s*<<([^>]*)>>""".r
   private val imageSubtypeRe: Regex = """/Subtype\s*/Image""".r
 
+  /** Content bytes interpreted per document: every page's content streams,
+    * plus a form's stream each time a page draws it. Past it the document
+    * fails with [[ContentOverBudgetError]]. A count, not a timer, so rows
+    * stay reproducible.
+    */
+  final val MaxContentBytes: Int = 16 << 20
+  final val ContentOverBudgetError = s"content streams over ${MaxContentBytes >> 20} MiB budget"
+  private final class ContentOverBudget extends RuntimeException(ContentOverBudgetError, null, false, false)
+
   def extract(bytes: Array[Byte]): Either[String, Result] =
     try extractUnsafe(bytes)
     catch {
       case _: Codecs.OverCapException => Left(Codecs.OverCapError)
+      case _: ContentOverBudget       => Left(ContentOverBudgetError)
       case e: Exception               => Left(s"pdf parse error: ${e.getClass.getSimpleName}")
     }
 
@@ -204,6 +214,13 @@ object PdfExtractor {
     val objs = scala.collection.mutable.HashMap.empty[Int, (String, Option[(Int, Int)])]
     private val decoded = scala.collection.mutable.HashMap.empty[Int, Option[Array[Byte]]]
     private var budget = Codecs.MaxInflatedBytes.toLong // every stream inflated counts
+    private var contentLeft = MaxContentBytes.toLong
+
+    /** Spends `n` bytes of the document's content budget. */
+    def interpret(n: Long): Unit = {
+      contentLeft -= n
+      if (contentLeft < 0) throw new ContentOverBudget
+    }
     private val bodySpans = scala.collection.mutable.HashMap.empty[Int, (Int, Int, Int)] // bodyStart, streamKw(-1), endObj
 
     // pass 1: spans, skipping matches that fall inside a previous object's
@@ -691,13 +708,15 @@ object PdfExtractor {
       val pageDict = doc.dict(pn).getOrElse(return Left(s"missing page object $pn"))
       val contentNums = refsOf(pageDict, "Contents")
       if (contentNums.isEmpty) return Left(s"page $pn: no /Contents")
-      val content = contentNums.map { cn =>
+      val streams = contentNums.map { cn =>
         doc.stream(cn).getOrElse(return Left(s"page $pn: missing content stream"))
-      }.map(new String(_, StandardCharsets.ISO_8859_1)).mkString("\n")
+      }
+      doc.interpret(streams.map(_.length.toLong).sum + streams.length - 1)
+      val content = streams.map(new String(_, StandardCharsets.ISO_8859_1)).mkString("\n")
       val res = buildRes(doc, subDict(doc, pageDict, "Resources").orElse(inheritedRes),
         fontCache, Set.empty, 0)
       val runs = new ArrayBuffer[Run](64)
-      execContent(content, res, Id, runs, 0)
+      execContent(doc, content, res, Id, runs, 0)
       val hasImages = xobjRe.findFirstMatchIn(pageDict).exists { m =>
         refRe.findAllMatchIn(m.group(1)).exists { rm =>
           doc.dict(rm.group(1).toInt).exists(o => imageSubtypeRe.findFirstIn(o).isDefined)
@@ -733,7 +752,7 @@ object PdfExtractor {
 
   private val MaxFormDepth = 8
 
-  private def execContent(cs: String, res: Res, baseCtm: Mat, runs: ArrayBuffer[Run], depth: Int): Unit = {
+  private def execContent(doc: Doc, cs: String, res: Res, baseCtm: Mat, runs: ArrayBuffer[Run], depth: Int): Unit = {
     if (depth > MaxFormDepth) return
     val stack = new ArrayBuffer[Operand](8)
     var ctm = baseCtm
@@ -803,7 +822,8 @@ object PdfExtractor {
         case "Do" =>
           stack.lastOption.collect { case Name(x) => x }.foreach { x =>
             res.forms.get(x).foreach { case (formCs, formRes, mtx) =>
-              execContent(formCs, formRes, mtx * ctm, runs, depth + 1)
+              if (depth < MaxFormDepth) doc.interpret(formCs.length)
+              execContent(doc, formCs, formRes, mtx * ctm, runs, depth + 1)
             }
           }
         case _ => () // graphics ops ignored
@@ -995,7 +1015,9 @@ object PdfExtractor {
     var j = 0
     while (j < sorted.length) {
       val y0 = sorted(j).y
-      var k = j
+      // a run always joins its own line, even at a NaN y (a matrix entry
+      // that overflowed to infinity), so the walk always moves on
+      var k = j + 1
       while (k < sorted.length && math.abs(sorted(k).y - y0) <= yTol) k += 1
       val lineRuns = sorted.slice(j, k).sortBy(_.x)
       val sb = new StringBuilder

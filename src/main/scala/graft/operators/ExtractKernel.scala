@@ -20,7 +20,9 @@ object ExtractKernel {
   /** Per-row extraction — pure, total (never throws). Inflated bytes per
     * page are bounded by one envelope cap plus one kernel cap, each
     * [[Codecs.MaxInflatedBytes]]; past either the row carries
-    * [[Codecs.OverCapError]]. PDF content-stream work is not yet bounded.
+    * [[Codecs.OverCapError]]. PDF content-stream work is bounded per
+    * document by [[PdfExtractor.MaxContentBytes]]; past it the row carries
+    * [[PdfExtractor.ContentOverBudgetError]].
     */
   def extractOne(p: Page): Extracted = extractOneIn(PageIn(p.url, p.warc_ts, p.html, p.lang))
 

@@ -1,14 +1,24 @@
 package graft.sources
 
 import graft.Extracted
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Observation, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.hadoop.{ParquetOutputFormat, ParquetWriter}
+import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.io.LocalOutputFile
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.BasicWriteTaskStatsTracker
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetWriteSupport}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.collection.mutable
-import scala.concurrent.Await
-import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
 /** Iceberg-semantics-over-Parquet table (SURVEY.md §7.0): no Iceberg runtime
@@ -39,27 +49,28 @@ import scala.jdk.CollectionConverters._
   *
   * Commit protocol (all O(this commit), never O(table)):
   *   stage → move → publish.
-  *   The batch is written to a private `_staging-<seq>` directory, and the
-  *   same write job observes the lineage stats and content fingerprint
-  *   (no read of the staged files, none of prior commits); the staging
-  *   directory is renamed to `data/commit_seq=<seq>` (one directory rename,
-  *   no data copy); finally the manifest is published by atomic rename. A
-  *   leftover unpublished `commit_seq=<seq>` directory from a crashed
-  *   writer is deleted before the rename — it was never visible, so this
-  *   is safe. A commit whose staged write, lineage wait or null-`p_day`
-  *   check throws deletes its own staging directory before rethrowing.
+  *   The batch runs as ONE Spark job (`runJob` over its plan) whose tasks
+  *   write their own parquet files into a private `_staging-<seq>`
+  *   directory, one file per non-empty task, named
+  *   `part-<partition>-<task attempt id>.parquet`, and return the file's
+  *   name with the lineage stats and content fingerprint of its rows (no
+  *   read of the staged files, none of prior commits). The driver then
+  *   moves exactly the files the results name into `data/commit_seq=<seq>`
+  *   and deletes staging; finally the manifest is published by atomic
+  *   rename. A leftover unpublished `commit_seq=<seq>` directory from a
+  *   crashed writer is deleted before the move — it was never visible, so
+  *   this is safe. A commit whose staged write or null-`p_day` check throws
+  *   deletes its own staging directory before rethrowing.
   *
-  * The staged write goes through [[graft.ForkFreeLocalFileSystem]]
-  * ([[graft.Fs.ForkFreeWriteOptions]]): without native libhadoop, Hadoop's
-  * local filesystem starts a `chmod` process for every file, `.crc`
-  * sidecar and directory it creates — 178 per commit on the benchmark's
-  * `extractAll` input, which made the staged write slower than the
-  * extraction kernel. The same nine permission bits are now set with one
-  * syscall each; the files, sidecars and modes on disk are unchanged.
-  *
-  * The staged write also turns parquet's dictionary encoding off for `text`
-  * and `url` ([[StagedWriteOptions]]). Nearly every value of those columns
-  * is distinct, so parquet spent CPU on a dictionary for each column chunk
+  * The tasks write with parquet-mr's `ParquetWriter` on a local file and
+  * Spark's own `ParquetWriteSupport`, so a commit file has the footer, row
+  * metadata, timestamp type and codec a `DataFrameWriter.parquet` in the
+  * same session would give it; no Hadoop filesystem, committer,
+  * `_temporary` directory, `.crc` sidecar or `_SUCCESS` marker is
+  * involved, and each task deserializes a few parquet and SQL keys rather
+  * than the session's whole Hadoop conf. Parquet's dictionary encoding is
+  * off for `text` and `url`: nearly every value of those columns is
+  * distinct, so parquet spent CPU on a dictionary for each column chunk
   * only to drop it and fall back to plain encoding. The low-cardinality
   * columns (`format`, `status`, `charset`, `error`) keep their
   * dictionaries.
@@ -72,12 +83,10 @@ object ManifestTable {
   final case class PartitionStat(p_day: String, rows: Long, bytes: Long, failures: Long)
 
   /** Wall-clock decomposition of the LAST commit on this JVM: `stage` is
-    * the distributed parquet write (scales with executors; it also folds
-    * the lineage and content fingerprint, and sets file and directory
-    * modes in-process, never through a `chmod` child), `stats` the wait
-    * for that write's observed lineage row to reach the driver (no Spark job,
-    * sub-millisecond), `move`
-    * the O(1) directory rename, `publish` the O(1) manifest write+rename.
+    * the distributed parquet write (scales with executors; its tasks also
+    * fold the lineage and content fingerprint), `stats` the merge of the
+    * tasks' lineage on the driver (no Spark job, sub-millisecond), `move`
+    * one rename per task file, `publish` the O(1) manifest write+rename.
     * Bench-facing observability — separates raw data-write cost from the
     * driver-serialized commit protocol so real-cluster projections are
     * defensible (the protocol tail is metadata-only and independent of
@@ -103,14 +112,14 @@ object ManifestTable {
 
   /** Append a batch of extraction output as one committed snapshot.
     *
-    * Exactly ONE action runs the upstream pipeline: the staged write, which
-    * also observes the lineage stats and content fingerprint, so kernel
-    * work is never recomputed, the staged files are never read back, and
-    * commit cost is independent of table history. Counts stay exact under
-    * task retries: observed metrics live in the write's result stage,
-    * where Spark applies one update per output partition and drops failed
-    * or commit-denied attempts, and only the committed attempt's rows land.
-    * [[verifyIntegrity]] re-derives them from the committed files.
+    * Exactly ONE job runs the upstream pipeline: the staged write, whose
+    * tasks also return the lineage stats and content fingerprint of the
+    * rows they wrote, so kernel work is never recomputed, the staged files
+    * are never read back, and commit cost is independent of table history.
+    * Counts stay exact under task retries: `runJob` keeps one result per
+    * partition, from the attempt that finished it, and only the file that
+    * result names is published. [[verifyIntegrity]] re-derives them from
+    * the committed files.
     */
   def commitAppend(spark: SparkSession, root: String, batch: Dataset[Extracted]): Long =
     commitInternal(spark, root, batch, streamBatchId = None)
@@ -285,47 +294,21 @@ object ManifestTable {
     val staging = Paths.get(root, s"_staging-$seq")
     graft.Fs.deleteRecursively(staging) // leftover from a crashed writer: never visible
     val t0 = System.nanoTime()
-    val (t1, stats, hw, contentFp) =
+    val (t1, stats, hw, contentFp, files) =
       try {
-        // lineage rides the staged write (exact under retries, see
-        // [[commitAppend]]): folded per write task, merged on the driver
-        val lineage = Observation()
-        batch
-          .withColumn("p_day", date_format(col("warc_ts"), "yyyy-MM-dd"))
-          .observe(lineage,
-            DayLineage.column(col("p_day"), col("n_bytes_in"),
-              when(col("status") =!= "ok", 1L).otherwise(0L)).as("days"),
-            max(unix_timestamp(col("warc_ts"))).as("hw"),
-            bit_xor(RowFp).as("fp"))
-          .sortWithinPartitions("warc_ts")
-          .write
-          .options(StagedWriteOptions)
-          .mode(SaveMode.Overwrite)
-          .parquet(staging.toString)
+        Files.createDirectories(staging)
+        val tasks = writeStaged(spark, batch, staging)
         val t1 = System.nanoTime()
-
-        // the observed row reaches the driver through the listener bus after
-        // the write returns; bounded wait, and a missing row publishes nothing
-        val observed =
-          try Await.result(lineage.future, LineageTimeout)
-          catch {
-            case e: java.util.concurrent.TimeoutException =>
-              throw new IllegalStateException(
-                s"commit $seq on $root: the staged write's lineage did not arrive " +
-                  s"within $LineageTimeout; nothing published", e)
-          }
-        val days = observed.getAs[scala.collection.Seq[Row]]("days")
-          .map(r => PartitionStat(r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+        val days = tasks.flatMap(_.days).groupMapReduce(_.p_day)(identity)((a, b) =>
+          PartitionStat(a.p_day, a.rows + b.rows, a.bytes + b.bytes, a.failures + b.failures))
         // a null warc_ts has no p_day: such a batch has never been committable
-        require(days.forall(_.p_day != null),
+        require(!days.contains(null),
           s"commit $seq on $root: rows with null warc_ts have no p_day; nothing published")
-        // an empty batch observes no days and null hw/fp: a 0-row snapshot
-        def orZero(field: String): Long =
-          Option(observed.getAs[java.lang.Long](field)).fold(0L)(_.longValue)
-        // "fp" is the commit-level content fingerprint: the same
-        // order-independent xor [[verifyIntegrity]] recomputes from the data
-        // alone (bit-rot audit)
-        (t1, days.sortBy(_.p_day).toSeq, orZero("hw"), orZero("fp"))
+        // an empty batch has no days and hw/fp of 0: a 0-row snapshot. "fp"
+        // is the commit-level content fingerprint: the same order-independent
+        // xor [[verifyIntegrity]] recomputes from the data alone (bit-rot audit)
+        (t1, days.values.toSeq.sortBy(_.p_day), tasks.flatMap(_.hw).maxOption.getOrElse(0L),
+          tasks.foldLeft(0L)(_ ^ _.fp), tasks.flatMap(_.file))
       } catch {
         case e: Throwable =>
           // nothing is moved or published yet, so the staged files are garbage
@@ -335,11 +318,13 @@ object ManifestTable {
       }
     val t2 = System.nanoTime()
 
-    // move staged data into place: one directory rename, no copy
+    // move exactly the files the task results name: a failed or losing
+    // attempt's file stays in staging, which is deleted with it
     val target = commitDir(root, seq)
-    Files.createDirectories(target.getParent)
     graft.Fs.deleteRecursively(target) // crashed unpublished attempt, see scaladoc
-    Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)
+    Files.createDirectories(target)
+    files.foreach(f => Files.move(staging.resolve(f), target.resolve(f), StandardCopyOption.ATOMIC_MOVE))
+    graft.Fs.deleteRecursively(staging)
     val t3 = System.nanoTime()
 
     // publish: manifest rename is the commit point
@@ -360,6 +345,143 @@ object ManifestTable {
     seq
   }
 
+  /** What one write task returns: the name of the file it wrote under the
+    * staging directory (None when its partition was empty), and the lineage
+    * of the rows in that file.
+    */
+  private final case class TaskFile(file: Option[String], days: Seq[PartitionStat],
+      hw: Option[Long], fp: Long)
+
+  /** Runs the batch as ONE job whose tasks each write their partition to
+    * `staging/part-<partition>-<task attempt id>.parquet` and return its
+    * [[TaskFile]]. The rows carry `p_day` (stored) and two trailing columns
+    * the file leaves out, the row fingerprint and the epoch-second
+    * `warc_ts`. `runJob` returns one result per partition, from the attempt
+    * that finished it, so the lineage counts every row once under retries.
+    */
+  private def writeStaged(spark: SparkSession, batch: Dataset[Extracted], staging: Path): Array[TaskFile] = {
+    val rows = batch
+      .withColumn("p_day", date_format(col("warc_ts"), "yyyy-MM-dd"))
+      .withColumn("__fp", RowFp)
+      .withColumn("__ts", unix_timestamp(col("warc_ts")))
+      .sortWithinPartitions("warc_ts")
+    val stored = StructType(rows.schema.fields.dropRight(2))
+    val layout = RowLayout(stored, stored.fieldIndex("status"), stored.fieldIndex("n_bytes_in"))
+    val conf = new SerializableConfiguration(writeConf(spark, stored))
+    val dir = staging.toString
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    SQLExecution.withSQLConfPropagated(session) {
+      spark.sparkContext.runJob(rows.queryExecution.toRdd,
+        (ctx: TaskContext, it: Iterator[InternalRow]) => writeTask(ctx, it, dir, conf.value, layout))
+    }
+  }
+
+  /** The stored columns of a staged row and where its lineage inputs sit;
+    * `p_day` is the last stored column, the fingerprint and epoch seconds
+    * follow it.
+    */
+  private final case class RowLayout(stored: StructType, status: Int, bytesIn: Int) {
+    def pDay: Int = stored.length - 1
+    def fp: Int = stored.length
+    def ts: Int = stored.length + 1
+  }
+
+  /** Parquet settings of a commit file: the session's `parquet.*` Hadoop
+    * keys, the SQL keys Spark's [[ParquetWriteSupport]] reads (the same row
+    * metadata and timestamp type as a `DataFrameWriter.parquet`), and the
+    * session codec. A handful of keys, so each task deserializes almost
+    * nothing.
+    */
+  private def writeConf(spark: SparkSession, stored: StructType): Configuration = {
+    val sql = spark.sessionState.conf
+    val session = spark.sessionState.newHadoopConf()
+    val conf = new Configuration(false)
+    session.iterator().asScala.map(_.getKey).filter(_.startsWith("parquet."))
+      .foreach(k => conf.set(k, session.get(k)))
+    ParquetWriteSupport.setSchema(stored, conf)
+    conf.set(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key, sql.writeLegacyParquetFormat.toString)
+    conf.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key, sql.parquetOutputTimestampType.toString)
+    conf.set(SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED.key, sql.parquetFieldIdWriteEnabled.toString)
+    conf.set(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key, sql.legacyParquetNanosAsLong.toString)
+    conf.set(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.key, sql.parquetAnnotateVariantLogicalType.toString)
+    conf.set(ParquetOutputFormat.COMPRESSION,
+      new ParquetOptions(Map.empty[String, String], sql).compressionCodecClassName)
+    conf
+  }
+
+  /** A parquet-mr writer of Spark rows on a local file, with Spark's own
+    * write support.
+    */
+  private final class CommitFile(path: Path)
+      extends ParquetWriter.Builder[InternalRow, CommitFile](new LocalOutputFile(path)) {
+    override protected def self(): CommitFile = this
+    override protected def getWriteSupport(conf: Configuration): WriteSupport[InternalRow] =
+      new ParquetWriteSupport
+  }
+
+  private val Ok = UTF8String.fromString("ok")
+
+  /** One write task: writes the stored columns of its rows to its own file,
+    * opened at the first row, and folds their lineage. A task that throws
+    * deletes its file; the commit moves only files that a result names.
+    * The task's output metrics count the file's rows and bytes.
+    */
+  private def writeTask(ctx: TaskContext, rows: Iterator[InternalRow], dir: String,
+      conf: Configuration, at: RowLayout): TaskFile = {
+    if (!rows.hasNext) return TaskFile(None, Nil, None, 0L)
+    val name = f"part-${ctx.partitionId}%05d-${ctx.taskAttemptId}.parquet"
+    val path = Paths.get(dir, name)
+    val file = path.toString
+    val days = mutable.HashMap.empty[String, Array[Long]] // rows, bytes, failures
+    var day: UTF8String = null
+    var cur: Array[Long] = null
+    var hw = Long.MinValue
+    var fp = 0L
+    val stats = new BasicWriteTaskStatsTracker(conf, None)
+    val out = ProjectingInternalRow(at.stored, 0 until at.stored.length)
+    val writer = new CommitFile(path).withConf(conf)
+      .withCompressionCodec(CompressionCodecName.valueOf(conf.get(ParquetOutputFormat.COMPRESSION)))
+      .withRowGroupSize(ParquetOutputFormat.getLongBlockSize(conf))
+      .withPageSize(ParquetOutputFormat.getPageSize(conf))
+      .withDictionaryPageSize(ParquetOutputFormat.getDictionaryPageSize(conf))
+      .withDictionaryEncoding(ParquetOutputFormat.getEnableDictionary(conf))
+      // nearly every text and url is distinct: a dictionary is built only to
+      // be dropped
+      .withDictionaryEncoding("text", false)
+      .withDictionaryEncoding("url", false)
+      .build()
+    stats.newFile(file)
+    try {
+      while (rows.hasNext) {
+        val r = rows.next()
+        out.project(r)
+        writer.write(out)
+        stats.newRow(file, out)
+        // rows come sorted by warc_ts, so the day changes rarely
+        val d = if (r.isNullAt(at.pDay)) null else r.getUTF8String(at.pDay)
+        if (cur == null || d != day) {
+          day = if (d == null) null else d.clone()
+          cur = days.getOrElseUpdate(if (d == null) null else d.toString, new Array[Long](3))
+        }
+        cur(0) += 1
+        if (!r.isNullAt(at.bytesIn)) cur(1) += r.getLong(at.bytesIn)
+        if (!r.isNullAt(at.status) && r.getUTF8String(at.status) != Ok) cur(2) += 1
+        fp ^= r.getLong(at.fp)
+        if (!r.isNullAt(at.ts)) hw = math.max(hw, r.getLong(at.ts))
+      }
+      writer.close()
+    } catch {
+      case e: Throwable =>
+        try { writer.close(); Files.deleteIfExists(path) }
+        catch { case s: Throwable => e.addSuppressed(s) }
+        throw e
+    }
+    stats.closeFile(file)
+    stats.getFinalStats(0L)
+    TaskFile(Some(name), days.iterator.map { case (d, a) => PartitionStat(d, a(0), a(1), a(2)) }.toSeq,
+      if (hw == Long.MinValue) None else Some(hw), fp)
+  }
+
   /** Fixed data schema — supplied explicitly so a table whose committed
     * snapshots are all empty (0-row no-op commits) still reads as an empty
     * DataFrame instead of failing schema inference. It leaves out the
@@ -369,13 +491,14 @@ object ManifestTable {
 
   /** The rows of the commits `seqs` in `schema`, with the hidden
     * `commit_seq` directory column still attached. Every table read goes
-    * through here.
+    * through here. `commit_seq` is part of the given schema so that commits
+    * holding no file at all (empty batches) still read with it.
     */
   private def scan(spark: SparkSession, root: String, seqs: Seq[Long],
       schema: StructType = dataSchema): DataFrame =
     spark.read
       .option("basePath", dataPath(root))
-      .schema(schema)
+      .schema(schema.add("commit_seq", LongType))
       .parquet(seqs.map(q => commitDir(root, q).toString): _*)
 
   /** The live commit seqs; a root without a committed snapshot fails. */
@@ -680,47 +803,6 @@ $parts
     xxhash64(col("url"), unix_timestamp(col("warc_ts")), orSentinel("text"),
       col("format"), orSentinel("charset"), col("status"), orSentinel("error"),
       col("n_blocks"), col("n_bytes_in"))
-  }
-
-  /** Options of the staged write: no `chmod` process per file (see the
-    * object's scaladoc), and no parquet dictionary for the two columns whose
-    * values are nearly all distinct.
-    */
-  private val StagedWriteOptions: Map[String, String] = graft.Fs.ForkFreeWriteOptions ++ Map(
-    "parquet.enable.dictionary#text" -> "false",
-    "parquet.enable.dictionary#url" -> "false")
-
-  /** Bound on the wait for a commit's observed lineage: the row is posted
-    * through the listener bus right after the write, so a miss means it
-    * was never produced, and the commit fails instead of hanging.
-    */
-  private val LineageTimeout: FiniteDuration = 2.minutes
-
-  private type Days = mutable.HashMap[String, Array[Long]]
-
-  /** Per-`p_day` (rows, bytes, failures) of one commit, folded inside the
-    * staged write: one map per write task, merged on the driver. A null
-    * p_day stays a key of its own so the commit can reject it.
-    */
-  private object DayLineage extends Aggregator[(String, Long, Long), Days, Seq[PartitionStat]] {
-    private def add(b: Days, day: String, rows: Long, bytes: Long, failures: Long): Days = {
-      val a = b.getOrElseUpdate(day, new Array[Long](3))
-      a(0) += rows; a(1) += bytes; a(2) += failures
-      b
-    }
-    def zero: Days = mutable.HashMap.empty
-    def reduce(b: Days, in: (String, Long, Long)): Days = add(b, in._1, 1L, in._2, in._3)
-    def merge(x: Days, y: Days): Days =
-      y.foldLeft(x) { case (acc, (day, v)) => add(acc, day, v(0), v(1), v(2)) }
-    def finish(b: Days): Seq[PartitionStat] =
-      b.iterator.map { case (day, a) => PartitionStat(day, a(0), a(1), a(2)) }.toSeq
-    // vals: a def would rebuild the encoders by reflection on every call
-    private val buffer: Encoder[Days] = Encoders.javaSerialization
-    private val output: Encoder[Seq[PartitionStat]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[PartitionStat]]()
-    def bufferEncoder: Encoder[Days] = buffer
-    def outputEncoder: Encoder[Seq[PartitionStat]] = output
-    val column = udaf(this, Encoders.tuple(Encoders.STRING, Encoders.scalaLong, Encoders.scalaLong))
   }
 
   final case class IntegrityReport(

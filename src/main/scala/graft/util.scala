@@ -27,7 +27,7 @@ object Fs {
     }
 
   /** True when the directory contains at least one regular `.parquet` file
-    * (a partitioned write of an EMPTY dataset leaves only _SUCCESS).
+    * (a commit of an empty batch is an empty directory).
     */
   def hasParquetFiles(p: Path): Boolean =
     Files.exists(p) && Using.resource(Files.walk(p)) { w =>

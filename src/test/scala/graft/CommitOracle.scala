@@ -16,8 +16,7 @@ object CommitOracle {
 
   def lineage(spark: SparkSession, root: String, seq: Long): Lineage = {
     val dir = Paths.get(ManifestTable.dataPath(root), s"commit_seq=$seq")
-    // an empty commit holds no file, or one schema-only file when its
-    // first write task had no rows: either way no lineage
+    // an empty commit holds no file, so no lineage
     if (!Fs.hasParquetFiles(dir)) Lineage(Nil, 0L, 0L)
     else {
       val agg = spark.read

@@ -38,6 +38,16 @@ class JobCensusSpec extends AnyFunSuite {
       assert(n <= bound, s"$name ran $n jobs, bound $bound")
     }
 
+  test("every job of an AQE query carries the query's description") {
+    // s_hybrid_rrf's shuffle and broadcast stages run as jobs that AQE
+    // submits from its own threads
+    val c = JobCensus.of(spark)(JobCensus.described(spark, "s_hybrid_rrf")(
+      SparkEntry.queries("s_hybrid_rrf")(spark, "/root/testdata/sf0.001").count()))
+    assert(c.perJob.size > 3, c.perJob)
+    val other = c.perJob.filterNot(_.description == "s_hybrid_rrf")
+    assert(other.isEmpty, s"${other.size} of ${c.perJob.size} jobs not described: ${other.take(3)}")
+  }
+
   test("engine-core entry points stay within their Spark job bounds on 400 pages") {
     import spark.implicits._
     val root = Files.createTempDirectory("graft-census").toString

@@ -3,7 +3,7 @@ package graft
 import graft.functions.TextAssembly
 import graft.operators.{ExtractJob, ExtractKernel}
 import graft.sources.{Corpus, ManifestTable}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -280,9 +280,27 @@ class SparkE2ESpec extends AnyFunSuite {
   test("committed files: no dictionary for text and url, dictionaries for the low-cardinality columns") {
     import org.apache.hadoop.fs.{Path => HPath}
     import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.metadata.{CompressionCodecName, ParquetMetadata}
     import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.LogicalTypeAnnotation
+    import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
     import spark.implicits._
     val root = tmpRoot("encodings")
+    def filesOf(seq: Long): List[java.nio.file.Path] =
+      Using.resource(Files.list(java.nio.file.Paths.get(ManifestTable.dataPath(root), s"commit_seq=$seq"))) { s =>
+        s.iterator().asScala.toList
+      }
+    def footer(f: java.nio.file.Path): ParquetMetadata = Using.resource(ParquetFileReader.open(
+      HadoopInputFile.fromPath(new HPath(f.toUri), spark.sparkContext.hadoopConfiguration)))(_.getFooter)
+    def warcTs(ft: ParquetMetadata) = {
+      val schema = ft.getFileMetaData.getSchema
+      schema.getType(schema.getFieldIndex("warc_ts")).asPrimitiveType
+    }
+    def withConf[T](kv: (String, String)*)(body: => T): T = {
+      kv.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body finally kv.foreach { case (k, _) => spark.conf.unset(k) }
+    }
     try {
       val first = JobCensus.of(spark)(CommitOracle.check(spark, root,
         ExtractJob.extractAll(Corpus.generate(spark, 200L, 4), root, 4)))
@@ -293,28 +311,61 @@ class SparkE2ESpec extends AnyFunSuite {
         Extracted(s"u/${i % 4}", day, "txt", TextAssembly.NoText, "utf-8", "ok", null, 1, 1L))
       val second = JobCensus.of(spark)(CommitOracle.check(spark, root,
         ManifestTable.commitAppend(spark, root, repeats.toDS().repartition(1))))
-      val files = Using.resource(Files.walk(java.nio.file.Paths.get(ManifestTable.dataPath(root)))) { s =>
-        s.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).toList
+      // the timestamp type and the codec follow the session
+      val micros = withConf("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
+        "spark.sql.parquet.compression.codec" -> "gzip") {
+        CommitOracle.check(spark, root, ManifestTable.commitAppend(spark, root, repeats.toDS().repartition(1)))
+        ManifestTable.snapshots(root).last
       }
+      val files = filesOf(0) ++ filesOf(1)
       // one file per write task that wrote rows, whatever days it holds
       assert((first.writers, second.writers) == ((4, 1)))
       assert(files.size == first.writers + second.writers, s"files: $files")
-      val conf = spark.sparkContext.hadoopConfiguration
-      val footers = files.map { f =>
-        f -> Using.resource(ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(f.toUri), conf)))(_.getFooter)
-      }
-      footers.foreach { case (f, footer) =>
-        val dict: Map[String, Boolean] = footer.getBlocks.asScala.toSeq
+      assert(files.forall(_.getFileName.toString.endsWith(".parquet")), s"files: $files")
+      // no checksum sidecar, success marker or committer directory anywhere
+      val entries = Using.resource(Files.walk(java.nio.file.Paths.get(root)))(_.iterator().asScala
+        .map(_.getFileName.toString).toList)
+      assert(!entries.exists(n => n.endsWith(".crc") || n == "_SUCCESS" || n.startsWith("_temporary")), entries)
+      val stored = Encoders.product[Extracted].schema.add("p_day", "string")
+      val footers = files.map(f => f -> footer(f))
+      footers.foreach { case (f, ft) =>
+        val blocks = ft.getBlocks.asScala.toSeq
+        val dict: Map[String, Boolean] = blocks
           .flatMap(_.getColumns.asScala.map(c => c.getPath.toDotString -> c.hasDictionaryPage))
           .groupMapReduce(_._1)(_._2)(_ || _)
         Seq("text", "url").foreach(c => assert(dict.get(c).contains(false), s"$c in $f: $dict"))
         // parquet itself drops a dictionary no smaller than the plain
         // values, which happens in files of one to three rows; every file
         // here holds a whole task's rows
-        assert(footer.getBlocks.asScala.map(_.getRowCount).sum >= 10, s"rows in $f")
+        assert(blocks.map(_.getRowCount).sum >= 10, s"rows in $f")
         Seq("format", "status", "charset").foreach(c => assert(dict.get(c).contains(true), s"$c in $f: $dict"))
+        // Spark's row metadata: the stored columns, p_day included
+        val meta = ft.getFileMetaData.getKeyValueMetaData.asScala
+        assert(meta.get("org.apache.spark.sql.parquet.row.metadata")
+          .map(org.apache.spark.sql.types.DataType.fromJson).contains(stored), s"$f: $meta")
+        // session defaults: INT96 timestamps, snappy
+        assert(warcTs(ft).getPrimitiveTypeName == PrimitiveTypeName.INT96, s"$f")
+        assert(blocks.flatMap(_.getColumns.asScala).forall(_.getCodec == CompressionCodecName.SNAPPY), s"$f")
+        // p_day carries row-group statistics, which a day read prunes by
+        blocks.foreach { b =>
+          val st = b.getColumns.asScala.find(_.getPath.toDotString == "p_day").get.getStatistics
+          assert(st.hasNonNullValue && st.minAsString.nonEmpty && st.maxAsString.nonEmpty, s"$f: $st")
+        }
       }
       assert(footers.exists(_._2.getBlocks.asScala.map(_.getRowCount).sum == 40L))
+      filesOf(micros).map(footer).foreach { ft =>
+        val ts = warcTs(ft)
+        assert(ts.getPrimitiveTypeName == PrimitiveTypeName.INT64, ts)
+        assert(ts.getLogicalTypeAnnotation == LogicalTypeAnnotation.timestampType(true, TimeUnit.MICROS), ts)
+        assert(ft.getBlocks.asScala.flatMap(_.getColumns.asScala).forall(_.getCodec == CompressionCodecName.GZIP))
+      }
+      // a plain parquet read, schema inferred from the footers, reads every
+      // commit: the data columns and the stored p_day
+      Seq(0L -> 200L, 1L -> 40L, micros -> 40L).foreach { case (q, rows) =>
+        val plain = spark.read.parquet(s"${ManifestTable.dataPath(root)}/commit_seq=$q")
+        assert(plain.schema.fieldNames.toSeq == stored.fieldNames.toSeq, plain.schema)
+        assert(plain.count() == rows, s"commit $q")
+      }
     } finally Fs.deleteRecursively(java.nio.file.Paths.get(root))
   }
 
